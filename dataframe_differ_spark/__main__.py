@@ -42,17 +42,10 @@ def main(argv: list[str] | None = None) -> int:
         print(f"warning: left side has duplicate keys (e.g. {tuple(dup[0])[:-1]});"
               " diff output will fan out", file=sys.stderr)
 
-    print(
-        diff_core.report(
-            left, right, keys, atol=args.atol, rtol=args.rtol,
-            sample_n=args.sample,
-        )
-    )
+    kw = dict(atol=args.atol, rtol=args.rtol, align_types=args.align_types)
+    print(diff_core.report(left, right, keys, sample_n=args.sample, **kw))
     if args.out:
-        d = diff_core.diff(
-            left, right, keys, atol=args.atol, rtol=args.rtol,
-            align_types=args.align_types,
-        )
+        d = diff_core.diff(left, right, keys, **kw)
         d.write.mode("overwrite").parquet(args.out)
         print(f"\nrow-level diff written to {args.out}")
     return 0

@@ -22,6 +22,8 @@ aggregations. Nothing collects row-level data to the driver.
 from __future__ import annotations
 
 from collections.abc import Sequence
+from functools import reduce
+from operator import and_, or_
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -29,14 +31,6 @@ from pyspark.sql import types as T
 
 STATUS_COL = "diff_status"
 INSERT, DELETE, CHANGE, NOCHANGE = "I", "D", "C", "N"
-
-
-def _compared_columns(
-    left: DataFrame, right: DataFrame, keys: Sequence[str]
-) -> list[str]:
-    """Non-key columns present on BOTH sides, in left's column order."""
-    rcols = set(right.columns)
-    return [c for c in left.columns if c not in set(keys) and c in rcols]
 
 
 def _neq(lc: Column, rc: Column, atol: float = 0.0, rtol: float = 0.0,
@@ -52,6 +46,65 @@ def _neq(lc: Column, rc: Column, atol: float = 0.0, rtol: float = 0.0,
         eq = both_null | (lc.isNotNull() & rc.isNotNull() & within)
         return ~eq
     return ~lc.eqNullSafe(rc)
+
+
+def _join(
+    left: DataFrame,
+    right: DataFrame,
+    keys: Sequence[str],
+    columns: Sequence[str] | None = None,
+    align_types: bool = False,
+    column_mapping: dict[str, str] | None = None,
+    how: str = "full_outer",
+) -> tuple[DataFrame, list[str], dict[str, T.DataType]]:
+    """Validate, rename/align the right side, and join null-safely on keys.
+
+    Compared columns default to the non-key columns on BOTH sides, in
+    left's column order. Sides are aliased ``l``/``r`` with presence
+    markers ``__p_l``/``__p_r``. Returns (joined, compared columns, left
+    column types).
+    """
+    keys = list(keys)
+    if not keys:
+        raise ValueError("diff() requires at least one key column; "
+                         "use diff_unkeyed() for keyless multiset diffs")
+    if column_mapping:
+        missing = [r for r in column_mapping.values() if r not in right.columns]
+        if missing:
+            raise ValueError(
+                f"column_mapping right-side column(s) {missing} not in right "
+                f"DataFrame (columns: {right.columns})"
+            )
+        right = right.withColumnsRenamed(
+            {rname: lname for lname, rname in column_mapping.items()}
+        )
+    cols = list(columns) if columns is not None else [
+        c for c in left.columns if c not in keys and c in right.columns
+    ]
+    for side, df in (("left", left), ("right", right)):
+        for what, names in (("key", keys), ("compared", cols)):
+            missing = [c for c in names if c not in df.columns]
+            if missing:
+                raise ValueError(
+                    f"{what} column(s) {missing} not in {side} DataFrame "
+                    f"(columns: {df.columns})"
+                )
+    types = {f.name: f.dataType for f in left.schema.fields}
+    if align_types:
+        rtypes = {f.name: f.dataType for f in right.schema.fields}
+        right = right.withColumns(
+            {c: F.col(c).cast(types[c]) for c in cols if rtypes[c] != types[c]}
+        )
+
+    # Presence markers survive the outer join even when key columns are null
+    # (eqNullSafe matches null==null keys, so key-nullness is not a valid
+    # side-presence test).
+    l = left.withColumn("__p_l", F.lit(True)).alias("l")
+    r = right.withColumn("__p_r", F.lit(True)).alias("r")
+    # eqNullSafe keeps semantics correct when key columns contain nulls;
+    # Catalyst still plans a hash-partitioned SMJ/SHJ on the keys.
+    cond = reduce(and_, (F.col(f"l.{k}").eqNullSafe(F.col(f"r.{k}")) for k in keys))
+    return l.join(r, on=cond, how=how), cols, types
 
 
 def diff(
@@ -84,64 +137,16 @@ def diff(
     before the per-column values (same expressions as the status, so the
     extra column costs nothing at scale).
     """
-    keys = list(keys)
-    if not keys:
-        raise ValueError("diff() requires at least one key column; "
-                         "use diff_unkeyed() for keyless multiset diffs")
-    if column_mapping:
-        missing = [r for r in column_mapping.values() if r not in right.columns]
-        if missing:
-            raise ValueError(
-                f"column_mapping right-side column(s) {missing} not in right "
-                f"DataFrame (columns: {right.columns})"
-            )
-        right = right.withColumnsRenamed(
-            {rname: lname for lname, rname in column_mapping.items()}
-        )
-    for side, df in (("left", left), ("right", right)):
-        missing = [k for k in keys if k not in df.columns]
-        if missing:
-            raise ValueError(
-                f"key column(s) {missing} not in {side} DataFrame "
-                f"(columns: {df.columns})"
-            )
-    cols = list(columns) if columns is not None else _compared_columns(left, right, keys)
-    if columns is not None:
-        for side, df in (("left", left), ("right", right)):
-            missing = [c for c in cols if c not in df.columns]
-            if missing:
-                raise ValueError(
-                    f"compared column(s) {missing} not in {side} DataFrame"
-                )
-    schema = {f.name: f.dataType for f in left.schema.fields}
-    if align_types:
-        rtypes = {f.name: f.dataType for f in right.schema.fields}
-        for c in cols:
-            if c in rtypes and rtypes[c] != schema[c]:
-                right = right.withColumn(c, F.col(c).cast(schema[c]))
-
-    # Presence markers survive the outer join even when key columns are null
-    # (eqNullSafe matches null==null keys, so key-nullness is not a valid
-    # side-presence test).
-    l = left.withColumn("__p_l", F.lit(True)).alias("l")
-    r = right.withColumn("__p_r", F.lit(True)).alias("r")
-    # eqNullSafe keeps semantics correct when key columns contain nulls;
-    # Catalyst still plans a hash-partitioned SMJ/SHJ on the keys.
-    cond = None
-    for k in keys:
-        c = F.col(f"l.{k}").eqNullSafe(F.col(f"r.{k}"))
-        cond = c if cond is None else (cond & c)
-    joined = l.join(r, on=cond, how="full_outer")
-
+    joined, cols, types = _join(
+        left, right, keys, columns, align_types, column_mapping
+    )
     l_present = F.col("l.__p_l").isNotNull()
     r_present = F.col("r.__p_r").isNotNull()
-
-    any_change = F.lit(False)
-    for c in cols:
-        any_change = any_change | _neq(
-            F.col(f"l.{c}"), F.col(f"r.{c}"), atol, rtol, schema.get(c)
-        )
-
+    neq = {
+        c: _neq(F.col(f"l.{c}"), F.col(f"r.{c}"), atol, rtol, types[c])
+        for c in cols
+    }
+    any_change = reduce(or_, neq.values(), F.lit(False))
     status = (
         F.when(~l_present, F.lit(INSERT))
         .when(~r_present, F.lit(DELETE))
@@ -155,13 +160,7 @@ def diff(
         out.append(F.col(f"l.{c}").alias(f"{c}_left"))
         out.append(F.col(f"r.{c}").alias(f"{c}_right"))
     if with_change_cols:
-        name_or_null = [
-            F.when(
-                _neq(F.col(f"l.{c}"), F.col(f"r.{c}"), atol, rtol, schema.get(c)),
-                F.lit(c),
-            )
-            for c in cols
-        ]
+        name_or_null = [F.when(neq[c], F.lit(c)) for c in cols]
         changed = F.when(
             status == CHANGE,
             F.array_join(F.array_compact(F.array(*name_or_null)), ","),
@@ -246,23 +245,27 @@ def column_mismatch_stats(
     """Per-column mismatch stats among matched keys (SURVEY.md §2.A5).
 
     For every compared column: number of matched rows where values are
-    equal, differ, or exactly one side is null. Implemented as one
-    conditional aggregation over the diff (no per-column jobs), unpivoted
-    via ``stack`` so the result is long-form: (column_name, n_equal,
-    n_different, n_null_mismatch).
+    equal, differ, or exactly one side is null. ``kw`` are :func:`diff`'s
+    keywords; ``columns``, ``align_types`` and ``column_mapping`` pick and
+    align the columns as there, while ``atol``/``rtol`` only change row
+    status, so the counts stay exact and null-safe. Plan: one inner
+    null-safe join on ``keys`` (the matched keys) and one conditional
+    aggregation (no per-column jobs), unpivoted via ``stack`` so the
+    result is long-form: (column_name, n_equal, n_different,
+    n_null_mismatch).
     """
-    keys = list(keys)
-    cols = _compared_columns(left, right, keys)
-    d = diff(left, right, keys, **kw).filter(F.col(STATUS_COL).isin(CHANGE, NOCHANGE))
+    for status_only in ("atol", "rtol", "with_change_cols"):
+        kw.pop(status_only, None)
+    joined, cols, _ = _join(left, right, keys, how="inner", **kw)
     aggs = []
     for c in cols:
-        lc, rc = F.col(f"{c}_left"), F.col(f"{c}_right")
+        lc, rc = F.col(f"l.{c}"), F.col(f"r.{c}")
         aggs.append(F.sum(lc.eqNullSafe(rc).cast("long")).alias(f"eq_{c}"))
         aggs.append(F.sum((~lc.eqNullSafe(rc)).cast("long")).alias(f"ne_{c}"))
         aggs.append(
             F.sum((lc.isNull() != rc.isNull()).cast("long")).alias(f"nm_{c}")
         )
-    wide = d.agg(*aggs)
+    wide = joined.agg(*aggs)
     stack_args = ", ".join(
         f"'{c}', eq_{c}, ne_{c}, nm_{c}" for c in cols
     )
@@ -298,25 +301,28 @@ def report(
     right: DataFrame,
     keys: Sequence[str],
     *,
-    atol: float = 0.0,
-    rtol: float = 0.0,
     sample_n: int = 5,
+    **kw,
 ) -> str:
     """Human-readable diff report (the reference family's `report()` UX).
 
-    Aggregates only — the row-level diff stays distributed; what crosses to
-    the driver is a handful of summary rows plus `sample_n` changed keys.
+    ``kw`` are :func:`diff`'s keywords, passed to every summary below, so
+    the report counts rows exactly as ``diff(left, right, keys, **kw)``
+    does. Aggregates only — the row-level diff stays distributed; what
+    crosses to the driver is a handful of summary rows plus `sample_n`
+    changed keys.
     """
     keys = list(keys)
     sd = schema_diff(left, right).collect()
     summary = {
         r[STATUS_COL]: r["cnt"]
-        for r in diff_summary(left, right, keys, atol=atol, rtol=rtol).collect()
+        for r in diff_summary(left, right, keys, **kw).collect()
     }
-    mismatches = column_mismatch_stats(left, right, keys, atol=atol, rtol=rtol)
+    mismatches = column_mismatch_stats(left, right, keys, **kw)
     mm_rows = mismatches.filter(F.col("n_different") > 0).collect()
-    sample = changed_sample(left, right, keys, n=sample_n, atol=atol, rtol=rtol)
+    sample = changed_sample(left, right, keys, n=sample_n, **kw)
     sample_keys = [tuple(r[k] for k in keys) for r in sample.collect()]
+    atol, rtol = kw.get("atol", 0.0), kw.get("rtol", 0.0)
 
     lines = ["DataFrame diff report", "=" * 21, ""]
     lines.append(f"Key columns: {', '.join(keys)}")

@@ -197,10 +197,10 @@ def q_diff_vector_col(spark, sf_dir):
     """Keyed diff over an array<float> vector column (embeddings table).
 
     Validating an embedding-pipeline migration needs diff over vectors:
-    status comes from native array equality (one codegen'd comparison per
-    row — Spark arrays are comparable, no UDF), and changed rows get
-    n_changed_dims counted relationally (posexplode both sides, equi-join
-    on (vec_id, dim), filter, count). The relational count avoids nested
+    status comes from ``diff()`` on ``vec_id``, i.e. native array equality
+    (one codegen'd comparison per row — Spark arrays are comparable, no
+    UDF), and changed rows get n_changed_dims counted relationally
+    (posexplode both sides, equi-join on (vec_id, dim), filter, count). The relational count avoids nested
     HOF lambdas over join outputs (Spark 4 analyzer pitfall — BASELINE.md)
     and keeps every step whole-stage-codegen. Two shuffles total, both on
     vec_id-derived keys. The +0.5 perturbation is one IEEE double add —
@@ -222,18 +222,7 @@ def q_diff_vector_col(spark, sf_dir):
             l.filter(vk % 29 == 0).withColumn("vec_id", vk + F.lit(1000000))
         )
     )
-    lt = l.alias("l")
-    rt = r.alias("r")
-    base = lt.join(
-        rt, F.col("l.vec_id") == F.col("r.vec_id"), "full_outer"
-    ).select(
-        F.when(F.col("l.vec_id").isNull(), "I")
-        .when(F.col("r.vec_id").isNull(), "D")
-        .when(~F.col("l.e").eqNullSafe(F.col("r.e")), "C")
-        .otherwise("N")
-        .alias("diff_status"),
-        F.coalesce(F.col("l.vec_id"), F.col("r.vec_id")).alias("vec_id"),
-    )
+    base = D.diff(l, r, ["vec_id"]).select("diff_status", "vec_id")
     lx = l.select("vec_id", F.posexplode("e").alias("dim", "lx"))
     rx = r.select("vec_id", F.posexplode("e").alias("dim", "rx"))
     changed = (

@@ -112,6 +112,42 @@ def test_column_mismatch_stats(pair):
     assert stats["v"]["n_different"] == 1
 
 
+def test_column_mismatch_stats_column_mapping(spark):
+    left = spark.createDataFrame(
+        [(1, "x", 1.0), (2, "y", 2.0)], "k int, a string, v double"
+    )
+    right = spark.createDataFrame(
+        [(1, "x", 1.0), (2, "z", 2.0)], "k int, b string, v double"
+    )
+    stats = {r["column_name"]: r for r in D.column_mismatch_stats(
+        left, right, ["k"], column_mapping={"a": "b"}).collect()}
+    assert set(stats) == {"a", "v"}
+    assert (stats["a"]["n_equal"], stats["a"]["n_different"]) == (1, 1)
+
+
+def test_column_mismatch_stats_columns_subset(pair):
+    left, right = pair
+    rows = D.column_mismatch_stats(left, right, ["k"], columns=["a"]).collect()
+    assert [(r["column_name"], r["n_equal"], r["n_different"]) for r in rows] == [
+        ("a", 3, 0)
+    ]
+
+
+def test_column_mismatch_stats_plans_inner_join(spark):
+    # Matched keys come from an inner join, not from filtering diff()'s
+    # status CASE: that filter made Catalyst planning grow steeply with the
+    # number of columns.
+    cols = [f"c{i}" for i in range(10)]
+    schema = "k int, " + ", ".join(f"{c} int" for c in cols)
+    left = spark.createDataFrame([(1, *range(10))], schema)
+    right = spark.createDataFrame([(1, *range(1, 11))], schema)
+    stats = D.column_mismatch_stats(left, right, ["k"], rtol=1e-6)
+    qe = stats.filter(F.col("n_different") > 0)._jdf.queryExecution()
+    optimized = qe.optimizedPlan().toString()
+    assert "Join Inner" in optimized
+    assert "CASE WHEN" not in optimized
+
+
 def test_report(pair):
     left, right = pair
     rep = D.report(left, right, ["k"], sample_n=3)
@@ -120,6 +156,16 @@ def test_report(pair):
     assert "only in right  1" in rep
     assert "v: 1 differ" in rep
     assert "Sample changed keys" in rep
+
+
+def test_report_counts_rows_like_aligned_diff(spark):
+    left = spark.createDataFrame([(1, 1)], "k int, v int")
+    right = spark.createDataFrame([(1, 1.5)], "k int, v double")
+    d = D.diff(left, right, ["k"], align_types=True)
+    assert [r["diff_status"] for r in d.collect()] == ["N"]
+    rep = D.report(left, right, ["k"], align_types=True)
+    assert "unchanged      1" in rep and "changed        0" in rep
+    assert "Columns with differences (among matched keys):\n  none" in rep
 
 
 def test_diff_validates_inputs(pair):
