@@ -21,9 +21,11 @@ pattern):
   bit-exactly. Production swaps ``portable=False`` for ``xxhash64`` —
   one expression, identical plan shape, ~3× faster hashing.
 
-The registered queries in ``queries/textops.py`` / ``queries/vectors.py``
-are thin fixture bindings over these functions; their DuckDB oracles (and
-the 287-golden corpus) pin the operators' semantics release over release.
+The registered queries in ``queries/textops.py``, ``queries/vectors.py``,
+``queries/scaleops.py`` and ``queries/pipelineops.py`` are thin fixture
+bindings over these functions — this module is the only MinHash-LSH and
+SimHash implementation; their DuckDB oracles (and the golden corpus) pin
+the operators' semantics release over release.
 """
 
 from __future__ import annotations
@@ -39,6 +41,7 @@ __all__ = [
     "shingles",
     "exact_dedup",
     "minhash_signatures",
+    "minhash_candidates",
     "minhash_dedup",
     "simhash_fingerprints",
     "simhash_dedup",
@@ -128,6 +131,82 @@ def _minhash_value(j: Column, s: Column, *, portable: bool) -> Column:
     return F.xxhash64(j, s)
 
 
+def _minhash_mins(
+    df: DataFrame, id_col: str, shingle_col: str, *, num_perm: int, portable: bool
+) -> DataFrame:
+    """Wide per-document mins ``(id_col, _dd_m0 … _dd_m{num_perm-1})``.
+
+    Round 11 (guide §2.3 "aggregate before you shuffle"): the ``num_perm``
+    permutation hashes are COLUMNS of one projection over the shingle rows,
+    min-aggregated in a single ``groupBy(id)`` — exploding every shingle
+    ``num_perm``× into (shingle, j) rows before the min paid the row
+    expansion through the hash aggregate for identical values.
+    """
+    tok = df.select(id_col, F.explode(shingle_col).alias("_dd_s"))
+    return tok.groupBy(id_col).agg(
+        *[
+            F.min(
+                _minhash_value(F.lit(j), F.col("_dd_s"), portable=portable)
+            ).alias(f"_dd_m{j}")
+            for j in range(num_perm)
+        ]
+    )
+
+
+def _stack_mins(mins: DataFrame, id_col: str, num_perm: int) -> DataFrame:
+    """Unpivot the wide mins to the long ``(id_col, j, s)`` contract — a
+    map-side projection, no shuffle."""
+    stack_args = ", ".join(f"{j}, _dd_m{j}" for j in range(num_perm))
+    return mins.selectExpr(id_col, f"stack({num_perm}, {stack_args}) AS (j, s)")
+
+
+def _band_keys(wide: DataFrame, id_col: str, bands: int) -> DataFrame:
+    """LSH band keys ``(id_col, band, bkey)`` from a wide signature row.
+
+    ``wide`` holds ``id_col`` plus the ``num_perm`` min columns in ``j``
+    order; band ``b``'s key is the ``'-'`` join of its ``num_perm // bands``
+    consecutive mins. A ``stack`` of ``concat_ws`` over columns of one row:
+    no shuffle and no ``collect_list`` fold. The same string as the
+    oracles' ``string_agg(CAST(s AS VARCHAR), '-' ORDER BY j)``.
+    """
+    mins = [c for c in wide.columns if c != id_col]
+    rows = len(mins) // bands
+    band_args = ", ".join(
+        f"{b}, concat_ws('-', "
+        + ", ".join(f"cast(`{c}` as string)" for c in mins[b * rows : (b + 1) * rows])
+        + ")"
+        for b in range(bands)
+    )
+    return wide.selectExpr(id_col, f"stack({bands}, {band_args}) AS (band, bkey)")
+
+
+def _signature_agreement(
+    cand: DataFrame,
+    out_a: str,
+    out_b: str,
+    sigs_a: DataFrame,
+    sigs_b: DataFrame,
+    id_col: str,
+) -> DataFrame:
+    """MinHash Jaccard estimate of candidate pairs: ``(out_a, out_b,
+    _dd_est)``, the UNROUNDED fraction of permutations ``j`` on which the
+    two long ``(id_col, j, s)`` signatures agree. Joins only the
+    ``num_perm``-row signature slices of candidates — no shingle re-read,
+    which is what makes a persisted signature store sufficient."""
+    sa = sigs_a.select(F.col(id_col).alias(out_a), "j", F.col("s").alias("_dd_sa"))
+    sb = sigs_b.select(F.col(id_col).alias(out_b), "j", F.col("s").alias("_dd_sb"))
+    return (
+        cand.join(sa, out_a)
+        .join(sb, [out_b, "j"])
+        .groupBy(out_a, out_b)
+        .agg(
+            F.avg(
+                F.when(F.col("_dd_sa") == F.col("_dd_sb"), F.lit(1.0)).otherwise(0.0)
+            ).alias("_dd_est")
+        )
+    )
+
+
 def minhash_signatures(
     df: DataFrame,
     id_col: str,
@@ -139,31 +218,51 @@ def minhash_signatures(
     """Long-format MinHash signatures: ``(id_col, j, s)``, one row per
     (document, permutation). At 100 TB this table IS the persisted
     near-dup index.
-
-    Round 11 (guide §2.3 "aggregate before you shuffle" / "shuffle fewer
-    bytes"): the ``num_perm`` permutation hashes are computed as COLUMNS
-    of one projection over the shingle rows and min-aggregated in a
-    single ``groupBy(id)`` — the previous form exploded every shingle
-    ``num_perm``× into (shingle, j) rows before the min, paying the
-    row-expansion through the hash aggregate for no informational gain
-    (the hash values are identical either way). The wide mins then
-    unpivot (``stack``) to the same long ``(id, j, s)`` contract — a
-    map-side projection, no extra shuffle. Values are bit-identical:
-    ``min`` over the same multiset per (id, j).
     """
-    tok = df.select(id_col, F.explode(shingle_col).alias("_dd_s"))
-    mins = tok.groupBy(id_col).agg(
-        *[
-            F.min(
-                _minhash_value(F.lit(j), F.col("_dd_s"), portable=portable)
-            ).alias(f"_dd_m{j}")
-            for j in range(num_perm)
-        ]
+    mins = _minhash_mins(df, id_col, shingle_col, num_perm=num_perm, portable=portable)
+    return _stack_mins(mins, id_col, num_perm)
+
+
+def minhash_candidates(
+    df: DataFrame,
+    id_col: str,
+    shingle_col: str,
+    *,
+    num_perm: int = 12,
+    bands: int = 6,
+    portable: bool = True,
+    out_a: str = "id_a",
+    out_b: str = "id_b",
+) -> tuple[DataFrame, DataFrame]:
+    """MinHash-LSH candidate generation → ``(sigs, cand)``.
+
+    ``sigs`` is :func:`minhash_signatures`' long ``(id_col, j, s)`` table;
+    ``cand`` holds the distinct ``(out_a, out_b)`` pairs, ``out_a <
+    out_b``, that share at least one of ``bands`` band keys of ``num_perm
+    // bands`` mins each (classic S-curve: P[candidate] = 1 - (1 -
+    j^r)^b). The wide per-document mins are lazily checkpointed once and
+    feed both frames, so the shingle+md5 pass (the chain's real cost)
+    never runs twice; the band keys come straight from that wide row, so
+    banding adds no shuffle and no ``collect_list`` fold.
+    """
+    if num_perm % bands != 0:
+        raise ValueError(f"num_perm={num_perm} not divisible by bands={bands}")
+    mins = _minhash_mins(
+        df, id_col, shingle_col, num_perm=num_perm, portable=portable
+    ).localCheckpoint(eager=False)
+    keys = _band_keys(mins, id_col, bands)
+    a, b = keys.alias("a"), keys.alias("b")
+    cand = (
+        a.join(
+            b,
+            (F.col("a.band") == F.col("b.band"))
+            & (F.col("a.bkey") == F.col("b.bkey"))
+            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
+        )
+        .select(F.col(f"a.{id_col}").alias(out_a), F.col(f"b.{id_col}").alias(out_b))
+        .distinct()
     )
-    stack_args = ", ".join(f"{j}, _dd_m{j}" for j in range(num_perm))
-    return mins.selectExpr(
-        id_col, f"stack({num_perm}, {stack_args}) AS (j, s)"
-    )
+    return _stack_mins(mins, id_col, num_perm), cand
 
 
 def minhash_dedup(
@@ -186,11 +285,10 @@ def minhash_dedup(
     Pipeline (all equi-joins on uniform keys — the 100 TB shape):
 
     1. ``shingle_n``-gram shingles per row (per-row HOF, no shuffle).
-    2. ``num_perm`` minhash values via explode → groupBy min.
-    3. ``bands`` bands of ``num_perm // bands`` rows; the band key is the
-       joined minhash string — rows sharing ANY band bucket are candidates
-       (classic S-curve: P[candidate] = 1 - (1 - j^r)^b).
-    4. Verification cascade: the signature-agreement estimate
+    2. :func:`minhash_candidates`: ``num_perm`` minhash values in one
+       ``groupBy(id)`` min, ``bands`` band keys from that wide row, and
+       the band self-join.
+    3. Verification cascade: the signature-agreement estimate
        (``est_threshold``) prunes weak candidates on the narrow signature
        table BEFORE any wide shingle array enters a join; survivors join
        shingle sets back for exact Jaccard ≥ ``threshold``.
@@ -200,12 +298,9 @@ def minhash_dedup(
     the signature build is the dominant cost and is the index you would
     persist. Fixture binding + full DuckDB oracle: ``dedup_near``.
     """
-    if num_perm % bands != 0:
-        raise ValueError(f"num_perm={num_perm} not divisible by bands={bands}")
     _check_reserved(df)
-    rows_per_band = num_perm // bands
 
-    # One shingle pass, lazily checkpointed: reused by the estimate join
+    # One shingle pass, lazily checkpointed: reused by the signature build
     # and the exact-verify join without rebuilding (and the lineage cut
     # sidesteps Catalyst's nested-lambda reuse bug — SURVEY §5.4).
     sh = (
@@ -213,41 +308,18 @@ def minhash_dedup(
         .filter(F.size("_dd_sh") > 0)
         .localCheckpoint(eager=False)
     )
-    sigs = minhash_signatures(
-        sh, "_dd_id", "_dd_sh", num_perm=num_perm, portable=portable
-    ).localCheckpoint(eager=False)
-    bands_df = sigs.groupBy(
-        "_dd_id", (F.col("j") / rows_per_band).cast("int").alias("band")
-    ).agg(
-        F.expr(
-            "concat_ws('-', transform(array_sort(collect_list(struct(j, s))), "
-            "x -> cast(x.s as string)))"
-        ).alias("bkey")
+    sigs, cand = minhash_candidates(
+        sh,
+        "_dd_id",
+        "_dd_sh",
+        num_perm=num_perm,
+        bands=bands,
+        portable=portable,
+        out_a=out_a,
+        out_b=out_b,
     )
-    a, b = bands_df.alias("a"), bands_df.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bkey") == F.col("b.bkey"))
-            & (F.col("a._dd_id") < F.col("b._dd_id")),
-        )
-        .select(F.col("a._dd_id").alias(out_a), F.col("b._dd_id").alias(out_b))
-        .dropDuplicates([out_a, out_b])
-    )
-    sa, sb = sigs.alias("sa"), sigs.alias("sb")
     est = (
-        cand.join(sa, F.col("sa._dd_id") == F.col(out_a))
-        .join(
-            sb,
-            (F.col("sb._dd_id") == F.col(out_b)) & (F.col("sb.j") == F.col("sa.j")),
-        )
-        .groupBy(out_a, out_b)
-        .agg(
-            F.avg(
-                F.when(F.col("sa.s") == F.col("sb.s"), F.lit(1.0)).otherwise(0.0)
-            ).alias("_dd_est")
-        )
+        _signature_agreement(cand, out_a, out_b, sigs, sigs, "_dd_id")
         .filter(F.col("_dd_est") >= est_threshold)
         .select(out_a, out_b)
     )

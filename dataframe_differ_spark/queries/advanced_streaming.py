@@ -245,7 +245,6 @@ def _run_stream_dedup_persisted(spark, sf_dir):
 
     corpus, batch = _imh_corpus_batch(spark, sf_dir)
     params = {"num_perm": _IMH_PERM, "bands": _IMH_BANDS, "shingle_n": 3}
-    rpb = _IMH_PERM // _IMH_BANDS
 
     # Day 0: persist the corpus store (run-scoped path: this stream
     # MUTATES its store, so it must never be shared across runs).
@@ -300,7 +299,7 @@ def _run_stream_dedup_persisted(spark, sf_dir):
             cur_store["df"] = art.df.localCheckpoint(eager=True)
         store_df = cur_store["df"]
         cands = (
-            _imh_probe(store_df, bsig, rpb)
+            _imh_probe(store_df, bsig, params["num_perm"], params["bands"])
             .withColumn(
                 "vs_corpus",
                 (F.col("corpus_id") % 10 < 8) & (F.col("corpus_id") < 300000),

@@ -17,6 +17,12 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from dataframe_differ_spark.operators.dedup import (
+    _band_keys,
+    _signature_agreement,
+    minhash_signatures,
+    shingles,
+)
 from dataframe_differ_spark.operators.numeric import split_cast_sql as _split_sql
 from dataframe_differ_spark.operators.pipeline import (
     decontaminate,
@@ -561,26 +567,12 @@ def q_pipeline_training_export(spark, sf_dir):
             ),
         )
     )
-    sh = (
-        docs.withColumn("toks", F.split("text", " "))
-        .withColumn("t2", F.expr("slice(toks, 2, size(toks))"))
-        .withColumn("t3", F.expr("slice(toks, 3, size(toks))"))
-        .withColumn(
-            "is_bench",
-            F.substring(F.md5(F.col("doc_id").cast("string")), 1, 1) == "f",
-        )
-        .select(
-            "doc_id",
-            "is_bench",
-            F.explode(
-                F.expr(
-                    "array_distinct(filter("
-                    "  zip_with(zip_with(toks, t2, (a, b) -> concat_ws(' ', a, b)),"
-                    "           t3, (ab, c) -> IF(c IS NULL, NULL, concat_ws(' ', ab, c))),"
-                    "  x -> x IS NOT NULL))"
-                )
-            ).alias("shingle"),
-        )
+    sh = docs.select(
+        "doc_id",
+        (F.substring(F.md5(F.col("doc_id").cast("string")), 1, 1) == "f").alias(
+            "is_bench"
+        ),
+        F.explode(shingles("text", 3)).alias("shingle"),
     )
     bench_shingles = (
         sh.filter(F.col("is_bench")).select("shingle").distinct()
@@ -1129,7 +1121,7 @@ def q_dedup_incremental_persisted(spark, sf_dir):
     bands = int(art.params["bands"])
     shingle_n = int(art.params["shingle_n"])
     bsig = _imh_sign(batch, shingle_n, num_perm)
-    return _imh_probe(art.df, bsig, num_perm // bands)
+    return _imh_probe(art.df, bsig, num_perm, bands)
 
 
 def _imh_corpus_batch(spark, sf_dir):
@@ -1158,11 +1150,6 @@ def _imh_corpus_batch(spark, sf_dir):
 def _imh_sign(df, shingle_n, num_perm):
     """Portable MinHash signatures (doc_id, j, s) of a (doc_id, text)
     frame — the signing half every store-loop query shares."""
-    from dataframe_differ_spark.operators.dedup import (
-        minhash_signatures,
-        shingles,
-    )
-
     sh = df.select(
         "doc_id", shingles("text", shingle_n).alias("_pp_sh")
     ).filter(F.size("_pp_sh") > 0)
@@ -1171,57 +1158,34 @@ def _imh_sign(df, shingle_n, num_perm):
     )
 
 
-def _imh_probe(store_df, bsig, rpb):
+def _imh_probe(store_df, bsig, num_perm, bands):
     """LSH-probe batch signatures against a signature store: band keys
     on both sides → candidate pairs → signature-agreement Jaccard
-    estimate. Needs ONLY the two signature tables (no text re-read) —
-    the property that makes the persisted index sufficient for day-N
-    probing."""
+    estimate. Needs ONLY the two long ``(doc_id, j, s)`` signature
+    tables (no text re-read) — the property that makes the persisted
+    index sufficient for day-N probing."""
 
     def band_keys(sigs, out_id):
-        return sigs.groupBy(
-            F.col("doc_id").alias(out_id),
-            (F.col("j") / rpb).cast("int").alias("band"),
-        ).agg(
-            F.expr(
-                "concat_ws('-', transform(array_sort(collect_list(struct(j, s))), "
-                "x -> cast(x.s as string)))"
-            ).alias("bkey")
+        # Long store → the wide per-doc row (order-free: one max per j),
+        # then the operator's band-key builder.
+        wide = sigs.groupBy(F.col("doc_id").alias(out_id)).agg(
+            *[
+                F.max(F.when(F.col("j") == k, F.col("s"))).alias(f"_pp_m{k}")
+                for k in range(num_perm)
+            ]
         )
+        return _band_keys(wide, out_id, bands)
 
-    cband = band_keys(store_df, "corpus_id")
-    bband = band_keys(bsig, "batch_id").withColumnRenamed("bkey", "_pp_bk")
     cand = (
-        bband.join(
-            cband,
-            (bband["band"] == cband["band"])
-            & (F.col("_pp_bk") == F.col("bkey")),
-        )
+        band_keys(bsig, "batch_id")
+        .join(band_keys(store_df, "corpus_id"), ["band", "bkey"])
         .select("batch_id", "corpus_id")
         .distinct()
     )
-    sb = bsig.select(
-        F.col("doc_id").alias("batch_id"), "j", F.col("s").alias("_pp_sb")
-    )
-    sc = store_df.select(
-        F.col("doc_id").alias("corpus_id"),
-        F.col("j").alias("_pp_jc"),
-        F.col("s").alias("_pp_sc"),
-    )
-    return (
-        cand.join(sb, "batch_id")
-        .join(sc, (F.col("_pp_jc") == F.col("j")) & (sc["corpus_id"] == cand["corpus_id"]))
-        .groupBy(cand["batch_id"], cand["corpus_id"])
-        .agg(
-            F.avg(
-                F.when(F.col("_pp_sb") == F.col("_pp_sc"), F.lit(1.0)).otherwise(
-                    0.0
-                )
-            ).alias("_pp_est")
-        )
-        .select(
-            "batch_id", "corpus_id", F.round("_pp_est", 6).alias("est_jaccard")
-        )
+    return _signature_agreement(
+        cand, "batch_id", "corpus_id", bsig, store_df, "doc_id"
+    ).select(
+        "batch_id", "corpus_id", F.round("_dd_est", 6).alias("est_jaccard")
     )
 
 
@@ -2530,7 +2494,7 @@ def q_dedup_store_compacted(spark, sf_dir):
         (F.col("doc_id") % 10 < 8) & (F.col("doc_id") < 300000)
     )
     return _imh_probe(
-        corpus_side, bsig, int(art.params["num_perm"]) // int(art.params["bands"])
+        corpus_side, bsig, int(art.params["num_perm"]), int(art.params["bands"])
     )
 
 

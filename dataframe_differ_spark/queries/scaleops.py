@@ -24,6 +24,12 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from dataframe_differ_spark.functions.vector import SQL_COS, cosine
+from dataframe_differ_spark.operators.dedup import (
+    _signature_agreement,
+    minhash_candidates,
+    shingles,
+    simhash_fingerprints,
+)
 from dataframe_differ_spark.operators.ranks import partitioned_topk, ranked
 from dataframe_differ_spark.queries import register
 from dataframe_differ_spark.tables import load_table
@@ -277,77 +283,14 @@ def _mh_parts(spark, sf_dir):
         )
     )
     corpus = docs.unionByName(planted)
-    sh = (
-        corpus.withColumn("toks", F.split("text", " "))
-        .withColumn("t2", F.expr("slice(toks, 2, size(toks))"))
-        .withColumn("t3", F.expr("slice(toks, 3, size(toks))"))
-        .select(
-            "doc_id",
-            F.expr(
-                "array_distinct(filter("
-                "  zip_with(zip_with(toks, t2, (a, b) -> concat_ws(' ', a, b)),"
-                "           t3, (ab, c) -> IF(c IS NULL, NULL, concat_ws(' ', ab, c))),"
-                "  x -> x IS NOT NULL))"
-            ).alias("shingles"),
-        )
-    )
-    tok = sh.select("doc_id", F.explode("shingles").alias("shingle"))
-    # Round 11 (guide §2.3): the 16 permutation hashes are columns of one
-    # projection min-aggregated in a single groupBy(doc_id), then stacked
-    # back to the long (doc_id, j, s) contract — the previous form
-    # exploded every shingle 16× into (shingle, j) rows before the min.
-    # Values are bit-identical: min over the same md5("j~shingle") ints.
-    def _h(j: int):
-        return (
-            F.conv(
-                F.substring(
-                    F.md5(F.concat(F.lit(f"{j}~"), F.col("shingle"))), 1, 12
-                ),
-                16,
-                10,
-            )
-            .cast("long")
-            .alias(f"m{j}")
-        )
-
-    # Consumed by both the long-format sigs and the band keys below; the
-    # lazy checkpoint keeps the shingle+md5 pass (the chain's real cost)
-    # from running once per consumer when session_cached materializes
-    # sigs and cand separately.
-    mins = tok.groupBy("doc_id").agg(
-        *[F.min(_h(j)).alias(f"m{j}") for j in range(_MH_K)]
-    ).localCheckpoint(eager=False)
-    stack_args = ", ".join(f"{j}, m{j}" for j in range(_MH_K))
-    sigs = mins.selectExpr(
-        "doc_id", f"stack({_MH_K}, {stack_args}) AS (j, s)"
-    )
-    # Bands straight from the wide mins row: bkey for band b is the '-'
-    # join of s_{4b}..s_{4b+3} in j order — exactly what the previous
-    # groupBy(doc_id, band) + array_sort(collect_list) produced, minus
-    # its whole extra shuffle (guide §2.4 "remove shuffles outright").
-    band_args = ", ".join(
-        f"{b}, concat_ws('-', "
-        + ", ".join(
-            f"cast(m{j} as string)"
-            for j in range(b * _MH_BAND_ROWS, (b + 1) * _MH_BAND_ROWS)
-        )
-        + ")"
-        for b in range(_MH_K // _MH_BAND_ROWS)
-    )
-    bands = mins.selectExpr(
+    sigs, cand = minhash_candidates(
+        corpus.select("doc_id", shingles("text", 3).alias("shingles")),
         "doc_id",
-        f"stack({_MH_K // _MH_BAND_ROWS}, {band_args}) AS (band, bkey)",
-    )
-    a, b = bands.alias("a"), bands.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bkey") == F.col("b.bkey"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .distinct()
+        "shingles",
+        num_perm=_MH_K,
+        bands=_MH_K // _MH_BAND_ROWS,
+        out_a="doc_a",
+        out_b="doc_b",
     )
     return corpus, sigs, cand
 
@@ -398,27 +341,16 @@ def q_dedup_minhash_exact(spark, sf_dir):
     near-dups (every 11th doc re-added with its first two tokens dropped,
     doc_id + 100000) so the banding provably fires.
 
-    Scale shape: signature build is explode + groupBy(doc, j) min — one
-    shuffle keyed by doc; candidates come from the (band, bkey) equi-join
-    — sub-linear, no all-pairs; estimate joins 16-row signature slices of
-    candidates only. At 100 TB the band tables are the materialized index.
+    Scale shape: `operators.dedup.minhash_candidates` (signature build is
+    one groupBy(doc) min over 16 hash columns — one shuffle keyed by doc;
+    candidates come from the (band, bkey) equi-join — sub-linear, no
+    all-pairs); the estimate joins 16-row signature slices of candidates
+    only. At 100 TB the band tables are the materialized index.
     """
-    corpus, sigs, cand = _mh_parts_cached(spark, sf_dir)
-    sa, sb = sigs.alias("sa"), sigs.alias("sb")
-    return (
-        cand.join(sa, F.col("sa.doc_id") == F.col("doc_a"))
-        .join(
-            sb,
-            (F.col("sb.doc_id") == F.col("doc_b")) & (F.col("sb.j") == F.col("sa.j")),
-        )
-        .groupBy("doc_a", "doc_b")
-        .agg(
-            F.avg(
-                F.when(F.col("sa.s") == F.col("sb.s"), F.lit(1.0)).otherwise(0.0)
-            ).alias("est_raw")
-        )
-        .select("doc_a", "doc_b", F.round("est_raw", 6).alias("est_jaccard"))
-    )
+    _corpus, sigs, cand = _mh_parts_cached(spark, sf_dir)
+    return _signature_agreement(
+        cand, "doc_a", "doc_b", sigs, sigs, "doc_id"
+    ).select("doc_a", "doc_b", F.round("_dd_est", 6).alias("est_jaccard"))
 
 
 # ---------------------------------------------------------------------------
@@ -1738,9 +1670,10 @@ def q_dedup_simhash_portable(spark, sf_dir):
     token votes -> small hamming distance; banding catches any pair with
     an identical 16-bit quarter.
 
-    Scale shape: one distinct-(doc, token) shuffle, a 64x bit explode
-    that partial-aggregates map-side (each (doc, b) cell sums locally),
-    a 4-row-per-doc band table, and an equi-join on (band, bkey) —
+    Scale shape: per-row distinct tokens, `operators.dedup.
+    simhash_fingerprints`' single groupBy(doc) of 64 vote sums (partial-
+    aggregated map-side), a 4-row-per-doc band table, and an equi-join
+    on (band, bkey) —
     sub-linear candidate generation, no all-pairs. At 100 TB the 8-byte
     signature column is the stored index; re-banding is free.
     """
@@ -1752,48 +1685,10 @@ def q_dedup_simhash_portable(spark, sf_dir):
         ).alias("text"),
     )
     corpus = docs.unionByName(planted)
-    tok = (
-        corpus.select("doc_id", F.explode(F.split("text", " ")).alias("token"))
-        .distinct()
-    )
-    # 64-bit token hash: the md5 prefix's two's-complement wrap assembled
-    # from two 32-bit halves — Java's shiftleft wraps exactly like the
-    # former DECIMAL(21,0) subtract-2^64 dance (verified bit-identical
-    # per shingle, round 11) with no Decimal128 math per token. The same
-    # integer DuckDB's ::UBIGINT::BIGINT yields, so (h >> b) & 1
-    # extracts identical bits in both engines.
-    th = tok.select(
+    sig = simhash_fingerprints(
+        corpus.select("doc_id", F.array_distinct(F.split("text", " ")).alias("toks")),
         "doc_id",
-        F.expr(
-            "shiftleft(CAST(conv(substring(md5(token), 1, 8), 16, 10) "
-            "AS BIGINT), 32) | "
-            "CAST(conv(substring(md5(token), 9, 8), 16, 10) AS BIGINT)"
-        ).alias("h"),
-    )
-    # Round 11 (guide §2.3): the 64 bit-votes are columns of ONE
-    # groupBy(doc_id) pass — the previous form exploded every token 64×
-    # into (doc, h, b) rows and aggregated twice. Votes and the assembled
-    # signature are value-identical (same per-(doc, b) sums; the lit
-    # values equal shiftleft(1, b) including the negative b=63).
-    votes = th.groupBy("doc_id").agg(
-        *[
-            F.sum(
-                F.when(F.expr(f"(h >> {i}) & 1") == 1, 1).otherwise(-1)
-            ).alias(f"v{i}")
-            for i in range(_SH_BITS)
-        ]
-    )
-    sig = votes.select(
-        "doc_id",
-        sum(
-            [
-                F.when(
-                    F.col(f"v{i}") > 0,
-                    F.lit(-(2**63) if i == 63 else 2**i).cast("long"),
-                ).otherwise(F.lit(0).cast("long"))
-                for i in range(_SH_BITS)
-            ]
-        ).alias("simhash"),
+        "toks",
     )
     banded = sig.select(
         "doc_id",
@@ -2255,20 +2150,8 @@ def q_eval_dedup_pr(spark, sf_dir):
     since it only scores candidate pairs the banding already emits.
     """
     corpus, _sigs, cand = _mh_parts_cached(spark, sf_dir)
-    sh = (
-        corpus.filter(F.col("doc_id") % 100000 < _PR_BLOCK)
-        .withColumn("toks", F.split("text", " "))
-        .withColumn("t2", F.expr("slice(toks, 2, size(toks))"))
-        .withColumn("t3", F.expr("slice(toks, 3, size(toks))"))
-        .select(
-            "doc_id",
-            F.expr(
-                "array_distinct(filter("
-                "  zip_with(zip_with(toks, t2, (a, b) -> concat_ws(' ', a, b)),"
-                "           t3, (ab, c) -> IF(c IS NULL, NULL, concat_ws(' ', ab, c))),"
-                "  x -> x IS NOT NULL))"
-            ).alias("shingles"),
-        )
+    sh = corpus.filter(F.col("doc_id") % 100000 < _PR_BLOCK).select(
+        "doc_id", shingles("text", 3).alias("shingles")
     )
     bt = sh.select("doc_id", F.explode("shingles").alias("shingle"))
     sz = sh.select("doc_id", F.size("shingles").cast("long").alias("n"))

@@ -299,26 +299,8 @@ def q_dedup_ngram(spark, sf_dir):
     full MinHash-LSH banding is `dedup_near`.
     """
     docs = load_table(spark, sf_dir, "documents")
-    # Shingles via zip_with over shifted slices — O(n) per doc. The naive
-    # transform(sequence(...), i -> toks[i]...) form re-evaluates split()
-    # per element access (O(n²) per doc, ~7× slower measured); zip_with
-    # walks the three arrays once. Tail positions (where the +2 slice ran
-    # out) surface as NULL and are filtered.
-    sh = (
-        docs.withColumn("toks", F.split("text", " "))
-        .withColumn("t2", F.expr("slice(toks, 2, size(toks))"))
-        .withColumn("t3", F.expr("slice(toks, 3, size(toks))"))
-        .select(
-            "doc_id",
-            "lang",
-            "source",
-            F.expr(
-                "array_distinct(filter("
-                "  zip_with(zip_with(toks, t2, (a, b) -> concat_ws(' ', a, b)),"
-                "           t3, (ab, c) -> IF(c IS NULL, NULL, concat_ws(' ', ab, c))),"
-                "  x -> x IS NOT NULL))"
-            ).alias("shingles"),
-        )
+    sh = docs.select(
+        "doc_id", "lang", "source", shingles("text", 3).alias("shingles")
     )
     tok = sh.select(
         "doc_id",

@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 from dataframe_differ_spark.operators.dedup import (
     connected_components,
     exact_dedup,
+    minhash_candidates,
     minhash_dedup,
     semantic_dedup,
     shingles,
@@ -103,6 +104,37 @@ def test_minhash_dedup_xxhash_variant_same_pairs(docs_df):
     }
     # exact-Jaccard verification makes the pair set hash-independent
     assert {(0, 100), (5, 105)} <= pairs
+
+
+def test_minhash_bands_from_wide_row_match_collect_list_bands(docs_df):
+    from dataframe_differ_spark.plans import plan_features
+
+    # Band keys come from the wide per-document mins: no collect fold.
+    assert plan_features(minhash_dedup(docs_df, "pk", "body")).collect_folds == 0
+
+    sh = docs_df.select("pk", shingles("body", 3).alias("sh"))
+    sigs, cand = minhash_candidates(sh, "pk", "sh", num_perm=12, bands=6)
+    # Reference: band keys folded from the long (pk, j, s) signatures.
+    bands = sigs.groupBy("pk", (F.col("j") / 2).cast("int").alias("band")).agg(
+        F.expr(
+            "concat_ws('-', transform(array_sort(collect_list(struct(j, s))),"
+            " x -> cast(x.s as string)))"
+        ).alias("bkey")
+    )
+    a, b = bands.alias("a"), bands.alias("b")
+    ref = (
+        a.join(
+            b,
+            (F.col("a.band") == F.col("b.band"))
+            & (F.col("a.bkey") == F.col("b.bkey"))
+            & (F.col("a.pk") < F.col("b.pk")),
+        )
+        .select(F.col("a.pk").alias("id_a"), F.col("b.pk").alias("id_b"))
+        .distinct()
+    )
+    got = sorted(tuple(r) for r in cand.collect())
+    assert got == sorted(tuple(r) for r in ref.collect())
+    assert (0, 100) in got and (5, 105) in got
 
 
 def test_simhash_dedup_recovers_planted_pairs(docs_df):

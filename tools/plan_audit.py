@@ -115,17 +115,13 @@ COLLECT_FOLD_OK = {
     "agg_string_agg": "collect_set of ≤3 distinct statuses per priority",
     "ann_drift_refresh": "64 per-dim mean deltas (dimension-bounded; the "
     "corpus pass is FLOOR-micro sum/count since r11)",
-    "corpus_data_card": "inherits its components' bounded folds (per-doc "
-    "n_perms-bounded band concat from the near-dup chain; each "
+    "corpus_data_card": "inherits its components' bounded folds (the "
+    "per-(word) Viterbi DP edges of eval_tokenizer_fertility; each "
     "component is audited and whitelisted individually)",
     "dedup_fuzzy_names": "FastSS candidate buckets — declared exact "
     "verifier; scale sibling dedup_fuzzy_names_capped caps buckets",
     "dedup_fuzzy_names_capped": "FastSS buckets capped at top-64 members "
     "(md5 election, two-phase partitioned_topk)",
-    "dedup_incremental_persisted": "per-doc MinHash band concat "
-    "(n_perms-bounded signature, one array per document)",
-    "dedup_store_compacted": "per-doc MinHash band concat "
-    "(n_perms-bounded; same probe chain as dedup_incremental_persisted)",
     "dedup_substring_excise": "per-doc token-position list "
     "(doc-length bounded)",
     "eval_pr_auc": "distinct-score spine (integer stopword counts — tens "
