@@ -37,10 +37,12 @@ def main(argv: list[str] | None = None) -> int:
     right = spark.read.parquet(args.right)
     keys = [k.strip() for k in args.keys.split(",") if k.strip()]
 
-    dup = diff_core.duplicate_keys(left, keys).limit(1).collect()
-    if dup:
-        print(f"warning: left side has duplicate keys (e.g. {tuple(dup[0])[:-1]});"
-              " diff output will fan out", file=sys.stderr)
+    for side, df in (("left", left), ("right", right)):
+        dup = diff_core.duplicate_keys(df, keys).limit(1).collect()
+        if dup:
+            print(f"warning: {side} side has duplicate keys"
+                  f" (e.g. {tuple(dup[0])[:-1]}); diff output will fan out",
+                  file=sys.stderr)
 
     kw = dict(atol=args.atol, rtol=args.rtol, align_types=args.align_types)
     print(diff_core.report(left, right, keys, sample_n=args.sample, **kw))

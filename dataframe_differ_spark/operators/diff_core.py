@@ -16,12 +16,18 @@ Output schema of a keyed diff::
 Scale design (100 TB): one null-safe full-outer shuffle join on the key
 columns is the whole cost; every comparison is a Catalyst expression
 (whole-stage-codegen'd, no Python). Summaries are map-side-combinable
-aggregations. Nothing collects row-level data to the driver.
+aggregations. Functions that only need matched keys
+(``column_mismatch_stats``, ``changed_sample``) use an inner join instead,
+which Catalyst may broadcast. ``report()`` is one full-outer join feeding
+one conditional aggregate, plus the ``changed_sample`` query only when a
+row changed; its schema section is read on the driver. Nothing collects
+row-level data to the driver beyond that sample.
 """
 
 from __future__ import annotations
 
 from collections.abc import Sequence
+from dataclasses import dataclass
 from functools import reduce
 from operator import and_, or_
 
@@ -48,21 +54,57 @@ def _neq(lc: Column, rc: Column, atol: float = 0.0, rtol: float = 0.0,
     return ~lc.eqNullSafe(rc)
 
 
+@dataclass
+class _Joined:
+    """A null-safe join of the two sides plus the comparison of each
+    compared column: ``neq[c]`` is column ``c``'s tolerant "differs"
+    predicate and ``any_change`` their OR, as :func:`diff` defines them.
+    """
+
+    df: DataFrame
+    keys: list[str]
+    cols: list[str]
+    neq: dict[str, Column]
+    any_change: Column
+
+    def diff_columns(self, status: Column, with_change_cols: bool) -> list[Column]:
+        """:func:`diff`'s output columns, given its status column."""
+        out = [status.alias(STATUS_COL)]
+        out += [
+            F.coalesce(F.col(f"l.{k}"), F.col(f"r.{k}")).alias(k) for k in self.keys
+        ]
+        for c in self.cols:
+            out.append(F.col(f"l.{c}").alias(f"{c}_left"))
+            out.append(F.col(f"r.{c}").alias(f"{c}_right"))
+        if with_change_cols:
+            name_or_null = [F.when(self.neq[c], F.lit(c)) for c in self.cols]
+            changed = F.when(
+                status == CHANGE,
+                F.array_join(F.array_compact(F.array(*name_or_null)), ","),
+            ).otherwise(F.lit(""))
+            out.append(changed.alias("changed_columns"))
+        return out
+
+
 def _join(
     left: DataFrame,
     right: DataFrame,
     keys: Sequence[str],
+    how: str,
+    *,
+    atol: float = 0.0,
+    rtol: float = 0.0,
     columns: Sequence[str] | None = None,
     align_types: bool = False,
     column_mapping: dict[str, str] | None = None,
-    how: str = "full_outer",
-) -> tuple[DataFrame, list[str], dict[str, T.DataType]]:
-    """Validate, rename/align the right side, and join null-safely on keys.
+) -> _Joined:
+    """Validate, rename/align the right side, join null-safely on keys and
+    build the per-column comparisons.
 
-    Compared columns default to the non-key columns on BOTH sides, in
-    left's column order. Sides are aliased ``l``/``r`` with presence
-    markers ``__p_l``/``__p_r``. Returns (joined, compared columns, left
-    column types).
+    Takes :func:`diff`'s keywords except ``with_change_cols``. Compared
+    columns default to the non-key columns on BOTH sides, in left's column
+    order. Sides are aliased ``l``/``r`` with presence markers
+    ``__p_l``/``__p_r``.
     """
     keys = list(keys)
     if not keys:
@@ -104,7 +146,29 @@ def _join(
     # eqNullSafe keeps semantics correct when key columns contain nulls;
     # Catalyst still plans a hash-partitioned SMJ/SHJ on the keys.
     cond = reduce(and_, (F.col(f"l.{k}").eqNullSafe(F.col(f"r.{k}")) for k in keys))
-    return l.join(r, on=cond, how=how), cols, types
+    neq = {
+        c: _neq(F.col(f"l.{c}"), F.col(f"r.{c}"), atol, rtol, types[c])
+        for c in cols
+    }
+    any_change = reduce(or_, neq.values(), F.lit(False))
+    return _Joined(l.join(r, on=cond, how=how), keys, cols, neq, any_change)
+
+
+def _column_counts(cols: Sequence[str], matched: Column | None = None) -> list[Column]:
+    """Exact, null-safe per-column counts ``eq_<c>``/``ne_<c>``/``nm_<c>``
+    (equal, different, exactly one side null), over the rows where
+    ``matched`` holds (all rows when it is None)."""
+
+    def count(pred: Column) -> Column:
+        return F.sum((pred if matched is None else matched & pred).cast("long"))
+
+    aggs = []
+    for c in cols:
+        lc, rc = F.col(f"l.{c}"), F.col(f"r.{c}")
+        aggs.append(count(lc.eqNullSafe(rc)).alias(f"eq_{c}"))
+        aggs.append(count(~lc.eqNullSafe(rc)).alias(f"ne_{c}"))
+        aggs.append(count(lc.isNull() != rc.isNull()).alias(f"nm_{c}"))
+    return aggs
 
 
 def diff(
@@ -137,36 +201,19 @@ def diff(
     before the per-column values (same expressions as the status, so the
     extra column costs nothing at scale).
     """
-    joined, cols, types = _join(
-        left, right, keys, columns, align_types, column_mapping
+    j = _join(
+        left, right, keys, "full_outer", atol=atol, rtol=rtol, columns=columns,
+        align_types=align_types, column_mapping=column_mapping,
     )
     l_present = F.col("l.__p_l").isNotNull()
     r_present = F.col("r.__p_r").isNotNull()
-    neq = {
-        c: _neq(F.col(f"l.{c}"), F.col(f"r.{c}"), atol, rtol, types[c])
-        for c in cols
-    }
-    any_change = reduce(or_, neq.values(), F.lit(False))
     status = (
         F.when(~l_present, F.lit(INSERT))
         .when(~r_present, F.lit(DELETE))
-        .when(any_change, F.lit(CHANGE))
+        .when(j.any_change, F.lit(CHANGE))
         .otherwise(F.lit(NOCHANGE))
     )
-
-    out = [status.alias(STATUS_COL)]
-    out += [F.coalesce(F.col(f"l.{k}"), F.col(f"r.{k}")).alias(k) for k in keys]
-    for c in cols:
-        out.append(F.col(f"l.{c}").alias(f"{c}_left"))
-        out.append(F.col(f"r.{c}").alias(f"{c}_right"))
-    if with_change_cols:
-        name_or_null = [F.when(neq[c], F.lit(c)) for c in cols]
-        changed = F.when(
-            status == CHANGE,
-            F.array_join(F.array_compact(F.array(*name_or_null)), ","),
-        ).otherwise(F.lit(""))
-        out.append(changed.alias("changed_columns"))
-    return joined.select(*out)
+    return j.df.select(*j.diff_columns(status, with_change_cols))
 
 
 def diff_summary(
@@ -177,19 +224,15 @@ def diff_summary(
     return d.groupBy(STATUS_COL).agg(F.count(F.lit(1)).alias("cnt"))
 
 
-def schema_diff(left: DataFrame, right: DataFrame) -> DataFrame:
-    """Schema diff (SURVEY.md §2.A1): driver-side StructType walk, no job.
-
-    Result: one row per column that exists on either side, with its type on
-    each side and a status in {added, removed, type_changed, same}.
-    """
-    spark = left.sparkSession
+def _schema_rows(
+    left: DataFrame, right: DataFrame
+) -> list[tuple[str, str | None, str | None, str]]:
+    """``(column_name, left_type, right_type, status)`` for every column on
+    either side, read from the two schemas on the driver."""
     ltypes = dict(left.dtypes)
     rtypes = dict(right.dtypes)
     rows = []
-    seen = []
     for c in left.columns:
-        seen.append(c)
         if c not in rtypes:
             rows.append((c, ltypes[c], None, "removed"))
         elif ltypes[c] != rtypes[c]:
@@ -199,6 +242,15 @@ def schema_diff(left: DataFrame, right: DataFrame) -> DataFrame:
     for c in right.columns:
         if c not in ltypes:
             rows.append((c, None, rtypes[c], "added"))
+    return rows
+
+
+def schema_diff(left: DataFrame, right: DataFrame) -> DataFrame:
+    """Schema diff (SURVEY.md §2.A1): driver-side StructType walk, no job.
+
+    Result: one row per column that exists on either side, with its type on
+    each side and a status in {added, removed, type_changed, same}.
+    """
     schema = T.StructType(
         [
             T.StructField("column_name", T.StringType()),
@@ -207,7 +259,7 @@ def schema_diff(left: DataFrame, right: DataFrame) -> DataFrame:
             T.StructField("status", T.StringType()),
         ]
     )
-    return spark.createDataFrame(rows, schema)
+    return left.sparkSession.createDataFrame(_schema_rows(left, right), schema)
 
 
 def diff_unkeyed(left: DataFrame, right: DataFrame) -> DataFrame:
@@ -254,23 +306,14 @@ def column_mismatch_stats(
     result is long-form: (column_name, n_equal, n_different,
     n_null_mismatch).
     """
-    for status_only in ("atol", "rtol", "with_change_cols"):
-        kw.pop(status_only, None)
-    joined, cols, _ = _join(left, right, keys, how="inner", **kw)
-    aggs = []
-    for c in cols:
-        lc, rc = F.col(f"l.{c}"), F.col(f"r.{c}")
-        aggs.append(F.sum(lc.eqNullSafe(rc).cast("long")).alias(f"eq_{c}"))
-        aggs.append(F.sum((~lc.eqNullSafe(rc)).cast("long")).alias(f"ne_{c}"))
-        aggs.append(
-            F.sum((lc.isNull() != rc.isNull()).cast("long")).alias(f"nm_{c}")
-        )
-    wide = joined.agg(*aggs)
+    kw.pop("with_change_cols", None)
+    j = _join(left, right, keys, "inner", **kw)
+    wide = j.df.agg(*_column_counts(j.cols))
     stack_args = ", ".join(
-        f"'{c}', eq_{c}, ne_{c}, nm_{c}" for c in cols
+        f"'{c}', eq_{c}, ne_{c}, nm_{c}" for c in j.cols
     )
     return wide.selectExpr(
-        f"stack({len(cols)}, {stack_args}) as "
+        f"stack({len(j.cols)}, {stack_args}) as "
         "(column_name, n_equal, n_different, n_null_mismatch)"
     )
 
@@ -289,11 +332,16 @@ def changed_sample(
 ) -> DataFrame:
     """Deterministic sample of changed rows (SURVEY.md §2.A8).
 
-    orderBy(keys).limit(n) compiles to TakeOrderedAndProject — per-partition
-    top-n then a single driver merge; no global sort materialization.
+    A changed row has both sides present, so this is an inner null-safe
+    join (broadcastable when one side is small) filtered on the changed
+    predicate, with :func:`diff`'s columns. orderBy(keys).limit(n)
+    compiles to TakeOrderedAndProject — per-partition top-n then a single
+    driver merge; no global sort materialization.
     """
-    d = diff(left, right, keys, **kw)
-    return d.filter(F.col(STATUS_COL) == CHANGE).orderBy(*keys).limit(n)
+    with_change_cols = kw.pop("with_change_cols", False)
+    j = _join(left, right, keys, "inner", **kw)
+    out = j.diff_columns(F.lit(CHANGE), with_change_cols)
+    return j.df.filter(j.any_change).select(*out).orderBy(*keys).limit(n)
 
 
 def report(
@@ -306,22 +354,34 @@ def report(
 ) -> str:
     """Human-readable diff report (the reference family's `report()` UX).
 
-    ``kw`` are :func:`diff`'s keywords, passed to every summary below, so
-    the report counts rows exactly as ``diff(left, right, keys, **kw)``
-    does. Aggregates only — the row-level diff stays distributed; what
-    crosses to the driver is a handful of summary rows plus `sample_n`
-    changed keys.
+    ``kw`` are :func:`diff`'s keywords, so the report counts rows exactly
+    as ``diff(left, right, keys, **kw)`` does. One full-outer join feeds
+    one conditional aggregate: the status counts from the presence
+    markers and ``diff``'s changed predicate, and the per-column counts
+    of :func:`column_mismatch_stats` among matched keys. The schema is
+    read on the driver, and the changed-key sample is one
+    :func:`changed_sample` query, skipped when no row changed. What
+    crosses to the driver is one summary row plus `sample_n` changed rows.
     """
     keys = list(keys)
-    sd = schema_diff(left, right).collect()
-    summary = {
-        r[STATUS_COL]: r["cnt"]
-        for r in diff_summary(left, right, keys, **kw).collect()
-    }
-    mismatches = column_mismatch_stats(left, right, keys, **kw)
-    mm_rows = mismatches.filter(F.col("n_different") > 0).collect()
-    sample = changed_sample(left, right, keys, n=sample_n, **kw)
-    sample_keys = [tuple(r[k] for k in keys) for r in sample.collect()]
+    kw.pop("with_change_cols", None)
+    j = _join(left, right, keys, "full_outer", **kw)
+    l_present = F.col("l.__p_l").isNotNull()
+    r_present = F.col("r.__p_r").isNotNull()
+    matched = l_present & r_present
+    changed = matched & j.any_change
+    counts = j.df.agg(
+        F.count_if(~l_present).alias(INSERT),
+        F.count_if(~r_present).alias(DELETE),
+        F.count_if(changed).alias(CHANGE),
+        # matched minus changed: diff() reads a NULL any_change as 'N'
+        (F.count_if(matched) - F.count_if(changed)).alias(NOCHANGE),
+        *_column_counts(j.cols, matched),
+    ).first()
+    sample_keys = []
+    if counts[CHANGE]:
+        sample = changed_sample(left, right, keys, n=sample_n, **kw)
+        sample_keys = [tuple(r[k] for k in keys) for r in sample.collect()]
     atol, rtol = kw.get("atol", 0.0), kw.get("rtol", 0.0)
 
     lines = ["DataFrame diff report", "=" * 21, ""]
@@ -330,27 +390,25 @@ def report(
         lines.append(f"Numeric tolerance: atol={atol}, rtol={rtol}")
     lines.append("")
     lines.append("Schema changes:")
-    changed_schema = [r for r in sd if r["status"] != "same"]
+    changed_schema = [r for r in _schema_rows(left, right) if r[3] != "same"]
     if changed_schema:
-        for r in changed_schema:
-            lines.append(
-                f"  {r['column_name']}: {r['status']}"
-                f" ({r['left_type']} -> {r['right_type']})"
-            )
+        for name, ltype, rtype, st in changed_schema:
+            lines.append(f"  {name}: {st} ({ltype} -> {rtype})")
     else:
         lines.append("  none")
     lines.append("")
     lines.append("Row status counts:")
-    for st, label in (("N", "unchanged"), ("C", "changed"),
-                      ("D", "only in left"), ("I", "only in right")):
-        lines.append(f"  {label:14s} {summary.get(st, 0)}")
+    for st, label in ((NOCHANGE, "unchanged"), (CHANGE, "changed"),
+                      (DELETE, "only in left"), (INSERT, "only in right")):
+        lines.append(f"  {label:14s} {counts[st]}")
     lines.append("")
     lines.append("Columns with differences (among matched keys):")
-    if mm_rows:
-        for r in sorted(mm_rows, key=lambda r: -r["n_different"]):
+    differing = [c for c in j.cols if counts[f"ne_{c}"]]
+    if differing:
+        for c in sorted(differing, key=lambda c: -counts[f"ne_{c}"]):
             lines.append(
-                f"  {r['column_name']}: {r['n_different']} differ"
-                f" ({r['n_null_mismatch']} null-mismatch)"
+                f"  {c}: {counts[f'ne_{c}']} differ"
+                f" ({counts[f'nm_{c}']} null-mismatch)"
             )
     else:
         lines.append("  none")

@@ -1565,10 +1565,19 @@ def q_agg_winsorize(spark, sf_dir):
     # (same total order, same integer fence arithmetic), so the fences —
     # and everything downstream — are value-identical.
     base = o.select("o_orderpriority", "o_totalprice", "o_orderkey")
-    bkey = (
-        F.substring("o_orderpriority", 1, 1).cast("double") * F.lit(2.0**40)
-        + F.col("o_totalprice") * 100.0
-    )
+    # A priority that does not start with a digit would make the bucket
+    # key NULL (ANSI off) and silently misplace its rows: fail instead.
+    digit = F.substring("o_orderpriority", 1, 1).cast("double")
+    digit = F.when(
+        digit.isNull(),
+        F.raise_error(
+            F.concat(
+                F.lit("agg_winsorize: o_orderpriority must start with a digit, got "),
+                F.coalesce(F.col("o_orderpriority"), F.lit("NULL")),
+            )
+        ),
+    ).otherwise(digit)
+    bkey = digit * F.lit(2.0**40) + F.col("o_totalprice") * 100.0
     r = ranked(
         base,
         bkey,

@@ -168,6 +168,56 @@ def test_report_counts_rows_like_aligned_diff(spark):
     assert "Columns with differences (among matched keys):\n  none" in rep
 
 
+def test_report_joins_once_and_samples_only_changes(pair, monkeypatch):
+    joins = []
+    real_join = D._join
+
+    def counting_join(*a, **kw):
+        joins.append(a[3])
+        return real_join(*a, **kw)
+
+    def no_schema_diff(*a, **kw):
+        raise AssertionError("report() must read the schema on the driver")
+
+    monkeypatch.setattr(D, "_join", counting_join)
+    monkeypatch.setattr(D, "schema_diff", no_schema_diff)
+    left, right = pair
+    D.report(left, right, ["k"])
+    assert joins == ["full_outer", "inner"]
+    joins.clear()
+    rep = D.report(left, left, ["k"])
+    assert joins == ["full_outer"]
+    assert "Sample changed keys" not in rep
+
+
+@pytest.mark.parametrize(
+    "kw", [{"column_mapping": {"a": "b"}}, {"columns": ["v"], "rtol": 0.01}]
+)
+def test_changed_sample_inner_join_matches_diff_filter(spark, kw):
+    left = spark.createDataFrame(
+        [(None, "n", 0.0, 1)] + [(i, f"s{i}", float(i), i) for i in range(1, 9)],
+        "k int, a string, v double, w int",
+    )
+    right = spark.createDataFrame(
+        [(None, "N", 0.0, 1)]
+        + [(i, f"s{i % 3}", i * 1.05 if i % 4 else float(i), i) for i in range(2, 12)],
+        "k int, b string, v double, w int",
+    )
+    if "column_mapping" not in kw:
+        right = right.withColumnRenamed("b", "a")
+    got = D.changed_sample(left, right, ["k"], n=3, **kw)
+    ref = (
+        D.diff(left, right, ["k"], **kw)
+        .filter("diff_status = 'C'")
+        .orderBy("k")
+        .limit(3)
+    )
+    assert "FullOuter" not in got._jdf.queryExecution().optimizedPlan().toString()
+    assert got.dtypes == ref.dtypes
+    assert got.collect() == ref.collect()
+    assert len(got.collect()) == 3
+
+
 def test_diff_validates_inputs(pair):
     left, right = pair
     with pytest.raises(ValueError, match="key column"):

@@ -7,6 +7,8 @@ of the diff operator rather than specific examples:
 - swapping arguments swaps I↔D and preserves C/N
 - status counts partition both inputs
 - tolerant diff is monotone in atol
+- report() states the counts of diff_summary, column_mismatch_stats and
+  changed_sample
 """
 
 from __future__ import annotations
@@ -83,6 +85,43 @@ def test_tolerant_monotone(spark, left, right, atol):
         D.diff(ldf, rdf, ["k"], atol=atol).filter("diff_status = 'C'").count()
     )
     assert tol_c <= strict_c
+
+
+def _report_sections(text):
+    lines = text.splitlines()
+    counts = {}
+    for st, label in (("N", "unchanged"), ("C", "changed"),
+                      ("D", "only in left"), ("I", "only in right")):
+        line = next(x for x in lines if x.startswith(f"  {label:14s} "))
+        counts[st] = int(line.split()[-1])
+    start = lines.index("Columns with differences (among matched keys):") + 1
+    end = lines.index("", start) if "" in lines[start:] else len(lines)
+    col_lines = [x for x in lines[start:end] if x != "  none"]
+    sample = [x for x in lines if x.startswith("Sample changed keys")]
+    return counts, col_lines, sample
+
+
+@given(left=table(), right=table(), atol=st.floats(min_value=0, max_value=10))
+@hyp
+def test_report_agrees_with_summaries(spark, left, right, atol):
+    ldf, rdf = _df(spark, left), _df(spark, right)
+    counts, col_lines, sample = _report_sections(
+        D.report(ldf, rdf, ["k"], sample_n=3, atol=atol)
+    )
+    summary = {"N": 0, "C": 0, "I": 0, "D": 0}
+    for r in D.diff_summary(ldf, rdf, ["k"], atol=atol).collect():
+        summary[r["diff_status"]] = r["cnt"]
+    assert counts == summary
+    stats = D.column_mismatch_stats(ldf, rdf, ["k"], atol=atol)
+    # The counts are sums, so they are NULL when no key matched.
+    differing = [r for r in stats.collect() if (r["n_different"] or 0) > 0]
+    assert col_lines == [
+        f"  {r['column_name']}: {r['n_different']} differ"
+        f" ({r['n_null_mismatch']} null-mismatch)"
+        for r in sorted(differing, key=lambda r: -r["n_different"])
+    ]
+    keys = [(r["k"],) for r in D.changed_sample(ldf, rdf, ["k"], n=3, atol=atol).collect()]
+    assert sample == ([f"Sample changed keys (first 3): {keys}"] if keys else [])
 
 
 # ---------------------------------------------------------------------------

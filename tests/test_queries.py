@@ -628,3 +628,15 @@ def test_stream_stream_join_equals_batch_twin(spark, sf_small, registry):
     s = _rows(stream, ["p_id", "c_id", "p_user"])
     b = _rows(batch, ["p_id", "c_id", "p_user"])
     assert s == b
+
+
+def test_agg_winsorize_rejects_non_digit_priority(spark, tmp_path, registry):
+    # The bucket key reads the priority's leading digit; a priority without
+    # one must fail the query, not fall into a NULL bucket.
+    orders = spark.createDataFrame(
+        [(1, 10.0, "1-URGENT"), (2, 20.0, "2-HIGH"), (3, 30.0, "X-BAD")],
+        "o_orderkey long, o_totalprice double, o_orderpriority string",
+    )
+    orders.write.parquet(str(tmp_path / "orders.parquet"))
+    with pytest.raises(Exception, match="must start with a digit, got X-BAD"):
+        registry["agg_winsorize"].fn(spark, str(tmp_path)).collect()
