@@ -4,7 +4,9 @@ Closes two round-1 gaps from SURVEY.md §8: true multi-micro-batch execution
 (rate-limited file replay via ``maxFilesPerTrigger``) and the foreachBatch
 sink pattern (CDC upsert-merge). Both are rows-only for the driver
 (micro-batch scheduling is not SQL-expressible); tests assert exact
-equality with batch twins.
+equality with batch twins. Every query here starts its stream through
+:func:`~dataframe_differ_spark.streaming.run_available_now`, passing a
+memory sink or a foreachBatch callable.
 """
 
 from __future__ import annotations
@@ -18,7 +20,7 @@ from pyspark.sql import functions as F
 
 from dataframe_differ_spark.queries import register
 from dataframe_differ_spark.sources.replay import incremental_events_stream
-from dataframe_differ_spark.streaming import STREAM_CONF_LOCK, record_progress
+from dataframe_differ_spark.streaming import run_available_now
 from dataframe_differ_spark.streaming.foreach_batch import UpsertMergeSink
 
 
@@ -41,24 +43,7 @@ def q_stream_replay_incremental(spark, sf_dir):
             F.col("window.start").alias("window_start"), "event_type", "n_events"
         )
     )
-    name = f"replay_{uuid.uuid4().hex[:8]}"
-    ckpt = os.path.join(tempfile.gettempdir(), f"ddspark_ckpt_{name}")
-    with STREAM_CONF_LOCK:
-        saved = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        try:
-            q = (
-                agg.writeStream.format("memory")
-                .queryName(name)
-                .outputMode("complete")
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", saved)
-    return spark.table(name)
+    return run_available_now(agg, "replay", mode="complete")
 
 
 @register("stream_foreach_batch")  # rows-only: driver-side sink callback
@@ -79,25 +64,7 @@ def q_stream_foreach_batch(spark, sf_dir):
     s = incremental_events_stream(
         spark, sf_dir, n_files=8, files_per_trigger=2
     ).select("user_id", "ts", "event_id", "value")
-    with STREAM_CONF_LOCK:
-        saved = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        try:
-            q = (
-                s.writeStream.foreachBatch(sink)
-                .option(
-                    "checkpointLocation",
-                    os.path.join(
-                        tempfile.gettempdir(),
-                        f"ddspark_ckpt_fb_{uuid.uuid4().hex[:8]}",
-                    ),
-                )
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", saved)
+    run_available_now(s, "fb", foreach_batch=sink)
     # Older snapshot versions are dead after the final merge; drop them so
     # repeated runs don't accumulate (the live version backs the result).
     for d in os.listdir(base):
@@ -134,25 +101,7 @@ def q_stream_append_finalized(spark, sf_dir):
             F.col("window.start").alias("window_start"), "event_type", "n_events"
         )
     )
-    name = f"appendfin_{uuid.uuid4().hex[:8]}"
-    ckpt = os.path.join(tempfile.gettempdir(), f"ddspark_ckpt_{name}")
-    with STREAM_CONF_LOCK:
-        saved = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        try:
-            q = (
-                agg.writeStream.format("memory")
-                .queryName(name)
-                .outputMode("append")
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-            record_progress("appendfin", q)
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", saved)
-    return spark.table(name)
+    return run_available_now(agg, "appendfin")
 
 
 @register("stream_update_deltas")  # rows-only: micro-batch scheduling
@@ -190,23 +139,7 @@ def q_stream_update_deltas(spark, sf_dir):
             "append"
         ).parquet(acc_path)
 
-    ckpt = os.path.join(
-        tempfile.gettempdir(), f"ddspark_ckpt_upd_{uuid.uuid4().hex[:8]}"
-    )
-    with STREAM_CONF_LOCK:
-        saved = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        try:
-            q = (
-                agg.writeStream.foreachBatch(record)
-                .outputMode("update")
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", saved)
+    run_available_now(agg, "upd", mode="update", foreach_batch=record)
     acc = spark.read.parquet(acc_path)
     return acc.groupBy("window_start", "event_type").agg(
         F.expr("max_by(n_events, batch_id)").alias("n_events"),
@@ -241,7 +174,10 @@ def _run_stream_dedup_persisted(spark, sf_dir):
         _imh_probe,
         _imh_sign,
     )
-    from dataframe_differ_spark.sources.replay import split_frame_files
+    from dataframe_differ_spark.sources.replay import (
+        replay_stream,
+        split_frame_files,
+    )
 
     corpus, batch = _imh_corpus_batch(spark, sf_dir)
     params = {"num_perm": _IMH_PERM, "bands": _IMH_BANDS, "shingle_n": 3}
@@ -259,12 +195,7 @@ def _run_stream_dedup_persisted(spark, sf_dir):
     split_dir = split_frame_files(
         "docsbatch", sf_dir, 4, lambda: batch, "doc_id"
     )
-    schema = spark.read.parquet(split_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(split_dir)
-    )
+    stream = replay_stream(spark, split_dir, 1)
 
     run_tag = uuid.uuid4().hex[:8]
     cand_log = os.path.join(tempfile.gettempdir(), f"ddspark_sdp_cand_{run_tag}")
@@ -330,25 +261,7 @@ def _run_stream_dedup_persisted(spark, sf_dir):
         # directory, without the re-read.
         cur_store["df"] = store_df.unionByName(accepted)
 
-    with STREAM_CONF_LOCK:
-        saved = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        try:
-            q = (
-                stream.writeStream.foreachBatch(probe_and_append)
-                .option(
-                    "checkpointLocation",
-                    os.path.join(
-                        tempfile.gettempdir(), f"ddspark_ckpt_sdp_{run_tag}"
-                    ),
-                )
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-            record_progress("sdp", q)
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", saved)
+    run_available_now(stream, "sdp", foreach_batch=probe_and_append)
 
     result = (
         spark.read.parquet(cand_log)
@@ -488,7 +401,10 @@ FROM dots GROUP BY cluster_id
             _adr_fixture,
             _adr_indexes_cached,
         )
-        from dataframe_differ_spark.sources.replay import split_frame_files
+        from dataframe_differ_spark.sources.replay import (
+            replay_stream,
+            split_frame_files,
+        )
 
         params = {"n_clusters": _ADR_K, "dim": 64}
         cent_old, _, _, _ = _adr_indexes_cached(spark, sf_dir)
@@ -499,16 +415,10 @@ FROM dots GROUP BY cluster_id
         split_dir = split_frame_files(
             "embdrift", sf_dir, 4, lambda: drifted, "vec_id"
         )
-        schema = spark.read.parquet(split_dir).schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(split_dir)
-        )
+        stream = replay_stream(spark, split_dir, 1)
 
-        run_tag = uuid.uuid4().hex[:8]
         mon_log = os.path.join(
-            tempfile.gettempdir(), f"ddspark_sai_mon_{run_tag}"
+            tempfile.gettempdir(), f"ddspark_sai_mon_{uuid.uuid4().hex[:8]}"
         )
 
         def assign_and_monitor(bdf, batch_id):
@@ -532,26 +442,7 @@ FROM dots GROUP BY cluster_id
             )
             part.write.mode("append").parquet(mon_log)
 
-        with STREAM_CONF_LOCK:
-            saved = spark.conf.get("spark.sql.shuffle.partitions")
-            spark.conf.set("spark.sql.shuffle.partitions", "8")
-            try:
-                q = (
-                    stream.writeStream.foreachBatch(assign_and_monitor)
-                    .option(
-                        "checkpointLocation",
-                        os.path.join(
-                            tempfile.gettempdir(),
-                            f"ddspark_ckpt_sai_{run_tag}",
-                        ),
-                    )
-                    .trigger(availableNow=True)
-                    .start()
-                )
-                q.awaitTermination()
-                record_progress("sai", q)
-            finally:
-                spark.conf.set("spark.sql.shuffle.partitions", saved)
+        run_available_now(stream, "sai", foreach_batch=assign_and_monitor)
 
         mon = spark.read.parquet(mon_log)
         return mon.groupBy("cluster_id").agg(

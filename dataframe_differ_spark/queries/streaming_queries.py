@@ -6,9 +6,10 @@ Strategy: every windowing construct ships twice.
    window semantics computed on the batch DataFrame, with a full DuckDB
    oracle (time_bucket / gaps-and-islands formulations).
 2. A **true streaming** run (`stream_*`) — ``readStream`` → transformation →
-   ``writeStream.trigger(availableNow=True)`` into a memory sink, returned
-   as a DataFrame. Rows-only for the driver; tests assert streaming ==
-   batch twin exactly.
+   :func:`~dataframe_differ_spark.streaming.run_available_now`, the one
+   stream runner (``availableNow`` trigger, memory sink returned as a
+   DataFrame). Rows-only for the driver; tests assert streaming == batch
+   twin exactly.
 
 Scale: windowed aggregations shuffle on (window, key); state lives in the
 per-partition state store (RocksDB on a real cluster). Watermarks bound
@@ -24,7 +25,7 @@ import uuid
 from pyspark.sql import functions as F
 
 from dataframe_differ_spark.queries import register
-from dataframe_differ_spark.streaming import STREAM_CONF_LOCK, record_progress
+from dataframe_differ_spark.streaming import run_available_now
 from dataframe_differ_spark.queries.relational import SQL_DSUM, dsum
 from dataframe_differ_spark.tables import load_table
 
@@ -166,38 +167,6 @@ def _events_stream(spark, sf_dir):
     return s
 
 
-def _run_to_memory(df, name_prefix: str, mode: str = "complete"):
-    """Execute a streaming DataFrame to completion into a memory sink.
-
-    Stateful operators allocate ONE state store per shuffle partition, so
-    the partition count must track stream volume: 8 is right for these
-    100k-row local replays (32 partitions cost 5× in pure state-store
-    overhead, measured), while a real 100 TB stream would size it up.
-    The conf is scoped to the streaming start and restored after —
-    partition counts are baked into the checkpoint at first batch.
-    """
-    name = f"{name_prefix}_{uuid.uuid4().hex[:8]}"
-    ckpt = os.path.join(tempfile.gettempdir(), f"ddspark_ckpt_{name}")
-    spark = df.sparkSession
-    with STREAM_CONF_LOCK:
-        saved = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        try:
-            q = (
-                df.writeStream.format("memory")
-                .queryName(name)
-                .outputMode(mode)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-            record_progress(name_prefix, q)
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", saved)
-    return name
-
-
 @register("stream_tumbling")  # rows-only: true streaming execution
 def q_stream_tumbling(spark, sf_dir):
     """G1: tumbling-window count over a real readStream (availableNow).
@@ -214,8 +183,7 @@ def q_stream_tumbling(spark, sf_dir):
             F.col("window.start").alias("window_start"), "event_type", "n_events"
         )
     )
-    name = _run_to_memory(agg, "tumbling")
-    return spark.table(name)
+    return run_available_now(agg, "tumbling", mode="complete")
 
 
 @register("stream_watermark")  # rows-only
@@ -231,8 +199,7 @@ def q_stream_watermark(spark, sf_dir):
         .agg(F.count(F.lit(1)).alias("n_events"))
         .select(F.col("window.start").alias("window_start"), "n_events")
     )
-    name = _run_to_memory(agg, "watermark")
-    return spark.table(name)
+    return run_available_now(agg, "watermark", mode="complete")
 
 
 @register("stream_dedup")  # rows-only
@@ -247,8 +214,7 @@ def q_stream_dedup(spark, sf_dir):
     doubled = s.union(s)
     deduped = doubled.withWatermark("ts", "1 hour").dropDuplicates(["event_id"])
     agg = deduped.groupBy("event_type").agg(F.count(F.lit(1)).alias("n_events"))
-    name = _run_to_memory(agg, "dedup")
-    return spark.table(name)
+    return run_available_now(agg, "dedup", mode="complete")
 
 
 @register("stream_stateful")  # rows-only
@@ -284,8 +250,7 @@ def q_stream_stateful(spark, sf_dir):
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    name = _run_to_memory(agg, "stateful", mode="update")
-    return spark.table(name)
+    return run_available_now(agg, "stateful", mode="update")
 
 
 @register("stream_sliding")  # rows-only: true streaming execution
@@ -299,8 +264,7 @@ def q_stream_sliding(spark, sf_dir):
         .agg(F.count(F.lit(1)).alias("n_events"))
         .select(F.col("window.start").alias("window_start"), "n_events")
     )
-    name = _run_to_memory(agg, "sliding")
-    return spark.table(name)
+    return run_available_now(agg, "sliding", mode="complete")
 
 
 @register("stream_session")  # rows-only: true streaming execution
@@ -319,8 +283,7 @@ def q_stream_session(spark, sf_dir):
             "n_events",
         )
     )
-    name = _run_to_memory(agg, "session")
-    return spark.table(name)
+    return run_available_now(agg, "session", mode="complete")
 
 
 @register("stream_stream_join")  # rows-only: true streaming execution
@@ -360,17 +323,17 @@ def q_stream_stream_join(spark, sf_dir):
         & (F.col("c_ts") <= F.col("p_ts")),
         "inner",
     ).select("p_id", "c_id", "p_user")
-    name = _run_to_memory(joined, "ssjoin", mode="append")
-    return spark.table(name)
+    return run_available_now(joined, "ssjoin")
 
 
 @register("stream_sink_parquet")  # rows-only: true streaming execution
 def q_stream_sink_parquet(spark, sf_dir):
     """B4/G: streaming parquet sink with checkpointed exactly-once files.
 
-    readStream → filter → writeStream(parquet) with a checkpoint; the
-    commit log makes file output exactly-once across restarts (the
-    mechanism a 100 TB pipeline relies on for idempotent reruns). The
+    readStream → filter → parquet sink with a checkpoint; the sink's
+    ``_spark_metadata`` commit log makes file output exactly-once across
+    restarts (the mechanism a 100 TB pipeline relies on for idempotent
+    reruns), and the read-back sees only committed files. The
     query returns an aggregate over the read-back files; equality with the
     batch filter is asserted in tests.
     """
@@ -378,15 +341,7 @@ def q_stream_sink_parquet(spark, sf_dir):
         tempfile.gettempdir(), f"ddspark_stream_sink_{uuid.uuid4().hex[:8]}"
     )
     s = _events_stream(spark, sf_dir).filter(F.col("event_type") == "purchase")
-    q = (
-        s.writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", out + "_ckpt")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    back = spark.read.parquet(out)
+    back = run_available_now(s, "sinkpq", path=out)
     return back.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n_events"),
         F.countDistinct("event_id").alias("n_distinct_events"),
@@ -412,10 +367,9 @@ def q_stream_cdc_diff(spark, sf_dir):
         F.max("ts").alias("last_ts"),
         F.count(F.lit(1)).alias("n_events"),
     )
-    stream_state_name = _run_to_memory(
-        last_state(_events_stream(spark, sf_dir)), "cdc", "complete"
+    streaming_state = run_available_now(
+        last_state(_events_stream(spark, sf_dir)), "cdc", mode="complete"
     )
-    streaming_state = spark.table(stream_state_name)
     batch_state = last_state(
         load_table(spark, sf_dir, "events").withColumn(
             "ts", F.col("ts").cast("timestamp")
@@ -454,8 +408,7 @@ def q_stream_static_join(spark, sf_dir):
             F.approx_count_distinct("user_id").alias("approx_buyers"),
         )
     )
-    name = _run_to_memory(enriched, "sstatic", mode="complete")
-    return spark.table(name)
+    return run_available_now(enriched, "sstatic", mode="complete")
 
 
 @register("stream_dedup_watermarked")  # rows-only: true streaming execution
@@ -477,5 +430,4 @@ def q_stream_dedup_watermarked(spark, sf_dir):
         ["event_id"]
     )
     agg = deduped.groupBy("event_type").agg(F.count(F.lit(1)).alias("n_events"))
-    name = _run_to_memory(agg, "dedupww")
-    return spark.table(name)
+    return run_available_now(agg, "dedupww", mode="complete")

@@ -7,9 +7,10 @@ batches, per-batch sink commits). This module closes that gap:
 
 1. :func:`split_events_files` rewrites events into N part-files (once per
    (sf_dir, n) per JVM, cached on disk in the session temp dir).
-2. :func:`incremental_events_stream` reads them back with
-   ``maxFilesPerTrigger`` — the file-source form of rate limiting — so an
-   ``availableNow`` run processes ceil(N / files_per_trigger) micro-batches.
+2. :func:`replay_stream` (via :func:`incremental_events_stream` for
+   events) reads them back with ``maxFilesPerTrigger`` — the file-source
+   form of rate limiting — so an ``availableNow`` run processes
+   ceil(N / files_per_trigger) micro-batches.
 
 At cluster scale the same queries point at a Kafka source or a landing
 directory with real file arrivals; ``maxFilesPerTrigger`` /
@@ -138,7 +139,17 @@ def incremental_events_stream(
     micro-batches — state stores and sink commit logs are exercised across
     batch boundaries, not just within one.
     """
-    path = split_events_files(spark, sf_dir, n_files)
+    return replay_stream(
+        spark, split_events_files(spark, sf_dir, n_files), files_per_trigger
+    )
+
+
+def replay_stream(
+    spark: SparkSession, path: str, files_per_trigger: int
+) -> DataFrame:
+    """readStream over a split parquet dir, ``files_per_trigger`` files per
+    micro-batch. The schema is read once from the batch files (a file
+    stream cannot infer it)."""
     schema = spark.read.parquet(path).schema
     return (
         spark.readStream.schema(schema)

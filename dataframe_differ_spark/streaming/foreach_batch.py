@@ -9,11 +9,13 @@ fan-out) run against it with the batch engine.
 up-to-date by latest-wins upserts. Plain parquet cannot be updated in place,
 so each merge writes a new versioned snapshot dir keyed by ``batch_id``
 (``v00000``, ``v00001``, …) and the newest version is the table — the same
-copy-on-write idea Delta/Iceberg implement with a commit log. Because the
-snapshot path is derived from ``batch_id``, a replayed batch (failure +
-checkpoint restart) rewrites ITS OWN version rather than double-applying:
+copy-on-write idea Delta/Iceberg implement with a commit log. Batch
+``batch_id`` merges onto the newest version on disk with a SMALLER id and
+writes ``v<batch_id>``, so a replayed batch (failure + checkpoint restart)
+rewrites ITS OWN version from the same input rather than double-applying:
 the merge stays effectively exactly-once, matching the guarantee a MERGE
-INTO sink gives on a real cluster.
+INTO sink gives on a real cluster. The base version is found on disk, not
+held in memory, so this holds for a fresh sink after a restart too.
 
 Scale: the merge is a key-partitioned shuffle of (current ∪ batch) — at
 100 TB the current table would be bucketed/Z-ordered by key so the merge
@@ -52,7 +54,26 @@ class UpsertMergeSink:
         self.tiebreak_col = tiebreak_col
         self.value_col = value_col
         self.current_path: str | None = None
-        self.n_batches = 0
+        self._batch_ids: set[int] = set()
+
+    @property
+    def n_batches(self) -> int:
+        """Distinct micro-batches merged (a replayed batch counts once)."""
+        return len(self._batch_ids)
+
+    def _version_path(self, batch_id: int) -> str:
+        return os.path.join(self.base_dir, f"v{int(batch_id):05d}")
+
+    def _base_version(self, batch_id: int) -> str | None:
+        """Newest snapshot on disk written by a batch before ``batch_id``."""
+        if not os.path.isdir(self.base_dir):
+            return None
+        ids = [
+            int(d[1:])
+            for d in os.listdir(self.base_dir)
+            if d.startswith("v") and d[1:].isdigit() and int(d[1:]) < batch_id
+        ]
+        return self._version_path(max(ids)) if ids else None
 
     def _latest(self, df: DataFrame, v: str, t: str, e: str) -> DataFrame:
         """Per-key latest (value, ts, tiebreak) + count contribution."""
@@ -81,15 +102,16 @@ class UpsertMergeSink:
         merged = self._latest(
             batch_df, self.value_col, self.ts_col, self.tiebreak_col
         )
-        if self.current_path is not None:
-            cur = spark.read.parquet(self.current_path)
+        base = self._base_version(batch_id)
+        if base is not None:
+            cur = spark.read.parquet(base)
             merged = self._latest(
                 cur.unionByName(merged), "last_value", "last_ts", "last_event_id"
             )
-        new_path = os.path.join(self.base_dir, f"v{int(batch_id):05d}")
+        new_path = self._version_path(batch_id)
         merged.write.mode("overwrite").parquet(new_path)
         self.current_path = new_path
-        self.n_batches += 1
+        self._batch_ids.add(int(batch_id))
 
     def result(self, spark: SparkSession) -> DataFrame:
         if self.current_path is None:

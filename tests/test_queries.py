@@ -262,6 +262,33 @@ def test_stream_foreach_batch_merges_across_batches(spark, sf_small, registry):
     assert _rows(out.select(*cols), cols) == _rows(twin.select(*cols), cols)
 
 
+def test_upsert_merge_sink_replayed_batch_is_idempotent(spark, tmp_path):
+    # A foreachBatch micro-batch replayed after a restart arrives with the
+    # same batch_id; the sink must leave the table as if it ran once.
+    from datetime import datetime
+
+    from dataframe_differ_spark.streaming.foreach_batch import UpsertMergeSink
+
+    schema = "user_id bigint, ts timestamp, event_id bigint, value double"
+    b0 = spark.createDataFrame(
+        [(1, datetime(2024, 1, 1, 0), 1, 1.0), (2, datetime(2024, 1, 1, 0), 2, 2.0)],
+        schema,
+    )
+    b1 = spark.createDataFrame([(1, datetime(2024, 1, 1, 1), 3, 3.0)], schema)
+    cols = ["user_id", "last_value", "last_ts", "last_event_id", "n_events"]
+
+    def run(name, batches):
+        sink = UpsertMergeSink(str(tmp_path / name), keys=["user_id"])
+        for batch_id, df in batches:
+            sink(df, batch_id)
+        return _rows(sink.result(spark), cols), sink.n_batches
+
+    once = run("once", [(0, b0), (1, b1)])
+    replayed = run("replayed", [(0, b0), (1, b1), (1, b1)])
+    assert replayed == once
+    assert once[1] == 2 and dict((r[0], r[4]) for r in once[0]) == {1: 2, 2: 1}
+
+
 def test_ivf_recall_vs_brute_force(spark, sf_small, registry):
     brute = registry["sim_topk"].fn(spark, sf_small)
     ivf = registry["sim_topk_ivf"].fn(spark, sf_small)
@@ -570,6 +597,62 @@ def test_stream_dedup_watermarked_evicts_state(spark, sf_small, registry):
     # than the stream delivered (eviction happened), but non-empty
     peak = max(o["numRowsTotal"] for o in ops)
     assert 0 < peak <= n_events
+
+
+def _ckpt_dirs():
+    import glob
+    import os
+    import tempfile
+
+    return set(glob.glob(os.path.join(tempfile.gettempdir(), "ddspark_ckpt_*")))
+
+
+def test_stream_runner_failure_restores_conf_and_removes_checkpoint(
+    spark, tmp_path
+):
+    from dataframe_differ_spark.sources.replay import replay_stream
+    from dataframe_differ_spark.streaming import run_available_now
+
+    src = str(tmp_path / "src")
+    spark.range(10).write.parquet(src)
+
+    def boom(batch_df, batch_id):
+        raise ValueError("boom in foreach_batch")
+
+    prior = spark.conf.get("spark.sql.shuffle.partitions")
+    before = _ckpt_dirs()
+    with pytest.raises(Exception, match="boom in foreach_batch"):
+        run_available_now(replay_stream(spark, src, 1), "boom", foreach_batch=boom)
+    assert spark.conf.get("spark.sql.shuffle.partitions") == prior
+    assert not _ckpt_dirs() - before
+
+
+@pytest.mark.parametrize("name", ["stream_tumbling", "stream_foreach_batch"])
+def test_stream_queries_leave_no_checkpoint_dirs(spark, sf_small, registry, name):
+    before = _ckpt_dirs()
+    assert registry[name].fn(spark, sf_small).count() > 0
+    assert not _ckpt_dirs() - before
+
+
+def test_write_stream_only_in_stream_runner():
+    # Every streaming start goes through streaming.run_available_now; an
+    # inline writeStream elsewhere would bring back its own copy of the
+    # lock/conf/checkpoint protocol.
+    import ast
+    import pathlib
+
+    import dataframe_differ_spark
+
+    root = pathlib.Path(dataframe_differ_spark.__file__).parent
+    users = {
+        p.relative_to(root).as_posix()
+        for p in root.rglob("*.py")
+        if any(
+            isinstance(n, ast.Attribute) and n.attr == "writeStream"
+            for n in ast.walk(ast.parse(p.read_text()))
+        )
+    }
+    assert users == {"streaming/__init__.py"}
 
 
 def test_stream_watermark_equals_batch_twin(spark, sf_small, registry):
