@@ -9,6 +9,20 @@ Scale notes (SURVEY.md §4): AQE is enabled so that at real cluster scale the
 runtime re-plans joins (broadcast conversion, skew-join splitting) from live
 statistics; locally it also coalesces tiny shuffle partitions so sf0.01 runs
 are not dominated by task overhead.
+
+Codegen cache: :func:`get_spark` sets ``spark.sql.codegen.cache.maxEntries``
+to :data:`CODEGEN_CACHE_ENTRIES` (Spark's default is 100). One session runs
+many queries (CLI, bench, tests, perfbench), and the whole-stage and
+projection classes they generate do not fit in 100 entries: the four
+``dedup-store`` queries alone recompile 141 evicted classes on every repeat
+at sf0.001, and the JIT then compiles them to native code again. One
+sf0.001 pass over all 400 registry queries compiles 6 340 classes, so 8192
+holds the registry with headroom; a second pass in the same session then
+compiles 408 instead of 9 087, for about 40 MB more metaspace. It is a static SQL conf, so it is set in the builder
+and not in ``_RUNTIME_CONFS``: a live session cannot change it. A session
+the driver owns (``tools/driver_sim.py``, ``__spark_entry__``) therefore
+keeps Spark's default, since :func:`configure_session` sets only runtime
+confs.
 """
 
 from __future__ import annotations
@@ -17,6 +31,9 @@ import os
 import warnings
 
 from pyspark.sql import SparkSession
+
+# Static: holds the registry's generated classes (6 340 measured), see above.
+CODEGEN_CACHE_ENTRIES = 8192
 
 # Conf keys we've already warned about (warn once, not per session call).
 _WARNED_CONFS: set[str] = set()
@@ -79,6 +96,7 @@ def get_spark(app_name: str = "dataframe_differ_spark") -> SparkSession:
         .config("spark.sql.shuffle.partitions", str(max(int(cpus), 8)))
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
         .config("spark.ui.enabled", "false")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         .config("spark.sql.warehouse.dir", "/tmp/spark-warehouse")
     )
     spark = builder.getOrCreate()

@@ -8,7 +8,9 @@ Usage:
 
 Each query runs N_REPS times (default 3, env OPT_REPS); the MIN is reported
 (host-noise discipline from bench.py). The first rep on a fresh session pays
-any session-cache build — both cold and warm mins are printed.
+any session-cache build — both cold and warm mins are printed. Next to each
+rep's time goes its codegen compile count (``CodegenMetrics`` compilation
+count delta), so a cold and a warm rep show whether compilation was paid.
 """
 
 from __future__ import annotations
@@ -40,16 +42,21 @@ def main() -> None:
     spark = get_spark("opt_measure")
     registry = load_all()
     os.makedirs(PLANS_DIR, exist_ok=True)
+    codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+
+    def compiles() -> int:
+        return codegen.METRIC_COMPILATION_TIME().getCount()
 
     for name in names:
         q = registry[name]
-        times = []
+        times, reps = [], []
         for rep in range(N_REPS):
             spark.sparkContext.setJobDescription(f"opt:{name}:rep{rep}")
-            t0 = time.time()
+            c0, t0 = compiles(), time.time()
             df = q.fn(spark, SF_DIR)
             df.write.format("noop").mode("overwrite").save()
             times.append(round(time.time() - t0, 3))
+            reps.append(f"{times[-1]:.3f}s/{compiles() - c0}c")
         spark.sparkContext.setJobDescription(None)
         if not time_only:
             plan = df._jdf.queryExecution().explainString(
@@ -62,7 +69,8 @@ def main() -> None:
                 f.write(plan)
         print(
             f"{name}: cold {times[0]:.3f}s, warm-min "
-            f"{min(times[1:]) if len(times) > 1 else float('nan'):.3f}s, all {times}"
+            f"{min(times[1:]) if len(times) > 1 else float('nan'):.3f}s, "
+            f"all (time/codegen compiles) {' '.join(reps)}"
         )
 
 
