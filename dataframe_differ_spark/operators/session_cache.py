@@ -1,20 +1,23 @@
 """Per-(SparkSession, key) cache of materialized intermediate frames.
 
-Round-10 extraction of the ``_ivf_index_cached`` pattern
-(queries/vectors.py, round 7): several registered queries share an
-expensive derived table — the IVF coarse quantizer, the MinHash
-signature/pair chain — and before this module each consumer replayed
-the full build (the VERDICT r9 bench audit measured the MinHash
-signature+pair subplan at ~6–10 s per consumer at sf0.1, rebuilt by
-four different queries).
+Several registered queries share an expensive derived table — the IVF
+coarse quantizer, the co-purchase edge list, the MinHash
+signature/pair chain — and without this cache each consumer replays
+the full build (the MinHash signature+pair subplan alone measured
+~6–10 s per consumer at sf0.1, rebuilt by four different queries).
+This is the ONLY per-session cache of materialized frames in the
+package: every per-session frame reuse goes through
+:func:`session_cached`, so one place sees every hit and miss.
 
 The cache is deliberately session-scoped and weak:
 
 - **Key**: the caller's tuple (chain name, abs sf_dir, params...) —
-  anything that changes the built frames MUST be in the key.
-- **Value**: the builder's frames, each ``localCheckpoint(eager=True)``
-  so the first consumer pays the build once and later consumers read
-  cached blocks (no lineage replay, no re-shuffle).
+  anything that changes the built frames MUST be in the key, and
+  ``key[0]`` is the chain's name.
+- **Value**: builders return LAZY frames; each is
+  ``localCheckpoint(eager=True)``-ed here, in order, so the first
+  consumer pays the build once under the key's lock and later
+  consumers read cached blocks (no lineage replay, no re-shuffle).
 - **Lifetime**: a ``WeakKeyDictionary`` on the SparkSession — a stopped
   session drops its checkpointed blocks, and the cache entry must die
   with them (a strong key would hand consumer #2 a frame whose blocks
@@ -22,10 +25,9 @@ The cache is deliberately session-scoped and weak:
 - **Locks**: a global lock guards only the cache DICTIONARIES; each
   key gets its own build lock, so two pipelined bench threads
   first-missing DIFFERENT chains build concurrently, while two threads
-  racing the SAME key still build it exactly once. (The first version
-  held one global lock across the whole build; with eight cached
-  chains that serialized ~60 s of unrelated builds across the bench's
-  4 threads and showed up directly in the pipelined wall.)
+  racing the SAME key still build it exactly once. (One global lock
+  held across whole builds serialized ~60 s of unrelated builds across
+  the bench's 4 threads and showed up directly in the pipelined wall.)
 
 This is the SESSION half of reuse; the CROSS-JOB half is
 ``operators.persistence`` (plain-parquet artifacts). At 100 TB the
@@ -63,14 +65,8 @@ def session_cached(
 
     ``builder`` returns a DataFrame or a sequence of them; the result is
     always a tuple (a single frame comes back as a 1-tuple, so call
-    sites destructure uniformly). Frames the builder has ALREADY
-    checkpointed are detected (analyzed plan is a bare ``LogicalRDD``
-    scan, i.e. nothing but materialized blocks) and NOT re-checkpointed
-    — eager=True on such a frame would schedule a redundant
-    materialization job per frame (ADVICE r10: ``scaleops._mh_parts``
-    checkpoints internally because its two frames must materialize in a
-    specific order; the guard lets such builders coexist with the lazy-
-    frames contract instead of silently double-paying).
+    sites destructure uniformly). Every frame is checkpointed eagerly,
+    in the builder's order, before the entry is published.
     """
     with _LOCK:
         cache = _CACHE.setdefault(spark, {})
@@ -89,10 +85,7 @@ def session_cached(
         built = builder()
         if isinstance(built, DataFrame):
             built = (built,)
-        frames = tuple(
-            df if _already_materialized(df) else df.localCheckpoint(eager=True)
-            for df in built
-        )
+        frames = tuple(df.localCheckpoint(eager=True) for df in built)
         with _LOCK:
             cache[key] = frames
             # The key's build lock has done its job: later callers hit
@@ -105,15 +98,3 @@ def session_cached(
                 locks.pop(key, None)
         return frames
 
-
-def _already_materialized(df: DataFrame) -> bool:
-    """True if ``df``'s analyzed plan is nothing but a ``LogicalRDD``
-    scan — the shape ``localCheckpoint`` leaves behind, meaning the
-    frame is already backed by materialized blocks and an eager
-    re-checkpoint would only copy them."""
-    try:
-        plan = df._jdf.queryExecution().analyzed().toString()
-    except Exception:  # pragma: no cover - defensive: treat as lazy
-        return False
-    lines = [ln for ln in plan.strip().splitlines() if ln.strip()]
-    return len(lines) == 1 and lines[0].lstrip().startswith("LogicalRDD")

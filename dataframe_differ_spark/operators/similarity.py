@@ -429,6 +429,10 @@ def ivf_index(
             ),
         )
         .select("cluster_id", "ce")
+        # Lazy cut: the final assignment and the caller both consume the
+        # centroids, so the Lloyd chain runs once. assign_clusters
+        # broadcasts them explicitly, so no size estimate is lost.
+        .localCheckpoint(eager=False)
     )
     return assign_clusters(e, centroids, id_col, vec_col), centroids
 

@@ -11,8 +11,6 @@ in a single Catalyst plan. (Q1's shape already ships as
 from __future__ import annotations
 
 import os
-import threading
-import weakref
 
 from pyspark.sql import Window
 from pyspark.sql import functions as F
@@ -1924,24 +1922,19 @@ edges AS {mat} (
     ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey)"""
 
 
-# Per-(session, sf_dir) cache of the materialized edge list: FOUR graph
-# queries (triangles, BFS, PageRank, link prediction) consume the same
-# construction, so build the ~O(orders) edge frame once per session and
-# share the localCheckpointed blocks — same device (and same lock
-# discipline) as vectors._ivf_index_cached.
-_EDGES_CACHE: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
-_EDGES_LOCK = threading.Lock()
-
-
 def copurchase_edges(spark, sf_dir):
-    key = os.path.abspath(sf_dir)
-    with _EDGES_LOCK:
-        cache = _EDGES_CACHE.setdefault(spark, {})
-        if key not in cache:
-            cache[key] = _copurchase_edges_build(spark, sf_dir).localCheckpoint(
-                eager=True
-            )
-        return cache[key]
+    """The co-purchase edge list, built once per (session, sf_dir)
+    through `session_cached`: the graph queries (triangles, BFS,
+    PageRank, link prediction, ...) all consume the same construction,
+    so the ~O(orders) edge frame is materialized once and its
+    checkpointed blocks are shared."""
+    from dataframe_differ_spark.operators.session_cache import session_cached
+
+    return session_cached(
+        spark,
+        ("copurchase_edges", os.path.abspath(sf_dir)),
+        lambda: _copurchase_edges_build(spark, sf_dir),
+    )[0]
 
 
 def _copurchase_edges_build(spark, sf_dir):

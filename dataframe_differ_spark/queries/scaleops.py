@@ -1156,7 +1156,7 @@ def q_vec_pq_codes(spark, sf_dir):
     distances computed code-vs-query via a 16-entry lookup table per
     subspace. Codebooks here are md5-seeded sample vectors (deterministic
     in both engines — production would refine them with the Lloyd
-    iterations `_ivf_index` demonstrates); encoding is the real plan: the
+    iterations `ivf_index` demonstrates); encoding is the real plan: the
     128-row codebook broadcasts, each vector's 8 subvectors argmin over
     16 centroids (ties broken by centroid id), codes pack by integer
     shifts, and per-subspace errors sum via decimal(20,9) so the total is
@@ -2024,15 +2024,10 @@ def q_vec_ivfpq_topk(spark, sf_dir):
     codebook CTEs, namespaced to coexist) and the cell-restricted ADC —
     candidates, ADC estimates, and exact distances all hash-match.
     """
-    from dataframe_differ_spark.queries.vectors import (
-        _emb_double,
-        _ivf_index_cached,
-    )
+    from dataframe_differ_spark.queries.vectors import _ivf_index_cached
 
     base, pq_cent, best = _pq_parts(spark, sf_dir)
-    index, kcent = _ivf_index_cached(
-        spark, sf_dir, _emb_double(spark, sf_dir), 16
-    )
+    index, kcent = _ivf_index_cached(spark, sf_dir, 16)
     q = base.filter(F.col("vec_id") == 0).select(F.col("e").alias("qe"))
     dot = F.expr(
         "aggregate(zip_with(ce, qe, (x, y) -> x * y), CAST(0.0 AS DOUBLE), "

@@ -1601,7 +1601,7 @@ def q_graph_link_prediction(spark, sf_dir):
     """
     from dataframe_differ_spark.operators.graph import link_prediction
 
-    edges = copurchase_edges(spark, sf_dir).localCheckpoint(eager=False)
+    edges = copurchase_edges(spark, sf_dir)
     lp = link_prediction(edges, src="u", dst="v", cap=None)
     return (
         lp.orderBy(F.col("jaccard").desc(), "u", "v")
@@ -1685,7 +1685,7 @@ def q_graph_link_prediction_capped(spark, sf_dir):
     """
     from dataframe_differ_spark.operators.graph import link_prediction
 
-    edges = copurchase_edges(spark, sf_dir).localCheckpoint(eager=False)
+    edges = copurchase_edges(spark, sf_dir)
     lp = link_prediction(edges, src="u", dst="v", cap=_LINKPRED_CAP)
     return (
         lp.orderBy(F.col("jaccard").desc(), "u", "v")

@@ -384,13 +384,13 @@ def _near_dup_chain_cached(spark, sf_dir):
     `eval_bleu_pairs` and `dedup_cluster_keep_best` each rebuilt the
     identical shingle→signature→band→verify chain (~6–10 s of the bench
     per consumer at sf0.1). The chain is deterministic in (sf_dir,
-    params), so the verified-pair table is cacheable exactly like the
-    IVF index (`vectors._ivf_index_cached`): eager localCheckpoint,
-    weak session key, first-miss build under a lock. ``pairs`` carries
-    the UNROUNDED exact Jaccard — consumers round or project as their
-    oracles require. At 100 TB this cached table is what
-    ``operators.persistence`` kind ``minhash_signatures`` persists
-    across jobs (the session cache is the within-job half).
+    params), so the verified-pair table goes through `session_cached`
+    like the IVF index (`vectors._ivf_index_cached`): eager
+    localCheckpoint, weak session key, first-miss build under the key's
+    lock. ``pairs`` carries the UNROUNDED exact Jaccard — consumers
+    round or project as their oracles require. At 100 TB this cached
+    table is what ``operators.persistence`` kind ``minhash_signatures``
+    persists across jobs (the session cache is the within-job half).
     """
     from dataframe_differ_spark.operators.session_cache import session_cached
 
@@ -2986,28 +2986,15 @@ FROM stats
 """
 
 
-@register("eval_bleu_pairs", oracle=_BLEU_SQL)
-def q_eval_bleu_pairs(spark, sf_dir):
-    """BLEU-2 (Papineni et al. 2002) for every near-duplicate pair the
-    MinHash detector surfaces (`dedup_near`'s pairs: the lower doc_id is
-    the reference, the higher the candidate — planted truncated twins
-    AND the corpus's natural near-dups): clipped 1/2-gram precisions,
-    brevity penalty, geometric mean. The MT metric applied where a
-    training-data pipeline actually uses it — grading borderline dups
-    before deciding excision vs keep.
-
-    Determinism: precisions are exact-integer ratios (clipped counts /
-    candidate totals); the libm calls (two LNs, the BP exp) round at
-    12 dp and BLEU at 6 (the `quality_lr` device); the m=0 degenerate
-    pins BLEU = 0.0 identically in both engines. Plan: the pair table
-    is tiny (near-dups only) — gram tables semi-join down to used docs
-    first, then every join keys on (pair, gram); nothing quadratic,
-    nothing windowed.
+def _pair_gram_clips(corpus, pairs):
+    """Clipped 1/2-gram overlap of every (doc_a, doc_b) near-dup pair —
+    the shared core of BLEU and ROUGE. Returns ``(c1, c2, tots)``:
+    ``c1`` = (a1, b1, m1) and ``c2`` = (a2, b2, m2), the per-pair sums of
+    min(count in doc_b, count in doc_a) over shared unigrams / bigrams
+    (pairs with no shared gram are absent); ``tots`` = (doc_id, n, tot),
+    each used doc's n-gram total. Gram tables semi-join down to the
+    docs the pairs use first, then every join keys on (pair, n, gram).
     """
-    # Round 10: the detector chain comes from the shared session cache
-    # (`_near_dup_chain_cached`) — previously this query's dominant cost
-    # was rebuilding the identical signature+pair table dedup_near built.
-    corpus, pairs = _near_dup_chain_cached(spark, sf_dir)
     np_pairs = pairs.select("doc_a", "doc_b")
     used = (
         np_pairs.select(F.col("doc_a").alias("id"))
@@ -3064,6 +3051,33 @@ def q_eval_bleu_pairs(spark, sf_dir):
         F.col("doc_a").alias("a2"), F.col("doc_b").alias("b2"),
         F.col("m").alias("m2"),
     )
+    return c1, c2, tots
+
+
+@register("eval_bleu_pairs", oracle=_BLEU_SQL)
+def q_eval_bleu_pairs(spark, sf_dir):
+    """BLEU-2 (Papineni et al. 2002) for every near-duplicate pair the
+    MinHash detector surfaces (`dedup_near`'s pairs: the lower doc_id is
+    the reference, the higher the candidate — planted truncated twins
+    AND the corpus's natural near-dups): clipped 1/2-gram precisions,
+    brevity penalty, geometric mean. The MT metric applied where a
+    training-data pipeline actually uses it — grading borderline dups
+    before deciding excision vs keep.
+
+    Determinism: precisions are exact-integer ratios (clipped counts /
+    candidate totals); the libm calls (two LNs, the BP exp) round at
+    12 dp and BLEU at 6 (the `quality_lr` device); the m=0 degenerate
+    pins BLEU = 0.0 identically in both engines. Plan: the pair table
+    is tiny (near-dups only) — gram tables semi-join down to used docs
+    first, then every join keys on (pair, gram); nothing quadratic,
+    nothing windowed.
+    """
+    # Round 10: the detector chain comes from the shared session cache
+    # (`_near_dup_chain_cached`) — previously this query's dominant cost
+    # was rebuilding the identical signature+pair table dedup_near built.
+    corpus, pairs = _near_dup_chain_cached(spark, sf_dir)
+    np_pairs = pairs.select("doc_a", "doc_b")
+    c1, c2, tots = _pair_gram_clips(corpus, pairs)
     t1r = tots.filter(F.col("n") == 1).select(
         F.col("doc_id").alias("ra"), F.col("tot").alias("len_ref")
     )
@@ -3537,61 +3551,7 @@ def q_eval_rouge_pairs(spark, sf_dir):
     """
     corpus, pairs = _near_dup_chain_cached(spark, sf_dir)
     np_pairs = pairs.select("doc_a", "doc_b")
-    used = (
-        np_pairs.select(F.col("doc_a").alias("id"))
-        .union(np_pairs.select("doc_b"))
-        .distinct()
-    )
-    toks = corpus.join(used, corpus["doc_id"] == used["id"]).select(
-        "doc_id", F.split("text", " ").alias("t")
-    )
-    uni = toks.select(
-        "doc_id", F.lit(1).alias("n"), F.explode("t").alias("gram")
-    )
-    big = toks.select(
-        "doc_id",
-        F.lit(2).alias("n"),
-        F.explode(
-            F.expr(
-                "zip_with(slice(t, 1, size(t) - 1), slice(t, 2, size(t) - 1),"
-                " (a, b) -> concat(a, ' ', b))"
-            )
-        ).alias("gram"),
-    )
-    g = (
-        uni.unionByName(big)
-        .groupBy("doc_id", "n", "gram")
-        .agg(F.count(F.lit(1)).cast("long").alias("c"))
-    )
-    tots = g.groupBy("doc_id", "n").agg(F.sum("c").cast("long").alias("tot"))
-    gc = g.select(
-        F.col("doc_id").alias("_b"), "n", "gram", F.col("c").alias("cc")
-    )
-    gr = g.select(
-        F.col("doc_id").alias("_a"),
-        F.col("n").alias("_n"),
-        F.col("gram").alias("_g"),
-        F.col("c").alias("cr"),
-    )
-    clip = (
-        np_pairs.join(gc, F.col("_b") == F.col("doc_b"))
-        .join(
-            gr,
-            (F.col("_a") == F.col("doc_a"))
-            & (F.col("_n") == F.col("n"))
-            & (F.col("_g") == F.col("gram")),
-        )
-        .groupBy("doc_a", "doc_b", "n")
-        .agg(F.sum(F.least("cc", "cr")).cast("long").alias("m"))
-    )
-    c1 = clip.filter(F.col("n") == 1).select(
-        F.col("doc_a").alias("a1"), F.col("doc_b").alias("b1"),
-        F.col("m").alias("m1"),
-    )
-    c2 = clip.filter(F.col("n") == 2).select(
-        F.col("doc_a").alias("a2"), F.col("doc_b").alias("b2"),
-        F.col("m").alias("m2"),
-    )
+    c1, c2, tots = _pair_gram_clips(corpus, pairs)
 
     def tot_of(n, idc, out):
         return tots.filter(F.col("n") == n).select(

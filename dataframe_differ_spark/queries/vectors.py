@@ -15,8 +15,6 @@ from __future__ import annotations
 
 import os
 import random
-import threading
-import weakref
 
 from pyspark.sql import Window
 from pyspark.sql import functions as F
@@ -51,42 +49,30 @@ def _emb_double(spark, sf_dir):
     )
 
 
-# Per-(session, sf_dir, k) cache of the materialized IVF index. Both IVF
-# consumers (`sim_topk_ivf`, `knn_classify_ivf`) build the identical
-# quantizer; localCheckpoint materializes the Lloyd-iteration jobs ONCE and
-# the second consumer reuses the cached blocks instead of replaying ~3 s of
-# assign/recompute jobs. Weak session key: a stopped session drops its
-# checkpoints with it.
-_IVF_CACHE: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
-# Serializes first-miss builds: concurrent bench threads racing the
-# unguarded setdefault + insert could double-build (and leak) a
-# localCheckpointed index — same hazard class as tables._TABLE_LOCK.
-_IVF_LOCK = threading.Lock()
+def _ivf_index_cached(spark, sf_dir, n_clusters):
+    """(index, centroids) of the IVF coarse quantizer over the sf_dir
+    embeddings, built once per (session, sf_dir, n_clusters) through
+    `session_cached` and shared by every IVF consumer
+    (sim_topk_ivf[_persisted], knn_classify_ivf, dedup_semantic[_sqrtn],
+    vec_ivfpq_topk): the Lloyd-iteration jobs run once instead of ~3 s
+    per consumer.
 
-
-def _ivf_index_cached(spark, sf_dir, e, n_clusters: int):
-    key = (os.path.abspath(sf_dir), n_clusters)
-    with _IVF_LOCK:
-        cache = _IVF_CACHE.setdefault(spark, {})
-        if key not in cache:
-            index, centroids = _ivf_index(e, n_clusters)
-            cache[key] = (
-                index.localCheckpoint(eager=True),
-                centroids.localCheckpoint(eager=True),
-            )
-        return cache[key]
-
-
-def _ivf_index(e, n_clusters: int):
-    """IVF coarse quantizer — thin binding over the parametric operator
-    :func:`~dataframe_differ_spark.operators.similarity.ivf_index` (round-5
-    extraction; the algorithm docstring lives there). Deterministic
-    md5-ordered seeding + one sequential-fold Lloyd iteration, so the whole
-    chain is bit-reproducible across engines — what keeps sim_topk_ivf /
-    knn_classify_ivf / dedup_semantic FULL-oracle. Shared via
-    `_ivf_index_cached` by all IVF consumers.
+    Thin binding over
+    :func:`~dataframe_differ_spark.operators.similarity.ivf_index` (the
+    algorithm docstring lives there). Deterministic md5-ordered
+    seeding + one sequential-fold Lloyd iteration, so the whole chain is
+    bit-reproducible across engines — what keeps these consumers
+    FULL-oracle. ``n_clusters=None`` derives K from the corpus size.
     """
-    return ivf_index(e, "vec_id", "e", n_clusters=n_clusters)
+    from dataframe_differ_spark.operators.session_cache import session_cached
+
+    return session_cached(
+        spark,
+        ("ivf_index", os.path.abspath(sf_dir), n_clusters),
+        lambda: ivf_index(
+            _emb_double(spark, sf_dir), "vec_id", "e", n_clusters=n_clusters
+        ),
+    )
 
 
 @register(
@@ -380,7 +366,7 @@ def q_sim_topk_lsh(spark, sf_dir):
     ).withColumn("cos_sim", F.round("cos_sim", 9))
 
 
-# DuckDB twin of the ENTIRE _ivf_index chain (seeds → assign → Lloyd mean
+# DuckDB twin of the ENTIRE ivf_index chain (seeds → assign → Lloyd mean
 # → normalize → reassign). Portable because every float reduction in the
 # Spark quantizer is a defined-order sequential fold: dots are
 # aggregate(zip_with) ≡ list_reduce, the Lloyd mean is a running-window
@@ -483,7 +469,7 @@ def q_sim_topk_ivf(spark, sf_dir):
     # >0.9 recall at nprobe=2. The knob is the recall/cost dial.
     n_clusters, n_probe, k = 16, 6, 10
     e = _emb_double(spark, sf_dir)
-    index, centroids = _ivf_index_cached(spark, sf_dir, e, n_clusters)
+    index, centroids = _ivf_index_cached(spark, sf_dir, n_clusters)
     queries = e.filter(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("query_id"), F.col("e").alias("qe")
     )
@@ -519,7 +505,7 @@ def q_sim_topk_ivf_persisted(spark, sf_dir):
 
     n_clusters, n_probe, k = 16, 6, 10
     e = _emb_double(spark, sf_dir)
-    _, centroids = _ivf_index_cached(spark, sf_dir, e, n_clusters)
+    _, centroids = _ivf_index_cached(spark, sf_dir, n_clusters)
     path = run_scoped_artifact_path("ivf", sf_dir)
     save_artifact(
         centroids, path, "ivf_centroids",
@@ -842,8 +828,9 @@ def q_dedup_semantic(spark, sf_dir):
     canonical.
 
     Reuses the shared bit-reproducible IVF coarse quantizer
-    (`_ivf_index_cached` — built once per (session, sf_dir) and shared with
-    sim_topk_ivf / knn_classify_ivf), so clustering costs nothing extra
+    (`_ivf_index_cached` — built once per (session, sf_dir, K) through
+    `session_cached` and shared with sim_topk_ivf / knn_classify_ivf),
+    so clustering costs nothing extra
     here. The corpus has no natural near-dups (max natural cosine ~0.47),
     so duplicates are planted with the sim_join_lsh integer-formula noise
     (cos ~0.993) and assigned to clusters through the same broadcast
@@ -853,7 +840,7 @@ def q_dedup_semantic(spark, sf_dir):
     """
     n_clusters = 16
     e = _emb_double(spark, sf_dir).select("vec_id", "e")
-    _, centroids = _ivf_index_cached(spark, sf_dir, e, n_clusters)
+    _, centroids = _ivf_index_cached(spark, sf_dir, n_clusters)
     noise = _SJL_NOISE.format(vid="vec_id", i="i")
     planted = e.filter(F.col("vec_id") % 7 == 0).select(
         (F.col("vec_id") + 100000).alias("vec_id"),
@@ -975,7 +962,7 @@ def q_dedup_semantic_sqrtn(spark, sf_dir):
     `dedup_semantic`; quantizer cached per (session, sf_dir, None).
     """
     e = _emb_double(spark, sf_dir).select("vec_id", "e")
-    index, centroids = _ivf_index_cached(spark, sf_dir, e, None)
+    index, centroids = _ivf_index_cached(spark, sf_dir, None)
     noise = _SJL_NOISE.format(vid="vec_id", i="i")
     planted = e.filter(F.col("vec_id") % 7 == 0).select(
         (F.col("vec_id") + 100000).alias("vec_id"),
@@ -1039,7 +1026,7 @@ def q_knn_classify_ivf(spark, sf_dir):
 
     Round 1's `knn_classify` verdict: brute-force query×corpus pairs are
     13× wall at 10× data; the IVF sibling existed but only for search.
-    This routes CANDIDATE GENERATION through the shared `_ivf_index`
+    This routes CANDIDATE GENERATION through the shared `_ivf_index_cached`
     coarse quantizer (nprobe=6 of 16 clusters → ~37% of the corpus
     scored per query instead of 100%, and at 100 TB the cluster id is
     the on-disk partition key so the other 63% is never read), then
@@ -1049,7 +1036,7 @@ def q_knn_classify_ivf(spark, sf_dir):
     """
     n_clusters, n_probe, k = 16, 6, 5
     e = _emb_double(spark, sf_dir)
-    index, centroids = _ivf_index_cached(spark, sf_dir, e, n_clusters)
+    index, centroids = _ivf_index_cached(spark, sf_dir, n_clusters)
     labels = e.select("vec_id", "label")
     q = (
         e.filter(F.col("vec_id") % 29 == 0)
@@ -1937,10 +1924,10 @@ def q_ann_drift_refresh(spark, sf_dir):
     )
 
     # Both quantizers + both posting-list assignments materialize once per
-    # (session, sf_dir) — the `_ivf_index_cached` discipline: each
-    # centroid table is consumed twice (assignment + probe ranking), and
-    # without the checkpoint Spark would replay the Lloyd chain (and its
-    # 16-row post-limit seed windows) per consumer.
+    # (session, sf_dir) through `session_cached`, as `_ivf_index_cached`
+    # does: each centroid table is consumed twice (assignment + probe
+    # ranking), and without the checkpoint Spark would replay the Lloyd
+    # chain (and its 16-row post-limit seed windows) per consumer.
     cent_old, idx_old, cent_new, idx_new = _adr_indexes_cached(spark, sf_dir)
 
     qs = drifted.filter(F.col("vec_id") < 100).select(

@@ -161,31 +161,89 @@ def test_stream_ann_ingest_partials_merge_exactly(spark, sf_small):
     assert out.agg(F.sum("n_assigned")).collect()[0][0] == drifted.count()
 
 
-def test_session_cached_skips_recheckpoint_and_drops_lock(spark):
-    """ADVICE r10 items: a builder returning an ALREADY-checkpointed
-    frame must not be re-checkpointed (same object handed back), and a
-    key's build lock must be dropped once its cache slot is populated."""
+def test_session_cached_checkpoints_every_frame_and_drops_lock(spark):
+    """Every frame a builder returns is checkpointed eagerly inside
+    `session_cached`, a lazily-cut one included: it analyzes to a bare
+    LogicalRDD like a materialized frame, so passing it through would
+    leave its build to the first consumer, outside the key's lock. A
+    key's build lock is dropped once its cache slot is populated."""
     from dataframe_differ_spark.operators import session_cache as sc
 
-    key = ("r11_test_chain", "x")
-    pre = spark.range(5).localCheckpoint(eager=True)
-    built = {}
-
-    def build():
-        lazy = spark.range(3).selectExpr("id * 2 AS id")
-        built["frames"] = (pre, lazy)
-        return (pre, lazy)
-
-    got = sc.session_cached(spark, key, build)
-    # pre-checkpointed frame passed through untouched; lazy frame got
-    # materialized into a new checkpointed frame
-    assert got[0] is pre
-    assert got[1] is not built["frames"][1]
+    key = ("session_cached_test_chain", "x")
+    lazy_cut = spark.range(5).localCheckpoint(eager=False)
+    lazy = spark.range(3).selectExpr("id * 2 AS id")
+    ctx = spark.sparkContext
+    group = "session_cached_test_build"
+    ctx.setJobGroup(group, group)
+    try:
+        got = sc.session_cached(spark, key, lambda: (lazy_cut, lazy))
+    finally:
+        ctx.setLocalProperty("spark.jobGroup.id", None)
+    assert got[0] is not lazy_cut
+    assert got[1] is not lazy
+    # one materialization job per frame ran inside session_cached
+    assert len(ctx.statusTracker().getJobIdsForGroup(group)) >= 2
+    assert sorted(r.id for r in got[0].collect()) == [0, 1, 2, 3, 4]
     assert sorted(r.id for r in got[1].collect()) == [0, 2, 4]
     # the per-key lock entry is gone once the slot is populated
     assert key not in sc._KEY_LOCKS.get(spark, {})
     # second call is a pure cache hit
     assert sc.session_cached(spark, key, lambda: 1 / 0) is got
+
+
+def test_ivf_index_and_copurchase_edges_use_session_cache(spark, sf_small):
+    """The IVF quantizer and the co-purchase edge list live in the one
+    per-session frame cache: emptying it for the session (a cold run)
+    makes both rebuild into new frames with the same rows, under keys
+    that show up in `session_cache._CACHE`."""
+    import os
+
+    from dataframe_differ_spark.operators import session_cache as sc
+    from dataframe_differ_spark.queries.composites import copurchase_edges
+    from dataframe_differ_spark.queries.vectors import _ivf_index_cached
+
+    def build():
+        return (copurchase_edges(spark, sf_small),) + tuple(
+            _ivf_index_cached(spark, sf_small, 16)
+        )
+
+    before = build()
+    sc._CACHE.pop(spark, None)
+    after = build()
+    for old, new in zip(before, after):
+        assert new is not old
+        assert _rows(new) == _rows(old)
+    keys = set(sc._CACHE[spark])
+    assert ("copurchase_edges", os.path.abspath(sf_small)) in keys
+    assert ("ivf_index", os.path.abspath(sf_small), 16) in keys
+    assert copurchase_edges(spark, sf_small) is after[0]
+
+
+def test_weak_session_caches_only_in_session_cache_and_tables():
+    # session_cached is the one per-session frame cache; tables keeps its
+    # scan-plan cache. A WeakKeyDictionary anywhere else is a hand-rolled
+    # cache that session-cache resets and counters would miss.
+    import ast
+    import pathlib
+
+    import dataframe_differ_spark
+
+    root = pathlib.Path(dataframe_differ_spark.__file__).parent
+
+    def weak_dicts(tree):
+        return any(
+            isinstance(n, ast.Call)
+            and getattr(n.func, "attr", getattr(n.func, "id", None))
+            == "WeakKeyDictionary"
+            for n in ast.walk(tree)
+        )
+
+    users = {
+        p.relative_to(root).as_posix()
+        for p in root.rglob("*.py")
+        if weak_dicts(ast.parse(p.read_text()))
+    }
+    assert users == {"operators/session_cache.py", "tables.py"}
 
 
 from hypothesis import HealthCheck, given, settings

@@ -316,8 +316,8 @@ def test_streaming_conf_survives_concurrent_starts(spark, sf_small):
         "source_python_datasource",
         # Session-scoped state added round 4 cont.: the recursive-CTE
         # query registers a temp view (idempotent re-register under
-        # concurrency), and dedup_semantic goes through the _IVF_LOCKed
-        # checkpoint cache on a first miss.
+        # concurrency), and dedup_semantic goes through the per-key
+        # build lock of session_cached on a first miss.
         "sql_recursive_components",
         "dedup_semantic",
     ]
