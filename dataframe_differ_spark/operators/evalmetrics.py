@@ -35,6 +35,8 @@ operators' semantics release over release.
 
 from __future__ import annotations
 
+from functools import reduce
+from operator import and_
 from typing import Sequence
 
 from pyspark.sql import DataFrame
@@ -411,19 +413,37 @@ def pairs_pr(
     (ratios unrounded).
 
     The dedup/blocking-quality scorecard: ``candidates`` and ``truth``
-    hold canonical pair keys (e.g. doc_a < doc_b). tp is one equi-join +
-    count; F1 = 2pr/(p+r) collapses algebraically to
+    hold canonical pair keys (e.g. doc_a < doc_b). Both sides are tagged,
+    unioned and counted per key in ONE aggregate (``nt`` truth rows,
+    ``nc`` candidate rows); a global sum then gives n_truth = Σnt,
+    n_cand = Σnc and tp = Σ nt·nc over keys with no NULL part — exactly
+    the row count of the inner equi-join, duplicate pairs included, with
+    each side scanned once. Every sum is coalesced to 0, so an empty side
+    scores 0, not NULL. F1 = 2pr/(p+r) collapses algebraically to
     2·tp/(n_cand + n_truth) — pure BIGINT counts, three final divisions.
     """
     _check_reserved(candidates)
     _check_reserved(truth)
     keys = list(key_cols)
-    tp_df = truth.select(*keys).join(candidates.select(*keys), keys).agg(
-        F.count(F.lit(1)).alias("tp")
+    side = F.col("_ev_t")
+    per_key = (
+        truth.select(*keys, F.lit(True).alias("_ev_t"))
+        .unionByName(candidates.select(*keys, F.lit(False).alias("_ev_t")))
+        .groupBy(*keys)
+        .agg(
+            F.count_if(side).alias("_ev_nt"),
+            F.count_if(~side).alias("_ev_nc"),
+        )
     )
-    n_truth = truth.agg(F.count(F.lit(1)).alias("n_truth"))
-    n_cand = candidates.agg(F.count(F.lit(1)).alias("n_cand"))
-    cnt = n_truth.crossJoin(F.broadcast(n_cand)).crossJoin(F.broadcast(tp_df))
+    joinable = reduce(and_, (F.col(k).isNotNull() for k in keys), F.lit(True))
+    cnt = per_key.agg(
+        F.coalesce(F.sum("_ev_nt"), F.lit(0)).alias("n_truth"),
+        F.coalesce(F.sum("_ev_nc"), F.lit(0)).alias("n_cand"),
+        F.coalesce(
+            F.sum(F.when(joinable, F.col("_ev_nt") * F.col("_ev_nc"))),
+            F.lit(0),
+        ).alias("tp"),
+    )
     return cnt.select(
         "n_truth",
         "n_cand",

@@ -195,7 +195,7 @@ def _run_stream_dedup_persisted(spark, sf_dir):
     split_dir = split_frame_files(
         "docsbatch", sf_dir, 4, lambda: batch, "doc_id"
     )
-    stream = replay_stream(spark, split_dir, 1)
+    stream = replay_stream(spark, split_dir, 1, batch.schema)
 
     run_tag = uuid.uuid4().hex[:8]
     cand_log = os.path.join(tempfile.gettempdir(), f"ddspark_sdp_cand_{run_tag}")
@@ -415,7 +415,7 @@ FROM dots GROUP BY cluster_id
         split_dir = split_frame_files(
             "embdrift", sf_dir, 4, lambda: drifted, "vec_id"
         )
-        stream = replay_stream(spark, split_dir, 1)
+        stream = replay_stream(spark, split_dir, 1, drifted.schema)
 
         mon_log = os.path.join(
             tempfile.gettempdir(), f"ddspark_sai_mon_{uuid.uuid4().hex[:8]}"

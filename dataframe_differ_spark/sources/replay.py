@@ -29,8 +29,9 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
-from dataframe_differ_spark.tables import load_table
+from dataframe_differ_spark.tables import load_table, parquet_read_schema
 
 _SPLIT_CACHE: dict[tuple[str, str, int], str] = {}
 _SPLIT_LOCK = threading.Lock()
@@ -113,6 +114,13 @@ def split_frame_files(
         return out
 
 
+def _events_split_build(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The events frame the split writes: ts normalized ns→µs."""
+    return load_table(spark, sf_dir, "events").withColumn(
+        "ts", F.col("ts").cast("timestamp")
+    )
+
+
 def split_events_files(spark: SparkSession, sf_dir: str, n_files: int = 8) -> str:
     """Materialize events as ``n_files`` parquet part-files; return the dir.
 
@@ -121,13 +129,10 @@ def split_events_files(spark: SparkSession, sf_dir: str, n_files: int = 8) -> st
     schema without the nanosAsLong detour. Hash-split on event_id:
     every micro-batch sees a mix of users and event times.
     """
-
-    def build() -> DataFrame:
-        return load_table(spark, sf_dir, "events").withColumn(
-            "ts", F.col("ts").cast("timestamp")
-        )
-
-    return split_frame_files("events", sf_dir, n_files, build, "event_id")
+    return split_frame_files(
+        "events", sf_dir, n_files, lambda: _events_split_build(spark, sf_dir),
+        "event_id",
+    )
 
 
 def incremental_events_stream(
@@ -140,19 +145,23 @@ def incremental_events_stream(
     batch boundaries, not just within one.
     """
     return replay_stream(
-        spark, split_events_files(spark, sf_dir, n_files), files_per_trigger
+        spark,
+        split_events_files(spark, sf_dir, n_files),
+        files_per_trigger,
+        _events_split_build(spark, sf_dir).schema,
     )
 
 
 def replay_stream(
-    spark: SparkSession, path: str, files_per_trigger: int
+    spark: SparkSession, path: str, files_per_trigger: int, schema: StructType
 ) -> DataFrame:
     """readStream over a split parquet dir, ``files_per_trigger`` files per
-    micro-batch. The schema is read once from the batch files (a file
-    stream cannot infer it)."""
-    schema = spark.read.parquet(path).schema
+    micro-batch. ``schema`` is the schema of the frame the split was
+    written from; it is read back all-nullable, as a parquet read reports
+    it, so no job runs to infer it from the files (a file stream cannot
+    infer a schema itself)."""
     return (
-        spark.readStream.schema(schema)
+        spark.readStream.schema(parquet_read_schema(schema))
         .option("maxFilesPerTrigger", str(files_per_trigger))
         .parquet(path)
     )

@@ -21,6 +21,8 @@ import tempfile
 import threading
 import uuid
 
+from dataframe_differ_spark.tables import parquet_read_schema
+
 #: Serializes the save→set→start→await→restore sections that temporarily
 #: retarget session-wide ``spark.sql.shuffle.partitions`` for stateful
 #: streaming starts. Without it, two streaming queries pipelined on bench
@@ -51,7 +53,8 @@ def run_available_now(df, prefix: str, *, mode="append", foreach_batch=None, pat
     """Run streaming ``df`` to completion with ``trigger(availableNow=True)``.
 
     The sink is ``foreach_batch`` (a ``(batch_df, batch_id)`` callable) if
-    given, else parquet files under ``path`` (returned read back), else a
+    given, else parquet files under ``path`` (returned read back with
+    ``df``'s schema made nullable, so no job infers it), else a
     memory table named ``<prefix>_<uuid>`` (returned as ``spark.table``).
     ``mode`` is the output mode. Progress is recorded under ``prefix``.
 
@@ -91,4 +94,6 @@ def run_available_now(df, prefix: str, *, mode="append", foreach_batch=None, pat
             shutil.rmtree(ckpt, ignore_errors=True)
     if foreach_batch is not None:
         return None
-    return spark.read.parquet(path) if path is not None else spark.table(name)
+    if path is not None:
+        return spark.read.schema(parquet_read_schema(df.schema)).parquet(path)
+    return spark.table(name)

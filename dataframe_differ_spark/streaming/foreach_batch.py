@@ -17,6 +17,13 @@ the merge stays effectively exactly-once, matching the guarantee a MERGE
 INTO sink gives on a real cluster. The base version is found on disk, not
 held in memory, so this holds for a fresh sink after a restart too.
 
+Each merge is ONE aggregate: the batch rows are projected to the snapshot
+shape ``(key…, last_value, last_ts, last_event_id, n_events = 1)``,
+unioned with the base snapshot, and grouped once per key — ``max_by`` over
+``(ts, tiebreak)`` for the latest value and ``sum`` for the running count.
+Snapshots are read back with the analyzed schema of that aggregate (all
+nullable, as parquet reports it), so no read runs a schema-inference job.
+
 Scale: the merge is a key-partitioned shuffle of (current ∪ batch) — at
 100 TB the current table would be bucketed/Z-ordered by key so the merge
 touches only affected partitions; here AQE sizes the local shuffle.
@@ -28,6 +35,8 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from dataframe_differ_spark.tables import parquet_read_schema
 
 
 class UpsertMergeSink:
@@ -55,6 +64,7 @@ class UpsertMergeSink:
         self.value_col = value_col
         self.current_path: str | None = None
         self._batch_ids: set[int] = set()
+        self._schema = None
 
     @property
     def n_batches(self) -> int:
@@ -75,22 +85,21 @@ class UpsertMergeSink:
         ]
         return self._version_path(max(ids)) if ids else None
 
-    def _latest(self, df: DataFrame, v: str, t: str, e: str) -> DataFrame:
-        """Per-key latest (value, ts, tiebreak) + count contribution."""
-        latest = F.expr(f"max_by(struct({v}, {t}, {e}), struct({t}, {e}))")
+    def _merge(self, df: DataFrame) -> DataFrame:
+        """Per key, the latest (value, ts, tiebreak) and the event count of
+        rows already in snapshot shape, in ONE aggregate."""
+        latest = F.expr(
+            "max_by(struct(last_value, last_ts, last_event_id), "
+            "struct(last_ts, last_event_id))"
+        )
         return (
             df.groupBy(*self.keys)
-            .agg(
-                latest.alias("_latest"),
-                F.sum(F.col("n_events") if "n_events" in df.columns else F.lit(1)).alias(
-                    "n_events"
-                ),
-            )
+            .agg(latest.alias("_latest"), F.sum("n_events").alias("n_events"))
             .select(
                 *self.keys,
-                F.col(f"_latest.{v}").alias("last_value"),
-                F.col(f"_latest.{t}").alias("last_ts"),
-                F.col(f"_latest.{e}").alias("last_event_id"),
+                "_latest.last_value",
+                "_latest.last_ts",
+                "_latest.last_event_id",
                 "n_events",
             )
         )
@@ -99,21 +108,25 @@ class UpsertMergeSink:
         # Runs on the driver once per micro-batch; batch_df is a normal
         # batch DataFrame planned by Catalyst like any other.
         spark = batch_df.sparkSession
-        merged = self._latest(
-            batch_df, self.value_col, self.ts_col, self.tiebreak_col
+        rows = batch_df.select(
+            *self.keys,
+            F.col(self.value_col).alias("last_value"),
+            F.col(self.ts_col).alias("last_ts"),
+            F.col(self.tiebreak_col).alias("last_event_id"),
+            F.lit(1).cast("long").alias("n_events"),
         )
+        # Analysis only, no job: the same batch frame gives the same schema
+        # to a fresh sink after a restart.
+        self._schema = parquet_read_schema(self._merge(rows).schema)
         base = self._base_version(batch_id)
         if base is not None:
-            cur = spark.read.parquet(base)
-            merged = self._latest(
-                cur.unionByName(merged), "last_value", "last_ts", "last_event_id"
-            )
+            rows = rows.unionByName(spark.read.schema(self._schema).parquet(base))
         new_path = self._version_path(batch_id)
-        merged.write.mode("overwrite").parquet(new_path)
+        self._merge(rows).write.mode("overwrite").parquet(new_path)
         self.current_path = new_path
         self._batch_ids.add(int(batch_id))
 
     def result(self, spark: SparkSession) -> DataFrame:
         if self.current_path is None:
             raise RuntimeError("sink saw no batches")
-        return spark.read.parquet(self.current_path)
+        return spark.read.schema(self._schema).parquet(self.current_path)

@@ -12,6 +12,7 @@ import threading
 import weakref
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import ArrayType, DataType, MapType, StructField, StructType
 
 from dataframe_differ_spark.session import configure_session
 
@@ -81,3 +82,26 @@ def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     """Load every corpus table as a lazy DataFrame keyed by name."""
     configure_session(spark)
     return {name: spark.read.parquet(f"{sf_dir}/{name}.parquet") for name in TABLE_NAMES}
+
+
+def parquet_read_schema(schema: DataType) -> DataType:
+    """``schema`` as a parquet read reports it: every field nullable, nested
+    ones too. Passing it to ``spark.read.schema`` / ``readStream.schema``
+    reads back parquet the program wrote itself without the schema-inference
+    job a bare ``spark.read.parquet`` runs."""
+    if isinstance(schema, StructType):
+        return StructType(
+            [
+                StructField(f.name, parquet_read_schema(f.dataType), True, f.metadata)
+                for f in schema.fields
+            ]
+        )
+    if isinstance(schema, ArrayType):
+        return ArrayType(parquet_read_schema(schema.elementType), True)
+    if isinstance(schema, MapType):
+        return MapType(
+            parquet_read_schema(schema.keyType),
+            parquet_read_schema(schema.valueType),
+            True,
+        )
+    return schema

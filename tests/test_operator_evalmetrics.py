@@ -14,6 +14,8 @@ import math
 import random
 
 import pytest
+from hypothesis import HealthCheck, example, given, settings
+from hypothesis import strategies as st
 from pyspark.sql import Row
 
 from dataframe_differ_spark.operators.evalmetrics import (
@@ -153,6 +155,34 @@ def test_pairs_pr(spark):
     assert got.precision == pytest.approx(2 / 3)
     assert got.recall == pytest.approx(0.5)
     assert got.f1 == pytest.approx(2 * 2 / (3 + 4))
+
+
+# Pair keys from a tiny domain with NULL parts, so duplicates, NULL keys and
+# matches all turn up; an empty side is in the domain too.
+_pair_key = st.one_of(st.none(), st.integers(min_value=0, max_value=2))
+_pairs = st.lists(st.tuples(_pair_key, _pair_key), max_size=8)
+
+
+@settings(
+    max_examples=10,
+    deadline=None,
+    suppress_health_check=[HealthCheck.too_slow, HealthCheck.function_scoped_fixture],
+)
+@given(truth=_pairs, cand=_pairs)
+@example(truth=[], cand=[(1, 2)])
+@example(truth=[(1, 2), (1, 2), (None, 2)], cand=[(1, 2), (1, 2), (None, 2)])
+def test_pairs_pr_matches_inner_join_reference(spark, truth, cand):
+    # Reference: the row counts of each side and the row count of the
+    # inner equi-join (NULL never matches, duplicates multiply).
+    schema = "a int, b int"
+    got = pairs_pr(
+        spark.createDataFrame(cand, schema),
+        spark.createDataFrame(truth, schema),
+        ["a", "b"],
+    ).collect()[0]
+    tp = sum(t == c and None not in t for t in truth for c in cand)
+    assert (got.n_truth, got.n_cand, got.tp) == (len(truth), len(cand), tp)
+    assert (got.fp, got.fn) == (len(cand) - tp, len(truth) - tp)
 
 
 def test_reserved_prefix_rejected(spark):

@@ -289,6 +289,62 @@ def test_upsert_merge_sink_replayed_batch_is_idempotent(spark, tmp_path):
     assert once[1] == 2 and dict((r[0], r[4]) for r in once[0]) == {1: 2, 2: 1}
 
 
+def test_upsert_merge_sink_fresh_sink_merges_onto_disk_version(spark, tmp_path):
+    # After a restart a NEW sink on the same dir has seen no batch: it must
+    # derive the snapshot schema from the batch frame alone, read v00000
+    # from disk and merge batch 1 onto it exactly as a single sink does.
+    from datetime import datetime
+
+    from dataframe_differ_spark.streaming.foreach_batch import UpsertMergeSink
+
+    schema = "user_id bigint, ts timestamp, event_id bigint, value double"
+    b0 = spark.createDataFrame(
+        [(1, datetime(2024, 1, 1, 0), 1, 1.0), (2, datetime(2024, 1, 1, 0), 2, 2.0)],
+        schema,
+    )
+    b1 = spark.createDataFrame(
+        [(1, datetime(2024, 1, 1, 1), 3, 3.0), (3, datetime(2024, 1, 1, 2), 4, 4.0)],
+        schema,
+    )
+    cols = ["user_id", "last_value", "last_ts", "last_event_id", "n_events"]
+
+    single = UpsertMergeSink(str(tmp_path / "single"), keys=["user_id"])
+    single(b0, 0)
+    single(b1, 1)
+
+    restarted_dir = str(tmp_path / "restarted")
+    UpsertMergeSink(restarted_dir, keys=["user_id"])(b0, 0)
+    fresh = UpsertMergeSink(restarted_dir, keys=["user_id"])
+    fresh(b1, 1)
+
+    want, got = single.result(spark), fresh.result(spark)
+    assert got.schema == want.schema
+    assert _rows(got, cols) == _rows(want, cols)
+    assert dict((r[0], r[4]) for r in _rows(got, cols)) == {1: 2, 2: 1, 3: 1}
+
+
+def test_replay_stream_schema_equals_parquet_read_of_split(
+    spark, sf_small, tmp_path
+):
+    # The stream schema is the split frame's, made nullable, with no read
+    # of the files; it must be exactly what a parquet read reports.
+    from dataframe_differ_spark.sources.replay import (
+        incremental_events_stream,
+        replay_stream,
+        split_events_files,
+    )
+
+    path = split_events_files(spark, sf_small, 8)
+    stream = incremental_events_stream(spark, sf_small, n_files=8)
+    assert stream.schema == spark.read.parquet(path).schema
+
+    # spark.range's id is NOT NULL; a parquet read reports it nullable.
+    src = str(tmp_path / "range")
+    spark.range(10).write.parquet(src)
+    stream = replay_stream(spark, src, 1, spark.range(10).schema)
+    assert stream.schema == spark.read.parquet(src).schema
+
+
 def test_ivf_recall_vs_brute_force(spark, sf_small, registry):
     brute = registry["sim_topk"].fn(spark, sf_small)
     ivf = registry["sim_topk_ivf"].fn(spark, sf_small)
@@ -622,7 +678,11 @@ def test_stream_runner_failure_restores_conf_and_removes_checkpoint(
     prior = spark.conf.get("spark.sql.shuffle.partitions")
     before = _ckpt_dirs()
     with pytest.raises(Exception, match="boom in foreach_batch"):
-        run_available_now(replay_stream(spark, src, 1), "boom", foreach_batch=boom)
+        run_available_now(
+            replay_stream(spark, src, 1, spark.range(10).schema),
+            "boom",
+            foreach_batch=boom,
+        )
     assert spark.conf.get("spark.sql.shuffle.partitions") == prior
     assert not _ckpt_dirs() - before
 

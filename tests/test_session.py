@@ -1,5 +1,6 @@
 """Session factory: the codegen cache holds a session's generated classes, so
-a query run again in the same session does not compile them again."""
+a query run again in the same session does not compile them again. The
+dedup-store queries also keep to a budget of Spark jobs per warm run."""
 
 from __future__ import annotations
 
@@ -16,6 +17,16 @@ DEDUP_STORE = (
     "stream_foreach_batch",
 )
 THRASHING_COMPILES = 141
+
+# Spark jobs of one warm run of the dedup-store queries whose summaries are
+# one tag-union-aggregate pass (measured at sf0.001 on 4 cores). A join of
+# separately aggregated sides, or a schema-inference read of parquet the
+# program wrote itself, adds jobs and fails this budget.
+JOB_BUDGET = {
+    "eval_dedup_pr": 6,
+    "sketch_bloom_persisted": 12,
+    "stream_foreach_batch": 9,
+}
 
 
 def test_codegen_cache_size_is_set(spark):
@@ -47,3 +58,20 @@ def test_repeat_round_reuses_compiled_classes(spark, sf_small):
     # order query stages are created), and the stage id is part of the
     # generated source, so identical code can miss the cache under a new id.
     assert run_round() <= THRASHING_COMPILES // 4
+
+
+def test_dedup_store_job_budget(spark, sf_small):
+    registry = load_all()
+    dag = spark._jsc.sc().dagScheduler()
+
+    def jobs(name: str) -> int:
+        before = dag.numTotalJobs()
+        registry[name].fn(spark, sf_small).write.format("noop").mode(
+            "overwrite"
+        ).save()
+        return dag.numTotalJobs() - before
+
+    for name in JOB_BUDGET:
+        jobs(name)
+    warm = {name: jobs(name) for name in JOB_BUDGET}
+    assert all(warm[name] <= JOB_BUDGET[name] for name in JOB_BUDGET), warm

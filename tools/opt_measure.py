@@ -8,9 +8,12 @@ Usage:
 
 Each query runs N_REPS times (default 3, env OPT_REPS); the MIN is reported
 (host-noise discipline from bench.py). The first rep on a fresh session pays
-any session-cache build — both cold and warm mins are printed. Next to each
-rep's time goes its codegen compile count (``CodegenMetrics`` compilation
-count delta), so a cold and a warm rep show whether compilation was paid.
+any session-cache build — both cold and warm mins are printed. Each rep is
+printed as ``time/compiles/jobs``: its codegen compile count
+(``CodegenMetrics`` compilation count delta), so a cold and a warm rep show
+whether compilation was paid, and its Spark job count (the
+``DAGScheduler.numTotalJobs()`` delta), the jobs-per-query figure without a
+trace.
 """
 
 from __future__ import annotations
@@ -43,6 +46,7 @@ def main() -> None:
     registry = load_all()
     os.makedirs(PLANS_DIR, exist_ok=True)
     codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    dag = spark._jsc.sc().dagScheduler()
 
     def compiles() -> int:
         return codegen.METRIC_COMPILATION_TIME().getCount()
@@ -52,11 +56,13 @@ def main() -> None:
         times, reps = [], []
         for rep in range(N_REPS):
             spark.sparkContext.setJobDescription(f"opt:{name}:rep{rep}")
-            c0, t0 = compiles(), time.time()
+            c0, j0, t0 = compiles(), dag.numTotalJobs(), time.time()
             df = q.fn(spark, SF_DIR)
             df.write.format("noop").mode("overwrite").save()
             times.append(round(time.time() - t0, 3))
-            reps.append(f"{times[-1]:.3f}s/{compiles() - c0}c")
+            reps.append(
+                f"{times[-1]:.3f}s/{compiles() - c0}c/{dag.numTotalJobs() - j0}j"
+            )
         spark.sparkContext.setJobDescription(None)
         if not time_only:
             plan = df._jdf.queryExecution().explainString(
@@ -70,7 +76,7 @@ def main() -> None:
         print(
             f"{name}: cold {times[0]:.3f}s, warm-min "
             f"{min(times[1:]) if len(times) > 1 else float('nan'):.3f}s, "
-            f"all (time/codegen compiles) {' '.join(reps)}"
+            f"all (time/codegen compiles/jobs) {' '.join(reps)}"
         )
 
 
