@@ -126,6 +126,23 @@ def ks_test(
     )
 
 
+def _cohort_counts(df: DataFrame, item_col: str, is_base_col: str):
+    """Per item ``cnt_base``/``cnt_cur`` with the cohort totals
+    ``n_base``/``n_cur`` broadcast onto every row, and the share columns
+    p = cnt_base/n_base and q = cnt_cur/n_cur."""
+    _check_reserved(df)
+    per = df.groupBy(F.col(item_col)).agg(
+        F.sum(F.when(F.col(is_base_col), 1).otherwise(0)).alias("cnt_base"),
+        F.sum(F.when(F.col(is_base_col), 0).otherwise(1)).alias("cnt_cur"),
+    )
+    tot = per.agg(
+        F.sum("cnt_base").alias("n_base"), F.sum("cnt_cur").alias("n_cur")
+    )
+    p = F.col("cnt_base").cast("double") / F.col("n_base")
+    q = F.col("cnt_cur").cast("double") / F.col("n_cur")
+    return per.crossJoin(F.broadcast(tot)), p, q
+
+
 def js_divergence(
     df: DataFrame,
     item_col: str,
@@ -147,27 +164,14 @@ def js_divergence(
     are broadcast back onto every row; take a TakeOrdered top-N of
     ``contrib`` for the diverging-items report.
     """
-    _check_reserved(df)
-    per = df.groupBy(F.col(item_col)).agg(
-        F.sum(F.when(F.col(is_base_col), 1).otherwise(0)).alias("cnt_base"),
-        F.sum(F.when(F.col(is_base_col), 0).otherwise(1)).alias("cnt_cur"),
-    )
-    tot = per.agg(
-        F.sum("cnt_base").alias("n_base"), F.sum("cnt_cur").alias("n_cur")
-    )
-    p = F.col("cnt_base").cast("double") / F.col("n_base")
-    q = F.col("cnt_cur").cast("double") / F.col("n_cur")
+    counts, p, q = _cohort_counts(df, item_col, is_base_col)
     m = 0.5 * (p + q)
     contrib = F.round(
         0.5 * F.when(F.col("cnt_base") > 0, p * F.log(p / m)).otherwise(0.0)
         + 0.5 * F.when(F.col("cnt_cur") > 0, q * F.log(q / m)).otherwise(0.0),
         contrib_dp,
     )
-    c = (
-        per.crossJoin(F.broadcast(tot))
-        .withColumn("contrib", contrib)
-        .localCheckpoint(eager=False)
-    )
+    c = counts.withColumn("contrib", contrib).localCheckpoint(eager=False)
     j = c.agg(
         F.count(F.lit(1)).alias("vocab_size"),
         F.sum(F.col("contrib").cast(f"decimal(38,{contrib_dp})"))
@@ -211,22 +215,9 @@ def hellinger(
     Scale shape: ONE groupBy(item) shuffle with map-side combine builds
     both counts in a single pass; totals and BC are 1-row broadcasts.
     """
-    _check_reserved(df)
-    per = df.groupBy(F.col(item_col)).agg(
-        F.sum(F.when(F.col(is_base_col), 1).otherwise(0)).alias("cnt_base"),
-        F.sum(F.when(F.col(is_base_col), 0).otherwise(1)).alias("cnt_cur"),
-    )
-    tot = per.agg(
-        F.sum("cnt_base").alias("n_base"), F.sum("cnt_cur").alias("n_cur")
-    )
-    p = F.col("cnt_base").cast("double") / F.col("n_base")
-    q = F.col("cnt_cur").cast("double") / F.col("n_cur")
+    counts, p, q = _cohort_counts(df, item_col, is_base_col)
     contrib = F.round(F.sqrt(p * q), contrib_dp)
-    c = (
-        per.crossJoin(F.broadcast(tot))
-        .withColumn("bc_contrib", contrib)
-        .localCheckpoint(eager=False)
-    )
+    c = counts.withColumn("bc_contrib", contrib).localCheckpoint(eager=False)
     j = c.agg(
         F.count(F.lit(1)).alias("n_items"),
         F.sum(F.col("bc_contrib").cast(f"decimal(38,{contrib_dp})"))

@@ -59,6 +59,22 @@ def _check_reserved(df: DataFrame, prefix: str = "_ev_") -> None:
             raise ValueError(f"input column {c!r} collides with {prefix} internals")
 
 
+def _score_hist(df: DataFrame, score_col: str, label_col: str) -> DataFrame:
+    """Per distinct score ``_ev_s``: rows ``_ev_ns`` and positives ``_ev_ps``."""
+    _check_reserved(df)
+    sc = df.select(
+        F.col(score_col).alias("_ev_s"),
+        F.when(F.col(label_col).cast("boolean"), 1).otherwise(0).alias("_ev_y"),
+    )
+    # The histogram feeds several plan branches (spine, cumulative join,
+    # totals); without a lineage cut each branch re-scans the scored
+    # corpus to rebuild it (measured round 11, guide §3.3 / §5
+    # localCheckpoint). It is one row per distinct score — tiny.
+    return sc.groupBy("_ev_s").agg(
+        F.count(F.lit(1)).alias("_ev_ns"), F.sum("_ev_y").alias("_ev_ps")
+    ).localCheckpoint(eager=False)
+
+
 def auc_score(df: DataFrame, score_col: str, label_col: str) -> DataFrame:
     """Exact tie-corrected ROC-AUC (Mann-Whitney U form) → one row
     ``(n, n_pos, n_neg, auc, gini)`` (auc/gini unrounded doubles).
@@ -72,18 +88,7 @@ def auc_score(df: DataFrame, score_col: str, label_col: str) -> DataFrame:
     the corpus is touched once. AUC = (2R_pos − n_pos(n_pos+1)) /
     (2·n_pos·n_neg), gini = 2·auc − 1.
     """
-    _check_reserved(df)
-    sc = df.select(
-        F.col(score_col).alias("_ev_s"),
-        F.when(F.col(label_col).cast("boolean"), 1).otherwise(0).alias("_ev_y"),
-    )
-    # The histogram feeds two plan branches (the broadcast spine and the
-    # cumulative join); without a lineage cut each branch re-scans the
-    # scored corpus to rebuild it (measured round 11, guide §3.3 /
-    # §5 localCheckpoint). It is one row per distinct score — tiny.
-    hist = sc.groupBy("_ev_s").agg(
-        F.count(F.lit(1)).alias("_ev_ns"), F.sum("_ev_y").alias("_ev_ps")
-    ).localCheckpoint(eager=False)
+    hist = _score_hist(df, score_col, label_col)
     lower = hist.select(
         F.col("_ev_s").alias("_ev_sb"), F.col("_ev_ns").alias("_ev_nsb")
     )
@@ -130,16 +135,7 @@ def pr_auc(df: DataFrame, score_col: str, label_col: str) -> DataFrame:
     threshold spine (max is order-free). No row ranking, no global
     window; the corpus is touched once.
     """
-    _check_reserved(df)
-    sc = df.select(
-        F.col(score_col).alias("_ev_s"),
-        F.when(F.col(label_col).cast("boolean"), 1).otherwise(0).alias("_ev_y"),
-    )
-    # Three consumers (upper spine, cumulative join, totals) — cut the
-    # lineage so the corpus scan behind the histogram runs once.
-    hist = sc.groupBy("_ev_s").agg(
-        F.count(F.lit(1)).alias("_ev_ns"), F.sum("_ev_y").alias("_ev_ps")
-    ).localCheckpoint(eager=False)
+    hist = _score_hist(df, score_col, label_col)
     upper = hist.select(
         F.col("_ev_s").alias("_ev_sb"),
         F.col("_ev_ns").alias("_ev_nsb"),

@@ -57,7 +57,10 @@ Scale note: ``save`` is one parquet write of an already-small frame
 tables ≤ n_bits rows; FastSS signatures are the one corpus-scale
 artifact and parquet-partition like any fact table). ``load`` is a
 plain parquet scan — column-pruned and predicate-pushed like every
-other source in the engine.
+other source in the engine. The ``meta`` table's schema is fixed, so
+``load`` reads it with that schema (all fields nullable, as parquet
+reports them) and runs two Spark jobs: the meta ``collect`` and the
+``data`` schema inference.
 """
 
 from __future__ import annotations
@@ -72,6 +75,9 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegerType, StringType, StructField, StructType
+
+from dataframe_differ_spark.tables import parquet_read_schema
 
 __all__ = [
     "ARTIFACT_KINDS",
@@ -84,6 +90,18 @@ __all__ = [
 ]
 
 FORMAT_VERSION = 1
+
+# The one-row meta table as save_artifact writes it, read back with this
+# schema so a load runs no schema-inference job for it.
+_META_SCHEMA = parquet_read_schema(
+    StructType(
+        [
+            StructField("kind", StringType()),
+            StructField("format_version", IntegerType()),
+            StructField("params", StringType()),
+        ]
+    )
+)
 
 # kind -> {column: type-prefix the column's simpleString must start
 # with}. Prefix matching keeps int/bigint and array<double>/
@@ -228,7 +246,7 @@ def load_artifact(
     store was built with. Keys present in the store but not in
     ``expect_params`` are not checked (callers pin what they rely on).
     """
-    meta_rows = spark.read.parquet(f"{path}/meta").collect()
+    meta_rows = spark.read.schema(_META_SCHEMA).parquet(f"{path}/meta").collect()
     if len(meta_rows) != 1:
         raise ValueError(
             f"artifact at {path!r}: meta must be exactly one row, got "

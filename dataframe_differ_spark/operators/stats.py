@@ -70,6 +70,26 @@ def _check_reserved(df: DataFrame, prefix: str = "_st_") -> None:
             raise ValueError(f"input column {c!r} collides with {prefix} internals")
 
 
+def _two_arm_moments(df: DataFrame, value_col: str, treat_col: str) -> DataFrame:
+    """One row ``(na, sa, qa, nb, sb, qb)``: per boolean arm the count, Σv
+    and Σv², summed in DECIMAL(38,0) and split-cast to double."""
+    _check_reserved(df)
+    v0 = F.col(value_col)
+    arm = df.groupBy(F.col(treat_col).alias("_st_t")).agg(
+        F.count(F.lit(1)).cast("double").alias("_st_n"),
+        split_cast_double(F.sum(v0.cast(_DEC))).alias("_st_s"),
+        split_cast_double(F.sum(v0.cast(_DEC) * v0)).alias("_st_q"),
+    )
+    return arm.agg(
+        F.max(F.when(F.col("_st_t"), F.col("_st_n"))).alias("na"),
+        F.max(F.when(F.col("_st_t"), F.col("_st_s"))).alias("sa"),
+        F.max(F.when(F.col("_st_t"), F.col("_st_q"))).alias("qa"),
+        F.max(F.when(~F.col("_st_t"), F.col("_st_n"))).alias("nb"),
+        F.max(F.when(~F.col("_st_t"), F.col("_st_s"))).alias("sb"),
+        F.max(F.when(~F.col("_st_t"), F.col("_st_q"))).alias("qb"),
+    )
+
+
 def welch_ttest(
     df: DataFrame,
     value_col: str,
@@ -95,21 +115,7 @@ def welch_ttest(
     quantiles agree to 3 dp). One shuffle (2-row rollup); scan-bound at
     any scale.
     """
-    _check_reserved(df)
-    v0 = F.col(value_col)
-    arm = df.groupBy(F.col(treat_col).alias("_st_t")).agg(
-        F.count(F.lit(1)).cast("double").alias("_st_n"),
-        split_cast_double(F.sum(v0.cast(_DEC))).alias("_st_s"),
-        split_cast_double(F.sum(v0.cast(_DEC) * v0)).alias("_st_q"),
-    )
-    w = arm.agg(
-        F.max(F.when(F.col("_st_t"), F.col("_st_n"))).alias("na"),
-        F.max(F.when(F.col("_st_t"), F.col("_st_s"))).alias("sa"),
-        F.max(F.when(F.col("_st_t"), F.col("_st_q"))).alias("qa"),
-        F.max(F.when(~F.col("_st_t"), F.col("_st_n"))).alias("nb"),
-        F.max(F.when(~F.col("_st_t"), F.col("_st_s"))).alias("sb"),
-        F.max(F.when(~F.col("_st_t"), F.col("_st_q"))).alias("qb"),
-    )
+    w = _two_arm_moments(df, value_col, treat_col)
     na, nb = F.col("na"), F.col("nb")
     v = w.select(
         na,
@@ -163,21 +169,7 @@ def cohens_d(
     DECIMAL(38,0) moments, split-cast conversion, one fixed double
     chain. One shuffle (2-row rollup); scan-bound at any scale.
     """
-    _check_reserved(df)
-    v0 = F.col(value_col)
-    arm = df.groupBy(F.col(treat_col).alias("_st_t")).agg(
-        F.count(F.lit(1)).cast("double").alias("_st_n"),
-        split_cast_double(F.sum(v0.cast(_DEC))).alias("_st_s"),
-        split_cast_double(F.sum(v0.cast(_DEC) * v0)).alias("_st_q"),
-    )
-    w = arm.agg(
-        F.max(F.when(F.col("_st_t"), F.col("_st_n"))).alias("na"),
-        F.max(F.when(F.col("_st_t"), F.col("_st_s"))).alias("sa"),
-        F.max(F.when(F.col("_st_t"), F.col("_st_q"))).alias("qa"),
-        F.max(F.when(~F.col("_st_t"), F.col("_st_n"))).alias("nb"),
-        F.max(F.when(~F.col("_st_t"), F.col("_st_s"))).alias("sb"),
-        F.max(F.when(~F.col("_st_t"), F.col("_st_q"))).alias("qb"),
-    )
+    w = _two_arm_moments(df, value_col, treat_col)
     na, nb = F.col("na"), F.col("nb")
     v = w.select(
         na,

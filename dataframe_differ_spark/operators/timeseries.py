@@ -511,6 +511,48 @@ def crosscorr(
     return _lag_corr(pairs, integral, "crosscorr")
 
 
+def _packed_series(
+    df: DataFrame, group_cols: Sequence[str], order_col: str, value_col: str
+) -> DataFrame:
+    """Per group: the ordered spine ``ov`` and its values as doubles ``xv``."""
+    return df.groupBy(*group_cols).agg(
+        F.expr(
+            f"array_sort(collect_list(struct({order_col} AS o, {value_col} AS x)))"
+        ).alias("_ts_p")
+    ).select(
+        *group_cols,
+        F.expr("transform(_ts_p, e -> e.o)").alias("ov"),
+        F.expr("transform(_ts_p, e -> CAST(e.x AS DOUBLE))").alias("xv"),
+    )
+
+
+def _explode_trajectory(
+    tails: DataFrame,
+    group_cols: Sequence[str],
+    order_col: str,
+    value_col: str,
+    fields: Sequence[str],
+    round_dp: int | None,
+) -> DataFrame:
+    """One row per (``_ts_ot``, ``_ts_xt``, ``_ts_rows``) element of
+    ``tails``: group cols, ``order_col``, ``value_col`` and the named
+    trajectory ``fields``, each rounded to ``round_dp`` when given."""
+    zipped = tails.select(
+        *group_cols,
+        F.explode(F.arrays_zip("_ts_ot", "_ts_xt", "_ts_rows")).alias("_ts_e"),
+    )
+    cols = [
+        F.col("_ts_e._ts_ot").alias(order_col),
+        F.col("_ts_e._ts_xt").alias(value_col),
+    ]
+    for fname in fields:
+        c = F.col("_ts_e._ts_rows")[fname]
+        cols.append(
+            (F.round(c, round_dp) if round_dp is not None else c).alias(fname)
+        )
+    return zipped.select(*group_cols, *cols)
+
+
 def holt_winters(
     df: DataFrame,
     group_cols: Sequence[str],
@@ -581,15 +623,7 @@ def holt_winters(
         f"     'seasonal', {sp}, 'fitted', {fit})))),"
         "  acc -> acc.rows)"
     )
-    folded = df.groupBy(*group_cols).agg(
-        F.expr(
-            f"array_sort(collect_list(struct({order_col} AS o, {value_col} AS x)))"
-        ).alias("_ts_p")
-    ).select(
-        *group_cols,
-        F.expr("transform(_ts_p, e -> e.o)").alias("ov"),
-        F.expr("transform(_ts_p, e -> CAST(e.x AS DOUBLE))").alias("xv"),
-    )
+    folded = _packed_series(df, group_cols, order_col, value_col)
     tail = f"greatest(size(xv) - {2 * m}, 0)"
     tails = folded.select(
         *group_cols,
@@ -597,21 +631,14 @@ def holt_winters(
         F.expr(f"slice(xv, {2 * m + 1}, {tail})").alias("_ts_xt"),
         F.expr(traj).alias("_ts_rows"),
     )
-    zipped = tails.select(
-        *group_cols,
-        F.explode(F.arrays_zip("_ts_ot", "_ts_xt", "_ts_rows")).alias("_ts_e"),
+    return _explode_trajectory(
+        tails,
+        group_cols,
+        order_col,
+        value_col,
+        ["level", "trend", "seasonal", "fitted"],
+        round_dp,
     )
-    out_fields = ["level", "trend", "seasonal", "fitted"]
-    cols = [
-        F.col("_ts_e._ts_ot").alias(order_col),
-        F.col("_ts_e._ts_xt").alias(value_col),
-    ]
-    for fname in out_fields:
-        c = F.col("_ts_e._ts_rows")[fname]
-        cols.append(
-            (F.round(c, round_dp) if round_dp is not None else c).alias(fname)
-        )
-    return zipped.select(*group_cols, *cols)
 
 
 def kalman_level(
@@ -661,32 +688,13 @@ def kalman_level(
         f"     'level', {lp}, 'gain', {kk}, 'variance', {ppost})))),"
         "  acc -> acc.rows)"
     )
-    folded = df.groupBy(*group_cols).agg(
-        F.expr(
-            f"array_sort(collect_list(struct({order_col} AS o, {value_col} AS x)))"
-        ).alias("_ts_p")
-    ).select(
-        *group_cols,
-        F.expr("transform(_ts_p, e -> e.o)").alias("ov"),
-        F.expr("transform(_ts_p, e -> CAST(e.x AS DOUBLE))").alias("xv"),
-    )
+    folded = _packed_series(df, group_cols, order_col, value_col)
     tails = folded.select(
         *group_cols,
         F.expr("slice(ov, 2, greatest(size(ov) - 1, 0))").alias("_ts_ot"),
         F.expr("slice(xv, 2, greatest(size(xv) - 1, 0))").alias("_ts_xt"),
         F.expr(traj).alias("_ts_rows"),
     )
-    zipped = tails.select(
-        *group_cols,
-        F.explode(F.arrays_zip("_ts_ot", "_ts_xt", "_ts_rows")).alias("_ts_e"),
+    return _explode_trajectory(
+        tails, group_cols, order_col, value_col, ["level", "gain", "variance"], round_dp
     )
-    cols = [
-        F.col("_ts_e._ts_ot").alias(order_col),
-        F.col("_ts_e._ts_xt").alias(value_col),
-    ]
-    for fname in ["level", "gain", "variance"]:
-        c = F.col("_ts_e._ts_rows")[fname]
-        cols.append(
-            (F.round(c, round_dp) if round_dp is not None else c).alias(fname)
-        )
-    return zipped.select(*group_cols, *cols)

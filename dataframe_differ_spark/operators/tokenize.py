@@ -40,7 +40,7 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 __all__ = [
@@ -159,19 +159,11 @@ def train_bpe(
 
     def report(rank: int, m: DataFrame, t: DataFrame) -> DataFrame:
         return m.crossJoin(F.broadcast(t)).select(
-            F.lit(rank).alias("merge_rank"),
-            F.col("a").alias("left_sym"),
-            F.col("b").alias("right_sym"),
-            F.col("cnt").alias("pair_count"),
-            F.col("n").alias("corpus_tokens_after"),
+            *_merge_cols(F.lit(rank), F.col("a"), F.col("b"), F.col("cnt"))
         )
 
     out = _bpe_tokens(s).select(
-        F.lit(0).alias("merge_rank"),
-        F.lit("").alias("left_sym"),
-        F.lit("").alias("right_sym"),
-        F.lit(0).cast("long").alias("pair_count"),
-        F.col("n").alias("corpus_tokens_after"),
+        *_merge_cols(F.lit(0), F.lit(""), F.lit(""), F.lit(0).cast("long"))
     )
     cur = s
     for rank in range(1, n_merges + 1):
@@ -181,6 +173,22 @@ def train_bpe(
             cur = cur.localCheckpoint(eager=False)
         out = out.unionByName(report(rank, m, _bpe_tokens(cur)))
     return out
+
+
+def _merge_cols(
+    rank: Column, a: Column, b: Column, cnt: Column, *score: Column
+) -> list[Column]:
+    """Select list of one merge-table row: ``merge_rank, left_sym,
+    right_sym, pair_count``, then ``score`` (WordPiece only) and
+    ``corpus_tokens_after`` (column ``n``)."""
+    return [
+        rank.alias("merge_rank"),
+        a.alias("left_sym"),
+        b.alias("right_sym"),
+        cnt.alias("pair_count"),
+        *score,
+        F.col("n").alias("corpus_tokens_after"),
+    ]
 
 
 def _bpe_symbolized(df: DataFrame, text_col: str) -> DataFrame:
@@ -248,6 +256,17 @@ def _bpe_tokens(sdf: DataFrame) -> DataFrame:
     )
 
 
+def _segmented(cur: DataFrame) -> DataFrame:
+    """(word, freq, subwords, n_sub) from a symbolized (w, freq, s) frame."""
+    sub = F.expr("split(s, '[|]')")
+    return cur.select(
+        F.col("w").alias("word"),
+        "freq",
+        sub.alias("subwords"),
+        F.size(sub).alias("n_sub"),
+    )
+
+
 def bpe_segment(
     df: DataFrame,
     text_col: str,
@@ -275,13 +294,7 @@ def bpe_segment(
         cur = _bpe_apply(cur, _bpe_pair_top(cur))
         if rank % checkpoint_every == 0:
             cur = cur.localCheckpoint(eager=False)
-    sub = F.expr("split(s, '[|]')")
-    return cur.select(
-        F.col("w").alias("word"),
-        "freq",
-        sub.alias("subwords"),
-        F.size(sub).alias("n_sub"),
-    )
+    return _segmented(cur)
 
 
 def bpe_segment_with_merges(
@@ -328,13 +341,7 @@ def bpe_segment_with_merges(
         cur = _bpe_apply(cur, m)
         if rank % checkpoint_every == 0:
             cur = cur.localCheckpoint(eager=False)
-    sub = F.expr("split(s, '[|]')")
-    return cur.select(
-        F.col("w").alias("word"),
-        "freq",
-        sub.alias("subwords"),
-        F.size(sub).alias("n_sub"),
-    )
+    return _segmented(cur)
 
 
 def wordpiece_apply(
@@ -776,21 +783,19 @@ def train_wordpiece(
 
     def report(rank: int, m: DataFrame, t: DataFrame) -> DataFrame:
         return m.crossJoin(F.broadcast(t)).select(
-            F.lit(rank).alias("merge_rank"),
-            F.col("a").alias("left_sym"),
-            F.col("b").alias("right_sym"),
-            F.col("cnt").alias("pair_count"),
-            F.col("score"),
-            F.col("n").alias("corpus_tokens_after"),
+            *_merge_cols(
+                F.lit(rank), F.col("a"), F.col("b"), F.col("cnt"), F.col("score")
+            )
         )
 
     out = _bpe_tokens(s).select(
-        F.lit(0).alias("merge_rank"),
-        F.lit("").alias("left_sym"),
-        F.lit("").alias("right_sym"),
-        F.lit(0).cast("long").alias("pair_count"),
-        F.lit(0.0).alias("score"),
-        F.col("n").alias("corpus_tokens_after"),
+        *_merge_cols(
+            F.lit(0),
+            F.lit(""),
+            F.lit(""),
+            F.lit(0).cast("long"),
+            F.lit(0.0).alias("score"),
+        )
     )
     cur = s
     for rank in range(1, n_merges + 1):

@@ -330,22 +330,14 @@ q_stream_dedup_persisted = _register_stream_dedup_persisted()
 def _register_stream_ann_ingest():
     from dataframe_differ_spark.functions.vector import SQL_DOT
     from dataframe_differ_spark.queries.vectors import (
+        _ADR_DRIFT_SQL_CTES,
         _ADR_K,
-        _ADR_RENORM,
         _adr_assign_sql,
         _adr_cent_sql,
     )
 
-    oracle = f"""
-WITH base AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
-oldc AS (SELECT vec_id, e FROM base WHERE vec_id % 10 <> 0),
-dr0 AS (
-  SELECT vec_id,
-         list_transform(range(1, 65),
-           i -> e[i] + CASE WHEN i = 1 THEN CAST(0.5 AS DOUBLE)
-                            ELSE CAST(0.0 AS DOUBLE) END) AS d
-  FROM base WHERE vec_id % 10 = 0),
-drift AS (SELECT vec_id, {_ADR_RENORM.format(d='d')} AS e FROM dr0),{_adr_cent_sql('oldc', 'o_')},{_adr_assign_sql('drift', 'o_cent', 'asg')},
+    oracle = _ADR_DRIFT_SQL_CTES + f"""\
+{_adr_cent_sql('oldc', 'o_')},{_adr_assign_sql('drift', 'o_cent', 'asg')},
 dots AS (
   SELECT a.cluster_id, {SQL_DOT('c.ce', 'a.e')} AS dot
   FROM asg a JOIN o_cent c ON c.cluster_id = a.cluster_id)

@@ -20,6 +20,7 @@ from dataframe_differ_spark.operators.numeric import split_cast_sql as _split_sq
 from dataframe_differ_spark.queries import register
 from dataframe_differ_spark.queries._mutation import MUTATED_ORDERS_SQL
 from dataframe_differ_spark.queries.relational import SQL_DSUM, SQL_REV_DEC, dsum, rev_dec
+from dataframe_differ_spark.queries.textops import _PAGERANK_ITER
 from dataframe_differ_spark.tables import load_table
 
 
@@ -1313,17 +1314,6 @@ def q_events_attribution(spark, sf_dir):
     )
 
 
-_PAGERANK_ITER = """
-i{n} AS (
-  SELECT e.dst AS node, CAST(SUM((r.r * e.w) // o.ow) AS BIGINT) AS s
-  FROM edges e
-  JOIN r{p} r ON e.src = r.node
-  JOIN outw o ON e.src = o.src
-  GROUP BY e.dst),
-r{n} AS (
-  SELECT n.node, CAST(6000 + COALESCE(i.s, 0) * 85 // 100 AS BIGINT) AS r
-  FROM nodes n LEFT JOIN i{n} i ON n.node = i.node)"""
-
 _PAGERANK_SQL = (
     """
 WITH edges AS (
@@ -1937,13 +1927,9 @@ def copurchase_edges(spark, sf_dir):
     )[0]
 
 
-def _copurchase_edges_build(spark, sf_dir):
-    """Spark twin of :func:`copurchase_edges_ctes`: distinct (u < v) edges.
-
-    The 3-parts-per-basket pick AND the in-basket pair expansion run in
-    ONE hash aggregation on l_orderkey plus a bounded HOF (C(3,2) = 3
-    pairs per order), so edge volume is O(orders) at any scale.
-    """
+def _basket_picks(spark, sf_dir):
+    """(l_orderkey, m): each order's first 3 distinct parts by
+    md5(orderkey:partkey), picked in one hash aggregation."""
     # Round 11 (guide §2.4): the former ``.distinct()`` was a second
     # full shuffle of the lineitem projection keyed almost identically to
     # the groupBy that follows — ``collect_set`` dedups the same pairs
@@ -1953,7 +1939,7 @@ def _copurchase_edges_build(spark, sf_dir):
     lp = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_partkey"
     )
-    picked = lp.groupBy("l_orderkey").agg(
+    return lp.groupBy("l_orderkey").agg(
         F.expr(
             "slice(transform(array_sort(collect_set(struct("
             "md5(concat_ws(':', CAST(l_orderkey AS STRING), "
@@ -1961,6 +1947,16 @@ def _copurchase_edges_build(spark, sf_dir):
             "x -> x.p), 1, 3)"
         ).alias("m")
     )
+
+
+def _copurchase_edges_build(spark, sf_dir):
+    """Spark twin of :func:`copurchase_edges_ctes`: distinct (u < v) edges.
+
+    The 3-parts-per-basket pick AND the in-basket pair expansion run in
+    ONE hash aggregation on l_orderkey plus a bounded HOF (C(3,2) = 3
+    pairs per order), so edge volume is O(orders) at any scale.
+    """
+    picked = _basket_picks(spark, sf_dir)
     return (
         picked.select(
             F.explode(
@@ -1976,17 +1972,21 @@ def _copurchase_edges_build(spark, sf_dir):
     )
 
 
-_TRIANGLE_SQL = f"""
+def _pernode_triangles_sql(ori: str, cap_ctes: str) -> str:
+    """Co-purchase degrees, degree-oriented edges named ``ori`` (then the
+    caller's ``cap_ctes``, which must leave an ``ori`` CTE), triangles
+    and per-node triangle counts; ends after the pernode CTE."""
+    return f"""
 WITH {copurchase_edges_ctes()},
 deg AS (
   SELECT n, CAST(COUNT(*) AS BIGINT) AS d
   FROM (SELECT u AS n FROM edges UNION ALL SELECT v AS n FROM edges)
   GROUP BY n),
-ori AS (
+{ori} AS (
   SELECT CASE WHEN (du.d, e.u) < (dv.d, e.v) THEN e.u ELSE e.v END AS a,
          CASE WHEN (du.d, e.u) < (dv.d, e.v) THEN e.v ELSE e.u END AS b
   FROM edges e JOIN deg du ON du.n = e.u JOIN deg dv ON dv.n = e.v),
-tri AS (
+{cap_ctes}tri AS (
   SELECT w1.a AS x, w1.b AS y, w2.b AS z
   FROM ori w1 JOIN ori w2 ON w1.b = w2.a
   JOIN ori w3 ON w3.a = w1.a AND w3.b = w2.b),
@@ -1994,7 +1994,10 @@ pernode AS (
   SELECT n, CAST(COUNT(*) AS BIGINT) AS n_triangles
   FROM (SELECT x AS n FROM tri UNION ALL SELECT y AS n FROM tri
         UNION ALL SELECT z AS n FROM tri)
-  GROUP BY n)
+  GROUP BY n)"""
+
+
+_TRIANGLE_SQL = _pernode_triangles_sql("ori", "") + """
 SELECT pernode.n AS part, pernode.n_triangles, deg.d AS degree
 FROM pernode JOIN deg ON deg.n = pernode.n
 ORDER BY n_triangles DESC, part LIMIT 50
@@ -2154,32 +2157,17 @@ def q_graph_label_propagation(spark, sf_dir):
 # pytest plants.
 _TRI_CAP = 64
 
-_TRIANGLE_CAPPED_SQL = f"""
-WITH {copurchase_edges_ctes()},
-deg AS (
-  SELECT n, CAST(COUNT(*) AS BIGINT) AS d
-  FROM (SELECT u AS n FROM edges UNION ALL SELECT v AS n FROM edges)
-  GROUP BY n),
-ori0 AS (
-  SELECT CASE WHEN (du.d, e.u) < (dv.d, e.v) THEN e.u ELSE e.v END AS a,
-         CASE WHEN (du.d, e.u) < (dv.d, e.v) THEN e.v ELSE e.u END AS b
-  FROM edges e JOIN deg du ON du.n = e.u JOIN deg dv ON dv.n = e.v),
-ori AS (
+_TRIANGLE_CAPPED_SQL = _pernode_triangles_sql(
+    "ori0",
+    f"""ori AS (
   SELECT a, b FROM (
     SELECT a, b,
            ROW_NUMBER() OVER (PARTITION BY a
              ORDER BY md5(CAST(a AS VARCHAR) || ':' ||
                           CAST(b AS VARCHAR)), b) AS rn
     FROM ori0) WHERE rn <= {_TRI_CAP}),
-tri AS (
-  SELECT w1.a AS x, w1.b AS y, w2.b AS z
-  FROM ori w1 JOIN ori w2 ON w1.b = w2.a
-  JOIN ori w3 ON w3.a = w1.a AND w3.b = w2.b),
-pernode AS (
-  SELECT n, CAST(COUNT(*) AS BIGINT) AS n_triangles
-  FROM (SELECT x AS n FROM tri UNION ALL SELECT y AS n FROM tri
-        UNION ALL SELECT z AS n FROM tri)
-  GROUP BY n)
+""",
+) + """
 SELECT pernode.n AS part, pernode.n_triangles, deg.d AS degree
 FROM pernode JOIN deg ON deg.n = pernode.n
 ORDER BY n_triangles DESC, part LIMIT 50
@@ -2399,16 +2387,10 @@ def q_events_changepoint_cusum(spark, sf_dir):
     )
 
 
-_AUTOCORR_SQL = f"""
-WITH daily AS (
-  SELECT CAST(ts AS DATE) AS d, CAST(COUNT(*) AS BIGINT) AS x
-  FROM events GROUP BY CAST(ts AS DATE)),
-lags AS (SELECT CAST(range AS INTEGER) AS lag FROM range(1, 8)),
-pairs AS (
-  SELECT l.lag, a.x AS x0, b.x AS x1
-  FROM daily a JOIN lags l ON TRUE
-  JOIN daily b ON b.d = a.d + l.lag),
-mom AS (
+def _lag_pearson_sql(alias: str) -> str:
+    """Per-lag Pearson r over the ``pairs`` CTE (lag, x0, x1) from exact
+    HUGEINT moments, output as (lag, n_pairs, ``alias``)."""
+    return f"""mom AS (
   -- round 7: HUGEINT moments + the shared split-cast device
   -- (operators/numeric.py) — BIGINT Sxx wrapped past ~1e8-count days.
   SELECT lag, CAST(COUNT(*) AS HUGEINT) AS n,
@@ -2420,9 +2402,21 @@ mom AS (
 SELECT lag, CAST(n AS BIGINT) AS n_pairs,
        ROUND({_split_sql('n * sxy - sx * sy')}
              / (sqrt({_split_sql('n * sxx - sx * sx')})
-                * sqrt({_split_sql('n * syy - sy * sy')})), 9) AS autocorr
+                * sqrt({_split_sql('n * syy - sy * sy')})), 9) AS {alias}
 FROM mom
 """
+
+
+_AUTOCORR_SQL = f"""
+WITH daily AS (
+  SELECT CAST(ts AS DATE) AS d, CAST(COUNT(*) AS BIGINT) AS x
+  FROM events GROUP BY CAST(ts AS DATE)),
+lags AS (SELECT CAST(range AS INTEGER) AS lag FROM range(1, 8)),
+pairs AS (
+  SELECT l.lag, a.x AS x0, b.x AS x1
+  FROM daily a JOIN lags l ON TRUE
+  JOIN daily b ON b.d = a.d + l.lag),
+""" + _lag_pearson_sql("autocorr")
 
 
 @register("events_autocorr", oracle=_AUTOCORR_SQL)
@@ -2742,23 +2736,7 @@ def q_orders_market_basket_lift(spark, sf_dir):
     one in-basket HOF pair expansion, two broadcast item-support joins,
     top-20 via TakeOrdered.
     """
-    # Round 11 (guide §2.4): the former ``.distinct()`` was a second
-    # full shuffle of the lineitem projection keyed almost identically to
-    # the groupBy that follows — ``collect_set`` dedups the same pairs
-    # inside the ONE aggregation (identical result: duplicate (h, p)
-    # structs collapse in the set exactly as the pre-distinct collapsed
-    # them; group size stays basket-bounded).
-    lp = load_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_partkey"
-    )
-    picked = lp.groupBy("l_orderkey").agg(
-        F.expr(
-            "slice(transform(array_sort(collect_set(struct("
-            "md5(concat_ws(':', CAST(l_orderkey AS STRING), "
-            "CAST(l_partkey AS STRING))) AS h, l_partkey AS p))), "
-            "x -> x.p), 1, 3)"
-        ).alias("m")
-    ).localCheckpoint(eager=False)
+    picked = _basket_picks(spark, sf_dir).localCheckpoint(eager=False)
     pairs = picked.select(
         F.explode(
             F.expr(
@@ -2906,6 +2884,20 @@ FROM cum CROSS JOIN tot
 """
 
 
+def customer_cents(spark, sf_dir):
+    """(o_custkey, cents): each customer's order revenue in exact integer
+    cents (per-order rounding, BIGINT sum)."""
+    return (
+        load_table(spark, sf_dir, "orders")
+        .select(
+            "o_custkey",
+            F.round(F.col("o_totalprice") * 100).cast("long").alias("c"),
+        )
+        .groupBy("o_custkey")
+        .agg(F.sum("c").alias("cents"))
+    )
+
+
 @register("orders_lorenz_deciles", oracle=_LORENZ_SQL)
 def q_orders_lorenz_deciles(spark, sf_dir):
     """Lorenz curve by revenue decile — the distribution behind the
@@ -2923,15 +2915,7 @@ def q_orders_lorenz_deciles(spark, sf_dir):
     """
     from dataframe_differ_spark.operators.ranks import ntile_from_rank, ranked
 
-    per_cust = (
-        load_table(spark, sf_dir, "orders")
-        .select(
-            "o_custkey",
-            F.round(F.col("o_totalprice") * 100).cast("long").alias("c"),
-        )
-        .groupBy("o_custkey")
-        .agg(F.sum("c").alias("cents"))
-    )
+    per_cust = customer_cents(spark, sf_dir)
     r = ranked(
         per_cust,
         F.col("cents"),
@@ -2990,21 +2974,7 @@ pairs AS (
   SELECT l.lag, a.ca AS x0, b.cb AS x1
   FROM pts a JOIN lags l ON TRUE
   JOIN pts b ON b.i = a.i + l.lag),
-mom AS (
-  -- round 7: HUGEINT moments + the shared split-cast device
-  -- (operators/numeric.py) — BIGINT Sxx wrapped past ~1e8-count days.
-  SELECT lag, CAST(COUNT(*) AS HUGEINT) AS n,
-         SUM(CAST(x0 AS HUGEINT)) AS sx, SUM(CAST(x1 AS HUGEINT)) AS sy,
-         SUM(CAST(x0 AS HUGEINT) * x1) AS sxy,
-         SUM(CAST(x0 AS HUGEINT) * x0) AS sxx,
-         SUM(CAST(x1 AS HUGEINT) * x1) AS syy
-  FROM pairs GROUP BY lag)
-SELECT lag, CAST(n AS BIGINT) AS n_pairs,
-       ROUND({_split_sql('n * sxy - sx * sy')}
-             / (sqrt({_split_sql('n * sxx - sx * sx')})
-                * sqrt({_split_sql('n * syy - sy * sy')})), 9) AS crosscorr
-FROM mom
-"""
+""" + _lag_pearson_sql("crosscorr")
 
 
 @register("events_crosscorr_types", oracle=_CROSSCORR_SQL)
@@ -3103,15 +3073,7 @@ def q_orders_abc_classification(spark, sf_dir):
     """
     from dataframe_differ_spark.operators.ranks import ranked
 
-    per_cust = (
-        load_table(spark, sf_dir, "orders")
-        .select(
-            "o_custkey",
-            F.round(F.col("o_totalprice") * 100).cast("long").alias("c"),
-        )
-        .groupBy("o_custkey")
-        .agg(F.sum("c").alias("cents"))
-    )
+    per_cust = customer_cents(spark, sf_dir)
     r = ranked(
         per_cust,
         F.col("cents"),
@@ -3212,15 +3174,7 @@ def q_orders_theil_inequality(spark, sf_dir):
     one row per nation carrying its within-index and the shared
     between/total indices.
     """
-    per_cust = (
-        load_table(spark, sf_dir, "orders")
-        .select(
-            "o_custkey",
-            F.round(F.col("o_totalprice") * 100).cast("long").alias("c"),
-        )
-        .groupBy("o_custkey")
-        .agg(F.sum("c").alias("cents"))
-    )
+    per_cust = customer_cents(spark, sf_dir)
     cust = load_table(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("o_custkey"), "c_nationkey"
     )
@@ -3355,6 +3309,22 @@ def q_graph_assortativity(spark, sf_dir):
 # Holt-Winters additive seasonal smoothing of daily volumes (round 7)
 # ---------------------------------------------------------------------------
 
+# Daily event counts per type, numbered by day: the opening CTEs of the
+# recursive Holt-Winters and Kalman oracles.
+_DAILY_TYPE_SERIES_SQL_CTES = """
+WITH RECURSIVE
+daily AS MATERIALIZED (
+  SELECT event_type, CAST(ts AS DATE) AS d,
+         CAST(COUNT(*) AS DOUBLE) AS x
+  FROM events GROUP BY event_type, CAST(ts AS DATE)),
+idx AS MATERIALIZED (
+  SELECT event_type, d, x,
+         CAST(ROW_NUMBER() OVER (PARTITION BY event_type ORDER BY d)
+              AS BIGINT) AS i
+  FROM daily),
+"""
+
+
 def _hw_sql() -> str:
     m = 7
     s1 = f"(list_reduce(list_prepend(0.0, xs[1:{m}]), (a, v) -> a + v) / {m}.0)"
@@ -3367,18 +3337,7 @@ def _hw_sql() -> str:
     bp = f"(0.125 * ({lp} - cu.l) + 0.875 * cu.b)"
     sp = f"(0.25 * (idx.x - {lp}) + 0.75 * {sm})"
     fit = f"(cu.l + cu.b + {sm})"
-    return f"""
-WITH RECURSIVE
-daily AS MATERIALIZED (
-  SELECT event_type, CAST(ts AS DATE) AS d,
-         CAST(COUNT(*) AS DOUBLE) AS x
-  FROM events GROUP BY event_type, CAST(ts AS DATE)),
-idx AS MATERIALIZED (
-  SELECT event_type, d, x,
-         CAST(ROW_NUMBER() OVER (PARTITION BY event_type ORDER BY d)
-              AS BIGINT) AS i
-  FROM daily),
-packed AS MATERIALIZED (
+    return _DAILY_TYPE_SERIES_SQL_CTES + f"""packed AS MATERIALIZED (
   SELECT event_type, list(x ORDER BY i) AS xs,
          CAST(COUNT(*) AS BIGINT) AS n
   FROM idx GROUP BY event_type),
@@ -3649,25 +3608,7 @@ def q_graph_hits(spark, sf_dir):
 # Local clustering coefficient + global transitivity (round 8)
 # ---------------------------------------------------------------------------
 
-_CLUSTERING_SQL = f"""
-WITH {copurchase_edges_ctes()},
-deg AS (
-  SELECT n, CAST(COUNT(*) AS BIGINT) AS d
-  FROM (SELECT u AS n FROM edges UNION ALL SELECT v AS n FROM edges)
-  GROUP BY n),
-ori AS (
-  SELECT CASE WHEN (du.d, e.u) < (dv.d, e.v) THEN e.u ELSE e.v END AS a,
-         CASE WHEN (du.d, e.u) < (dv.d, e.v) THEN e.v ELSE e.u END AS b
-  FROM edges e JOIN deg du ON du.n = e.u JOIN deg dv ON dv.n = e.v),
-tri AS (
-  SELECT w1.a AS x, w1.b AS y, w2.b AS z
-  FROM ori w1 JOIN ori w2 ON w1.b = w2.a
-  JOIN ori w3 ON w3.a = w1.a AND w3.b = w2.b),
-pernode AS (
-  SELECT n, CAST(COUNT(*) AS BIGINT) AS n_triangles
-  FROM (SELECT x AS n FROM tri UNION ALL SELECT y AS n FROM tri
-        UNION ALL SELECT z AS n FROM tri)
-  GROUP BY n),
+_CLUSTERING_SQL = _pernode_triangles_sql("ori", "") + """,
 gstats AS (
   SELECT (SELECT CAST(SUM(n_triangles) AS BIGINT) FROM pernode) AS t3,
          (SELECT CAST(SUM(d * (d - 1)) AS BIGINT) FROM deg) AS wedges2)
@@ -3749,17 +3690,7 @@ def _kalman_sql() -> str:
     kk = f"({pp} / ({pp} + 4.0))"
     lp = f"(cu.l + {kk} * (idx.x - cu.l))"
     ppost = f"((1.0 - {kk}) * {pp})"
-    return f"""
-WITH RECURSIVE
-daily AS MATERIALIZED (
-  SELECT event_type, CAST(ts AS DATE) AS d,
-         CAST(COUNT(*) AS DOUBLE) AS x
-  FROM events GROUP BY event_type, CAST(ts AS DATE)),
-idx AS MATERIALIZED (
-  SELECT event_type, d, x,
-         CAST(ROW_NUMBER() OVER (PARTITION BY event_type ORDER BY d)
-              AS BIGINT) AS i
-  FROM daily),
+    return _DAILY_TYPE_SERIES_SQL_CTES + f"""\
 cu(event_type, t, l, p, d, y, level, gain, variance) AS (
   SELECT event_type, CAST(1 AS BIGINT), x, CAST(16.0 AS DOUBLE),
          CAST(NULL AS DATE), CAST(NULL AS BIGINT), CAST(NULL AS DOUBLE),

@@ -1017,7 +1017,10 @@ _IMH_SIG = """
   FROM {tok} CROSS JOIN (SELECT unnest(range({nperm})) AS j) r
   GROUP BY doc_id, r.j"""
 
-_INCR_MH_SQL = f"""
+# The day-0 corpus (80%) and the incoming batch (the rest plus planted
+# near-dups), shingled and MinHash-signed: the CTEs the incremental-dedup
+# and store-append oracles share.
+_IMH_SIG_SQL_CTES = f"""
 WITH corpus AS (
   SELECT doc_id, text FROM documents WHERE doc_id % 10 < 8),
 batch AS (
@@ -1032,7 +1035,10 @@ ctok AS (SELECT doc_id, unnest(shingles) AS shingle FROM csh),
 btok AS (SELECT doc_id, unnest(shingles) AS shingle FROM bsh),
 csig AS ({_IMH_SIG.format(tok="ctok", nperm=_IMH_PERM)}),
 bsig AS ({_IMH_SIG.format(tok="btok", nperm=_IMH_PERM)}),
-cband AS (
+"""
+
+
+_INCR_MH_SQL = _IMH_SIG_SQL_CTES + f"""cband AS (
   SELECT doc_id AS corpus_id, j // {_IMH_PERM // _IMH_BANDS} AS band,
          string_agg(CAST(s AS VARCHAR), '-' ORDER BY j) AS bkey
   FROM csig GROUP BY doc_id, j // {_IMH_PERM // _IMH_BANDS}),
@@ -1519,7 +1525,9 @@ def _bpe_apply_sql(s: str, a: str, b: str) -> str:
     )
 
 
-_BPE_TRAIN_SQL = f"""
+# Corpus words with their frequency, split into '|'-joined characters:
+# the opening CTEs of the BPE and WordPiece oracles.
+_WORD_SYMBOLS_SQL_CTES = """
 WITH words AS (
   SELECT w, CAST(COUNT(*) AS BIGINT) AS freq
   FROM (SELECT unnest(list_filter(string_split(text, ' '), x -> x <> ''))
@@ -1530,34 +1538,36 @@ s0 AS (
          array_to_string(list_transform(range(1, length(w) + 1),
                                         i -> substr(w, i, 1)), '|') AS s
   FROM words),
-p0 AS (
+"""
+
+
+def _bpe_round_sql(t: int, m_cols: str) -> str:
+    """CTE block: BPE round ``t`` — adjacent-pair counts ``p{t - 1}`` over
+    ``s{t - 1}``, count argmax ``m{t}`` (selecting ``m_cols``), merge
+    apply ``s{t}``."""
+    p = t - 1
+    return f"""p{p} AS (
   SELECT t[i] AS a, t[i + 1] AS b, CAST(SUM(freq) AS BIGINT) AS cnt
-  FROM (SELECT freq, string_split(s, '|') AS t FROM s0)
+  FROM (SELECT freq, string_split(s, '|') AS t FROM s{p})
   -- data-derived position spine (ADVICE r9: a fixed 1..59 silently
   -- undercounts pairs for 61+-char words; Spark scans every adjacency)
   CROSS JOIN (SELECT unnest(range(1, (SELECT MAX(len(string_split(s, '|')))
-                                      FROM s0))) AS i)
+                                      FROM s{p}))) AS i)
   WHERE i < len(t)
   GROUP BY t[i], t[i + 1]),
-m1 AS (SELECT a, b, cnt FROM p0 ORDER BY cnt DESC, a, b LIMIT 1),
-s1 AS (
-  SELECT s0.w, s0.freq,
-         {_bpe_apply_sql('s0.s', 'm1.a', 'm1.b')} AS s
-  FROM s0 CROSS JOIN m1),
-p1 AS (
-  SELECT t[i] AS a, t[i + 1] AS b, CAST(SUM(freq) AS BIGINT) AS cnt
-  FROM (SELECT freq, string_split(s, '|') AS t FROM s1)
-  -- data-derived position spine (ADVICE r9: a fixed 1..59 silently
-  -- undercounts pairs for 61+-char words; Spark scans every adjacency)
-  CROSS JOIN (SELECT unnest(range(1, (SELECT MAX(len(string_split(s, '|')))
-                                      FROM s1))) AS i)
-  WHERE i < len(t)
-  GROUP BY t[i], t[i + 1]),
-m2 AS (SELECT a, b, cnt FROM p1 ORDER BY cnt DESC, a, b LIMIT 1),
-s2 AS (
-  SELECT s1.w, s1.freq,
-         {_bpe_apply_sql('s1.s', 'm2.a', 'm2.b')} AS s
-  FROM s1 CROSS JOIN m2),
+m{t} AS (SELECT {m_cols} FROM p{p} ORDER BY cnt DESC, a, b LIMIT 1),
+s{t} AS (
+  SELECT s{p}.w, s{p}.freq,
+         {_bpe_apply_sql(f's{p}.s', f'm{t}.a', f'm{t}.b')} AS s
+  FROM s{p} CROSS JOIN m{t}),
+"""
+
+
+_BPE_TRAIN_SQL = (
+    _WORD_SYMBOLS_SQL_CTES
+    + _bpe_round_sql(1, "a, b, cnt")
+    + _bpe_round_sql(2, "a, b, cnt")
+    + """\
 tok0 AS (SELECT CAST(SUM(freq * len(string_split(s, '|'))) AS BIGINT) AS n
          FROM s0),
 tok1 AS (SELECT CAST(SUM(freq * len(string_split(s, '|'))) AS BIGINT) AS n
@@ -1575,7 +1585,7 @@ UNION ALL
 SELECT 0 AS merge_rank, '' AS left_sym, '' AS right_sym,
        CAST(0 AS BIGINT) AS pair_count, tok0.n AS corpus_tokens_after
 FROM tok0
-"""
+""")
 
 
 @register("bpe_train_merges", oracle=_BPE_TRAIN_SQL)
@@ -1653,17 +1663,8 @@ tok{t} AS (SELECT CAST(SUM(freq * len(string_split(s, '|'))) AS BIGINT) AS n
 
 
 _WP_TRAIN_SQL = (
-    """
-WITH words AS (
-  SELECT w, CAST(COUNT(*) AS BIGINT) AS freq
-  FROM (SELECT unnest(list_filter(string_split(text, ' '), x -> x <> ''))
-          AS w FROM documents)
-  GROUP BY w),
-s0 AS (
-  SELECT w, freq,
-         array_to_string(list_transform(range(1, length(w) + 1),
-                                        i -> substr(w, i, 1)), '|') AS s
-  FROM words),
+    _WORD_SYMBOLS_SQL_CTES
+    + """\
 tok0 AS (SELECT CAST(SUM(freq * len(string_split(s, '|'))) AS BIGINT) AS n
          FROM s0),"""
     + _wp_round_sql(1).format(apply=_bpe_apply_sql("s0.s", "m1.a", "m1.b"))
@@ -2040,10 +2041,10 @@ def q_sample_neyman_allocation(spark, sf_dir):
 
 _AUC_STOP = "('the','a','of','and','to','in','is','it')"
 
-_AUC_SQL = f"""
-WITH sc AS (
-  SELECT CAST(len(list_filter(string_split(text, ' '),
-                              x -> x IN {_AUC_STOP})) AS BIGINT) AS s,
+# Label y (lang = 'en') beside the stopword-count score s, its per-score
+# histogram and the head of the cumulative CTE: shared by the ROC-AUC and
+# PR-AUC oracles.
+_LABEL_SCORE_HIST_SQL = """\
          CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS y
   FROM documents),
 hist AS (
@@ -2051,6 +2052,13 @@ hist AS (
   FROM sc GROUP BY s),
 cum AS (
   SELECT s, ns, ps,
+"""
+
+_AUC_SQL = f"""
+WITH sc AS (
+  SELECT CAST(len(list_filter(string_split(text, ' '),
+                              x -> x IN {_AUC_STOP})) AS BIGINT) AS s,
+""" + _LABEL_SCORE_HIST_SQL + """\
          CAST(COALESCE(SUM(ns) OVER (ORDER BY s
                 ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
               AS BIGINT) AS cumb
@@ -2108,52 +2116,17 @@ def q_eval_auc_score(spark, sf_dir):
 # BPE apply: corpus token distribution after the learned merges (round 7)
 # ---------------------------------------------------------------------------
 
-_BPE_APPLY_SQL = f"""
-WITH words AS (
-  SELECT w, CAST(COUNT(*) AS BIGINT) AS freq
-  FROM (SELECT unnest(list_filter(string_split(text, ' '), x -> x <> ''))
-          AS w FROM documents)
-  GROUP BY w),
-s0 AS (
-  SELECT w, freq,
-         array_to_string(list_transform(range(1, length(w) + 1),
-                                        i -> substr(w, i, 1)), '|') AS s
-  FROM words),
-p0 AS (
-  SELECT t[i] AS a, t[i + 1] AS b, CAST(SUM(freq) AS BIGINT) AS cnt
-  FROM (SELECT freq, string_split(s, '|') AS t FROM s0)
-  -- data-derived position spine (ADVICE r9: a fixed 1..59 silently
-  -- undercounts pairs for 61+-char words; Spark scans every adjacency)
-  CROSS JOIN (SELECT unnest(range(1, (SELECT MAX(len(string_split(s, '|')))
-                                      FROM s0))) AS i)
-  WHERE i < len(t)
-  GROUP BY t[i], t[i + 1]),
-m1 AS (SELECT a, b FROM p0 ORDER BY cnt DESC, a, b LIMIT 1),
-s1 AS (
-  SELECT s0.w, s0.freq,
-         {_bpe_apply_sql('s0.s', 'm1.a', 'm1.b')} AS s
-  FROM s0 CROSS JOIN m1),
-p1 AS (
-  SELECT t[i] AS a, t[i + 1] AS b, CAST(SUM(freq) AS BIGINT) AS cnt
-  FROM (SELECT freq, string_split(s, '|') AS t FROM s1)
-  -- data-derived position spine (ADVICE r9: a fixed 1..59 silently
-  -- undercounts pairs for 61+-char words; Spark scans every adjacency)
-  CROSS JOIN (SELECT unnest(range(1, (SELECT MAX(len(string_split(s, '|')))
-                                      FROM s1))) AS i)
-  WHERE i < len(t)
-  GROUP BY t[i], t[i + 1]),
-m2 AS (SELECT a, b FROM p1 ORDER BY cnt DESC, a, b LIMIT 1),
-s2 AS (
-  SELECT s1.w, s1.freq,
-         {_bpe_apply_sql('s1.s', 'm2.a', 'm2.b')} AS s
-  FROM s1 CROSS JOIN m2),
-tok AS (
+_BPE_APPLY_SQL = (
+    _WORD_SYMBOLS_SQL_CTES
+    + _bpe_round_sql(1, "a, b")
+    + _bpe_round_sql(2, "a, b")
+    + """tok AS (
   SELECT unnest(string_split(s, '|')) AS token, freq
   FROM s2)
 SELECT token, CAST(SUM(freq) AS BIGINT) AS corpus_freq
 FROM tok GROUP BY token
 ORDER BY corpus_freq DESC, token LIMIT 20
-"""
+""")
 
 
 @register("bpe_apply_merges", oracle=_BPE_APPLY_SQL)
@@ -2194,14 +2167,7 @@ _PR_AUC_SQL = f"""
 WITH sc AS (
   SELECT CAST(len(list_filter(string_split(text, ' '),
                x -> x IN {_AUC_STOP})) AS BIGINT) AS s,
-         CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS y
-  FROM documents),
-hist AS (
-  SELECT s, CAST(COUNT(*) AS BIGINT) AS ns, CAST(SUM(y) AS BIGINT) AS ps
-  FROM sc GROUP BY s),
-cum AS (
-  SELECT s, ns, ps,
-         CAST(SUM(ns) OVER (ORDER BY s DESC
+""" + _LABEL_SCORE_HIST_SQL + """         CAST(SUM(ns) OVER (ORDER BY s DESC
                 ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
               AS BIGINT) AS cumn,
          CAST(SUM(ps) OVER (ORDER BY s DESC
@@ -2311,21 +2277,7 @@ def q_unigram_vocab_persisted(spark, sf_dir):
 # half — prove merged store == from-scratch signing, in-query.
 # --------------------------------------------------------------------------
 
-_STORE_APPEND_SQL = f"""
-WITH corpus AS (
-  SELECT doc_id, text FROM documents WHERE doc_id % 10 < 8),
-batch AS (
-  SELECT doc_id, text FROM documents WHERE doc_id % 10 >= 8
-  UNION ALL
-  SELECT doc_id + 300000 AS doc_id,
-         array_to_string(string_split(text, ' ')[3:], ' ') AS text
-  FROM documents WHERE doc_id % 10 < 8 AND doc_id % 9 = 0),
-csh AS ({_IMH_SHINGLES.format(src="corpus")}),
-bsh AS ({_IMH_SHINGLES.format(src="batch")}),
-ctok AS (SELECT doc_id, unnest(shingles) AS shingle FROM csh),
-btok AS (SELECT doc_id, unnest(shingles) AS shingle FROM bsh),
-csig AS ({_IMH_SIG.format(tok="ctok", nperm=_IMH_PERM)}),
-bsig AS ({_IMH_SIG.format(tok="btok", nperm=_IMH_PERM)}),
+_STORE_APPEND_SQL = _IMH_SIG_SQL_CTES + f"""\
 merged AS (SELECT * FROM csig UNION ALL SELECT * FROM bsig),
 alltok AS (SELECT * FROM ctok UNION ALL SELECT * FROM btok),
 scratch AS ({_IMH_SIG.format(tok="alltok", nperm=_IMH_PERM)}),

@@ -33,7 +33,10 @@ from dataframe_differ_spark.queries.scaleops import (
     ZORDER_SQL,
     _Z_SQL,
 )
-from dataframe_differ_spark.queries.warehouse import _QUANTILE_DRIFT_SQL
+from dataframe_differ_spark.queries.warehouse import (
+    _QUANTILE_DRIFT_SQL,
+    _quantile_drift_report,
+)
 from dataframe_differ_spark.queries.windows import WIN_DISTRIBUTION_SQL
 from dataframe_differ_spark.tables import load_table
 
@@ -71,18 +74,9 @@ def q_agg_histogram_equidepth_sketch(spark, sf_dir):
     )
 
 
-@register("layout_zorder_sketch", oracle=ZORDER_SQL)
-def q_layout_zorder_sketch(spark, sf_dir):
-    """Z-order clustering WITHOUT single-partition ntile windows.
-
-    Scale sibling of `layout_zorder` (same oracle, identical values):
-    each of the three rank-bucketings (custkey → 8 bits, orderdate →
-    8 bits, Morton code → 16 files) runs as a two-phase distributed rank
-    + exact NTILE formula instead of a global ntile window. At 100 TB
-    the final step feeds `repartitionByRange(z).sortWithinPartitions(z)`
-    on write; the per-file min/max output here is exactly the scan
-    planner's pruning metadata either way.
-    """
+def _bucketed_orders(spark, sf_dir, n_buckets):
+    """(o_orderkey, bx, by): orders' custkey and orderdate each bucketed
+    into ``n_buckets`` equi-depth buckets (0-based) by a two-phase rank."""
     o = load_table(spark, sf_dir, "orders").select(
         "o_custkey", "o_orderdate", "o_orderkey"
     )
@@ -98,9 +92,9 @@ def q_layout_zorder_sketch(spark, sf_dir):
     ).select(
         "o_orderdate",
         "o_orderkey",
-        (ntile_from_rank(F.col("rk"), F.col("n"), 256) - 1).alias("bx"),
+        (ntile_from_rank(F.col("rk"), F.col("n"), n_buckets) - 1).alias("bx"),
     ).localCheckpoint(eager=False)
-    s2 = ranked(
+    return ranked(
         s1,
         # o_orderdate loads as timestamp_ntz; unix_date needs DATE. The
         # date cast is a (non-strictly) monotone proxy — ties share a
@@ -112,15 +106,17 @@ def q_layout_zorder_sketch(spark, sf_dir):
     ).select(
         "o_orderkey",
         "bx",
-        (ntile_from_rank(F.col("rk"), F.col("n"), 256) - 1).alias("by"),
+        (ntile_from_rank(F.col("rk"), F.col("n"), n_buckets) - 1).alias("by"),
     )
-    coded = s2.select(
-        "bx", "by", "o_orderkey", F.expr(_Z_SQL).alias("z")
-    ).localCheckpoint(eager=False)
+
+
+def _curve_file_stats(coded, code_col):
+    """Per-file row counts and bucket bounds after ranking ``coded`` by
+    its curve code into 16 equi-depth files."""
     s3 = ranked(
         coded,
-        F.col("z"),
-        ["z", "o_orderkey"],
+        F.col(code_col),
+        [code_col, "o_orderkey"],
         rank_col="rk",
         n_col="n",
     ).select(
@@ -133,6 +129,25 @@ def q_layout_zorder_sketch(spark, sf_dir):
         F.min("by").alias("min_date_bucket"),
         F.max("by").alias("max_date_bucket"),
     )
+
+
+@register("layout_zorder_sketch", oracle=ZORDER_SQL)
+def q_layout_zorder_sketch(spark, sf_dir):
+    """Z-order clustering WITHOUT single-partition ntile windows.
+
+    Scale sibling of `layout_zorder` (same oracle, identical values):
+    each of the three rank-bucketings (custkey → 8 bits, orderdate →
+    8 bits, Morton code → 16 files) runs as a two-phase distributed rank
+    + exact NTILE formula instead of a global ntile window. At 100 TB
+    the final step feeds `repartitionByRange(z).sortWithinPartitions(z)`
+    on write; the per-file min/max output here is exactly the scan
+    planner's pruning metadata either way.
+    """
+    s2 = _bucketed_orders(spark, sf_dir, 256)
+    coded = s2.select(
+        "bx", "by", "o_orderkey", F.expr(_Z_SQL).alias("z")
+    ).localCheckpoint(eager=False)
+    return _curve_file_stats(coded, "z")
 
 
 @register(
@@ -166,16 +181,7 @@ def q_diff_quantile_drift_sketch(spark, sf_dir):
     orders = load_table(spark, sf_dir, "orders")
     lq = qsel(orders).select("p", F.col("v").alias("left_value"))
     rq = qsel(mutated_orders(orders)).select("p", F.col("v").alias("right_value"))
-    return (
-        lq.join(rq, "p")
-        .select(
-            "p",
-            "left_value",
-            "right_value",
-            F.abs(F.col("right_value") - F.col("left_value")).alias("abs_drift"),
-        )
-        .orderBy("p")
-    )
+    return _quantile_drift_report(lq, rq)
 
 
 @register("win_distribution_sketch", oracle=WIN_DISTRIBUTION_SQL)
@@ -462,48 +468,8 @@ def q_layout_hilbert_sketch(spark, sf_dir):
     single-partition window anywhere on the Spark side; at 100 TB the
     file assignment feeds repartitionByRange(hd) on write.
     """
-    o = load_table(spark, sf_dir, "orders").select(
-        "o_custkey", "o_orderdate", "o_orderkey"
-    )
-    n = 1 << _H_ORDER
-    s1 = ranked(
-        o,
-        F.col("o_custkey"),
-        ["o_custkey", "o_orderkey"],
-        rank_col="rk",
-        n_col="n",
-    ).select(
-        "o_orderdate",
-        "o_orderkey",
-        (ntile_from_rank(F.col("rk"), F.col("n"), n) - 1).alias("bx"),
-    ).localCheckpoint(eager=False)
-    s2 = ranked(
-        s1,
-        F.unix_date(F.col("o_orderdate").cast("date")),
-        ["o_orderdate", "o_orderkey"],
-        rank_col="rk",
-        n_col="n",
-    ).select(
-        "o_orderkey",
-        "bx",
-        (ntile_from_rank(F.col("rk"), F.col("n"), n) - 1).alias("by"),
-    )
+    s2 = _bucketed_orders(spark, sf_dir, 1 << _H_ORDER)
     coded = hilbert_index(s2, "bx", "by", order=_H_ORDER).select(
         "bx", "by", "hd", "o_orderkey"
     ).localCheckpoint(eager=False)
-    s3 = ranked(
-        coded,
-        F.col("hd"),
-        ["hd", "o_orderkey"],
-        rank_col="rk",
-        n_col="n",
-    ).select(
-        "bx", "by", ntile_from_rank(F.col("rk"), F.col("n"), 16).alias("file_id")
-    )
-    return s3.groupBy("file_id").agg(
-        F.count(F.lit(1)).alias("n_rows"),
-        F.min("bx").alias("min_cust_bucket"),
-        F.max("bx").alias("max_cust_bucket"),
-        F.min("by").alias("min_date_bucket"),
-        F.max("by").alias("max_date_bucket"),
-    )
+    return _curve_file_stats(coded, "hd")

@@ -197,6 +197,30 @@ def q_join_range(spark, sf_dir):
     )
 
 
+def _latest_click_timeline(spark, sf_dir, click_col):
+    """Purchase and click events, each carrying in ``click_col`` the ts of
+    its user's latest click at or before it (one shuffle on user_id)."""
+    e = load_table(spark, sf_dir, "events").select(
+        "event_id", "user_id", "ts", "event_type"
+    )
+    tagged = e.filter(F.col("event_type").isin("purchase", "click")).withColumn(
+        "is_click", (F.col("event_type") == "click").cast("int")
+    )
+    # Window over each user's merged timeline; clicks sort before purchases
+    # at equal ts (is_click desc) so a same-instant click is visible.
+    w = (
+        Window.partitionBy("user_id")
+        .orderBy(F.col("ts").asc(), F.col("is_click").desc(), F.col("event_id").asc())
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+    return tagged.withColumn(
+        click_col,
+        F.last(
+            F.when(F.col("is_click") == 1, F.col("ts")), ignorenulls=True
+        ).over(w),
+    )
+
+
 @register(
     "join_asof",
     oracle="""
@@ -222,25 +246,7 @@ def q_join_asof(spark, sf_dir):
     Tag ordering puts clicks before purchases at identical timestamps so
     'at-or-before' includes ties, matching DuckDB ASOF (>=).
     """
-    e = load_table(spark, sf_dir, "events").select(
-        "event_id", "user_id", "ts", "event_type"
-    )
-    tagged = e.filter(F.col("event_type").isin("purchase", "click")).withColumn(
-        "is_click", (F.col("event_type") == "click").cast("int")
-    )
-    # Window over each user's merged timeline; clicks sort before purchases
-    # at equal ts (is_click desc) so a same-instant click is visible.
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy(F.col("ts").asc(), F.col("is_click").desc(), F.col("event_id").asc())
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    timeline = tagged.withColumn(
-        "click_ts",
-        F.last(
-            F.when(F.col("is_click") == 1, F.col("ts")), ignorenulls=True
-        ).over(w),
-    )
+    timeline = _latest_click_timeline(spark, sf_dir, "click_ts")
     return timeline.filter(F.col("event_type") == "purchase").select(
         "event_id", "user_id", "ts", "click_ts"
     )
@@ -1482,23 +1488,7 @@ def q_join_asof_tolerance(spark, sf_dir):
     click). Tolerance is a post-filter on the matched pair, so the
     plan cost is identical to the untolerated form.
     """
-    e = load_table(spark, sf_dir, "events").select(
-        "event_id", "user_id", "ts", "event_type"
-    )
-    tagged = e.filter(F.col("event_type").isin("purchase", "click")).withColumn(
-        "is_click", (F.col("event_type") == "click").cast("int")
-    )
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy(F.col("ts").asc(), F.col("is_click").desc(), F.col("event_id").asc())
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    timeline = tagged.withColumn(
-        "click_ts_raw",
-        F.last(
-            F.when(F.col("is_click") == 1, F.col("ts")), ignorenulls=True
-        ).over(w),
-    )
+    timeline = _latest_click_timeline(spark, sf_dir, "click_ts_raw")
     return timeline.filter(F.col("event_type") == "purchase").select(
         "event_id",
         "user_id",

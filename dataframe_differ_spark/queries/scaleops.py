@@ -32,6 +32,11 @@ from dataframe_differ_spark.operators.dedup import (
 )
 from dataframe_differ_spark.operators.ranks import partitioned_topk, ranked
 from dataframe_differ_spark.queries import register
+from dataframe_differ_spark.queries.textops import (
+    SQL_SHINGLES_CTE,
+    sql_md5_int64,
+    sql_simhash_sig_ctes,
+)
 from dataframe_differ_spark.tables import load_table
 
 # ---------------------------------------------------------------------------
@@ -246,14 +251,7 @@ _SQL_MH_CTES = f"""corpus AS (
          array_to_string(string_split(text, ' ')[3:], ' ') AS text
   FROM documents WHERE doc_id % 11 = 0
 ),
-sh AS (
-  SELECT doc_id,
-         list_distinct(list_transform(
-           range(1, greatest(len(string_split(text,' ')) - 2, 0) + 1),
-           i -> string_split(text,' ')[i] || ' ' ||
-                string_split(text,' ')[i+1] || ' ' ||
-                string_split(text,' ')[i+2])) AS shingles
-  FROM corpus),
+{SQL_SHINGLES_CTE},
 tok AS (SELECT doc_id, unnest(shingles) AS shingle FROM sh),
 sigs AS (
   SELECT doc_id, r.j, MIN({_SQL_MH_HASH.format(j="r.j", s="shingle")}) AS s
@@ -1252,6 +1250,48 @@ _SQL_PQ_EXACT_D2 = (
 )
 
 
+def _adc_top10(best, base, q, lut):
+    """The 10 vectors nearest the query by ADC distance (Σ of ``lut``
+    entries over each vector's PQ codes ``best``), beside the exact
+    squared distance from ``base``."""
+    adc = (
+        best.join(F.broadcast(lut), ["s", "cid"])
+        .groupBy("vec_id")
+        .agg(
+            F.sum(F.round("qd2", 9).cast("decimal(20,9)"))
+            .cast("double")
+            .alias("adc_d2")
+        )
+    )
+    exact_d2 = F.expr(
+        "round(aggregate(zip_with(e, qe, (x, y) -> (x - y) * (x - y)), "
+        "CAST(0.0 AS DOUBLE), (acc, x) -> acc + x), 9)"
+    )
+    exact = base.crossJoin(F.broadcast(q)).select(
+        "vec_id", exact_d2.alias("exact_d2")
+    )
+    return (
+        adc.join(exact, "vec_id")
+        .orderBy("adc_d2", "vec_id")
+        .limit(10)
+        .select("vec_id", "adc_d2", "exact_d2")
+    )
+
+
+def _pq_query_lut(q, cent):
+    """(s, cid, qd2): squared distance from each of the query ``qe``'s
+    sub-vectors to every PQ centroid of its subspace (the ADC table)."""
+    subsp = F.explode(F.sequence(F.lit(0), F.lit(_PQ_M - 1))).alias("s")
+    qsubs = q.select("qe", subsp).select(
+        "s", F.expr(f"slice(qe, s * {_PQ_DSUB} + 1, {_PQ_DSUB})").alias("qv")
+    )
+    qd2 = F.expr(
+        "aggregate(zip_with(qv, c, (x, y) -> (x - y) * (x - y)), "
+        "CAST(0.0 AS DOUBLE), (acc, x) -> acc + x)"
+    )
+    return qsubs.join(cent, "s").select("s", "cid", qd2.alias("qd2"))
+
+
 @register(
     "vec_pq_adc_topk",
     oracle=f"""
@@ -1295,37 +1335,8 @@ def q_vec_pq_adc_topk(spark, sf_dir):
     """
     base, cent, best = _pq_parts(spark, sf_dir)
     q = base.filter(F.col("vec_id") == 0).select(F.col("e").alias("qe"))
-    subsp = F.explode(F.sequence(F.lit(0), F.lit(_PQ_M - 1))).alias("s")
-    qsubs = q.select("qe", subsp).select(
-        "s", F.expr(f"slice(qe, s * {_PQ_DSUB} + 1, {_PQ_DSUB})").alias("qv")
-    )
-    qd2 = F.expr(
-        "aggregate(zip_with(qv, c, (x, y) -> (x - y) * (x - y)), "
-        "CAST(0.0 AS DOUBLE), (acc, x) -> acc + x)"
-    )
-    lut = qsubs.join(cent, "s").select("s", "cid", qd2.alias("qd2"))
-    adc = (
-        best.join(F.broadcast(lut), ["s", "cid"])
-        .groupBy("vec_id")
-        .agg(
-            F.sum(F.round("qd2", 9).cast("decimal(20,9)"))
-            .cast("double")
-            .alias("adc_d2")
-        )
-    )
-    exact_d2 = F.expr(
-        "round(aggregate(zip_with(e, qe, (x, y) -> (x - y) * (x - y)), "
-        "CAST(0.0 AS DOUBLE), (acc, x) -> acc + x), 9)"
-    )
-    exact = base.crossJoin(F.broadcast(q)).select(
-        "vec_id", exact_d2.alias("exact_d2")
-    )
-    return (
-        adc.join(exact, "vec_id")
-        .orderBy("adc_d2", "vec_id")
-        .limit(10)
-        .select("vec_id", "adc_d2", "exact_d2")
-    )
+    lut = _pq_query_lut(q, cent)
+    return _adc_top10(best, base, q, lut)
 
 
 # ---------------------------------------------------------------------------
@@ -1597,6 +1608,13 @@ _SH_BITS = 64
 _SH_BAND_BITS = 16  # 4 bands of 16 bits for candidate generation
 
 
+# SQL comment the dedup_simhash_portable oracle carries on its sign bit.
+_SIMHASH_SIGN_BIT_NOTE = """\
+  -- bit 63: DuckDB range-checks 1<<63, Spark's shiftleft wraps to
+  -- LONG_MIN — spell the sign bit out so both agree.
+"""
+
+
 @register(
     "dedup_simhash_portable",
     oracle=f"""
@@ -1614,27 +1632,9 @@ th AS (
   -- unsigned 64-bit parse, wrapped to signed two's-complement via
   -- HUGEINT arithmetic (a direct UBIGINT->BIGINT cast range-errors).
   SELECT doc_id, token,
-         CAST(('0x' || substr(md5(token), 1, 16))::UBIGINT::HUGEINT
-              - CASE WHEN ('0x' || substr(md5(token), 1, 16))::UBIGINT
-                          > 9223372036854775807
-                     THEN 18446744073709551616::HUGEINT ELSE 0 END
-              AS BIGINT) AS h
+         {sql_md5_int64('token')} AS h
   FROM tok),
-bits AS (
-  SELECT doc_id, b.b,
-         SUM(CASE WHEN (h >> b.b) & 1 = 1 THEN 1 ELSE -1 END) AS acc
-  FROM th CROSS JOIN (SELECT unnest(range({_SH_BITS})) AS b) b
-  GROUP BY doc_id, b.b),
-sig AS (
-  -- bit 63: DuckDB range-checks 1<<63, Spark's shiftleft wraps to
-  -- LONG_MIN — spell the sign bit out so both agree.
-  SELECT doc_id,
-         CAST(SUM(CASE WHEN acc <= 0 THEN 0
-                       WHEN b = 63 THEN (-9223372036854775807 - 1)::HUGEINT
-                       ELSE (CAST(1 AS BIGINT) << b)::HUGEINT END)
-              AS BIGINT) AS simhash
-  FROM bits GROUP BY doc_id),
-banded AS (
+{sql_simhash_sig_ctes(_SIMHASH_SIGN_BIT_NOTE)}banded AS (
   SELECT doc_id, simhash, band.i AS band,
          (simhash >> (band.i * {_SH_BAND_BITS})) & 65535 AS bkey
   FROM sig CROSS JOIN (SELECT unnest(range(4)) AS i) band),
@@ -2046,39 +2046,12 @@ def q_vec_ivfpq_topk(spark, sf_dir):
         .select("cluster_id")
     )
     cand = index.join(F.broadcast(probes), "cluster_id").select("vec_id")
-    subsp = F.explode(F.sequence(F.lit(0), F.lit(_PQ_M - 1))).alias("s")
-    qsubs = q.select("qe", subsp).select(
-        "s", F.expr(f"slice(qe, s * {_PQ_DSUB} + 1, {_PQ_DSUB})").alias("qv")
-    )
-    qd2 = F.expr(
-        "aggregate(zip_with(qv, c, (x, y) -> (x - y) * (x - y)), "
-        "CAST(0.0 AS DOUBLE), (acc, x) -> acc + x)"
-    )
-    lut = qsubs.join(pq_cent, "s").select("s", "cid", qd2.alias("qd2"))
-    adc = (
-        best.join(F.broadcast(cand), "vec_id")
-        .join(F.broadcast(lut), ["s", "cid"])
-        .groupBy("vec_id")
-        .agg(
-            F.sum(F.round("qd2", 9).cast("decimal(20,9)"))
-            .cast("double")
-            .alias("adc_d2")
-        )
-    )
-    exact_d2 = F.expr(
-        "round(aggregate(zip_with(e, qe, (x, y) -> (x - y) * (x - y)), "
-        "CAST(0.0 AS DOUBLE), (acc, x) -> acc + x), 9)"
-    )
-    exact = (
-        base.join(F.broadcast(cand), "vec_id")
-        .crossJoin(F.broadcast(q))
-        .select("vec_id", exact_d2.alias("exact_d2"))
-    )
-    return (
-        adc.join(exact, "vec_id")
-        .orderBy("adc_d2", "vec_id")
-        .limit(10)
-        .select("vec_id", "adc_d2", "exact_d2")
+    lut = _pq_query_lut(q, pq_cent)
+    return _adc_top10(
+        best.join(F.broadcast(cand), "vec_id"),
+        base.join(F.broadcast(cand), "vec_id"),
+        q,
+        lut,
     )
 
 
@@ -2325,9 +2298,10 @@ def q_sketch_bloom_persisted(spark, sf_dir):
 
     This is the train-once-reuse-everywhere shape at 100 TB: the build
     scan runs in the producing job only; every consumer loads a ≤m-row
-    broadcastable parquet. The artifact path is keyed by the sf dir so
-    concurrent scales don't collide; overwrite mode makes reruns
-    idempotent. Plan: the build is one customer scan into the bit
+    broadcastable parquet. The artifact path is private to the run
+    (``run_scoped_artifact_path``: an sf-dir hash plus a per-run uuid),
+    so concurrent runs and scales never share a store and every run
+    saves a fresh one. Plan: the build is one customer scan into the bit
     table's DISTINCT (duplicate keys set the same bits); scoring is
     `_bloom_score`'s one grouped pass over probe ∪ members.
     """

@@ -32,6 +32,7 @@ from dataframe_differ_spark.queries import REGISTRY, register
 from dataframe_differ_spark.queries.composites import (
     copurchase_edges,
     copurchase_edges_ctes,
+    customer_cents,
 )
 from dataframe_differ_spark.tables import load_table
 
@@ -1550,13 +1551,16 @@ def q_events_uplift_cuped(spark, sf_dir):
 # Jaccard link prediction on the co-purchase graph
 # ---------------------------------------------------------------------------
 
-_LINKPRED_SQL = f"""
+def _linkpred_sql(nbr_ctes: str, nbrs: str) -> str:
+    """Top-50 Jaccard link prediction over the co-purchase edges, with
+    wedges and degrees taken from the ``nbrs`` neighbour CTE."""
+    return f"""
 WITH {copurchase_edges_ctes()},
 sym AS (SELECT u, v FROM edges UNION ALL SELECT v AS u, u AS v FROM edges),
-deg AS (SELECT u AS n, CAST(COUNT(*) AS BIGINT) AS d FROM sym GROUP BY u),
+{nbr_ctes}deg AS (SELECT u AS n, CAST(COUNT(*) AS BIGINT) AS d FROM {nbrs} GROUP BY u),
 wedge AS (
   SELECT a.v AS x, b.v AS y, a.u AS w
-  FROM sym a JOIN sym b ON a.u = b.u AND a.v < b.v),
+  FROM {nbrs} a JOIN {nbrs} b ON a.u = b.u AND a.v < b.v),
 cn AS (
   SELECT x, y, CAST(COUNT(*) AS BIGINT) AS common
   FROM wedge GROUP BY x, y),
@@ -1574,6 +1578,29 @@ SELECT x AS part_a, y AS part_b, common AS n_common, uni AS n_union, jaccard
 FROM scored
 ORDER BY jaccard DESC, x, y LIMIT 50
 """
+
+
+_LINKPRED_SQL = _linkpred_sql("", "sym")
+
+
+def _top50_link_predictions(spark, sf_dir, cap):
+    """Top-50 co-purchase pairs by Jaccard from
+    :func:`operators.graph.link_prediction` at the given degree cap."""
+    from dataframe_differ_spark.operators.graph import link_prediction
+
+    edges = copurchase_edges(spark, sf_dir)
+    lp = link_prediction(edges, src="u", dst="v", cap=cap)
+    return (
+        lp.orderBy(F.col("jaccard").desc(), "u", "v")
+        .limit(50)
+        .select(
+            F.col("u").alias("part_a"),
+            F.col("v").alias("part_b"),
+            "n_common",
+            "n_union",
+            "jaccard",
+        )
+    )
 
 
 @register(
@@ -1599,21 +1626,7 @@ def q_graph_link_prediction(spark, sf_dir):
     :func:`operators.graph.link_prediction` (round-6 extraction;
     ``cap=None`` = this exact form).
     """
-    from dataframe_differ_spark.operators.graph import link_prediction
-
-    edges = copurchase_edges(spark, sf_dir)
-    lp = link_prediction(edges, src="u", dst="v", cap=None)
-    return (
-        lp.orderBy(F.col("jaccard").desc(), "u", "v")
-        .limit(50)
-        .select(
-            F.col("u").alias("part_a"),
-            F.col("v").alias("part_b"),
-            "n_common",
-            "n_union",
-            "jaccard",
-        )
-    )
+    return _top50_link_predictions(spark, sf_dir, None)
 
 
 # Degree cap for the scale form of link prediction: at 100 TB a popular
@@ -1626,37 +1639,17 @@ def q_graph_link_prediction(spark, sf_dir):
 # exists to protect (pytest asserts both properties).
 _LINKPRED_CAP = 64
 
-_LINKPRED_CAPPED_SQL = f"""
-WITH {copurchase_edges_ctes()},
-sym AS (SELECT u, v FROM edges UNION ALL SELECT v AS u, u AS v FROM edges),
-capped AS (
+_LINKPRED_CAPPED_SQL = _linkpred_sql(
+    f"""capped AS (
   SELECT u, v FROM (
     SELECT u, v,
            ROW_NUMBER() OVER (PARTITION BY u
              ORDER BY md5(CAST(u AS VARCHAR) || ':' || CAST(v AS VARCHAR)), v)
              AS rn
     FROM sym) WHERE rn <= {_LINKPRED_CAP}),
-deg AS (SELECT u AS n, CAST(COUNT(*) AS BIGINT) AS d FROM capped GROUP BY u),
-wedge AS (
-  SELECT a.v AS x, b.v AS y, a.u AS w
-  FROM capped a JOIN capped b ON a.u = b.u AND a.v < b.v),
-cn AS (
-  SELECT x, y, CAST(COUNT(*) AS BIGINT) AS common
-  FROM wedge GROUP BY x, y),
-cand AS (
-  SELECT cn.x, cn.y, cn.common
-  FROM cn LEFT JOIN edges e ON e.u = cn.x AND e.v = cn.y
-  WHERE e.u IS NULL),
-scored AS (
-  SELECT c.x, c.y, c.common,
-         dx.d + dy.d - c.common AS uni,
-         ROUND(CAST(c.common AS DOUBLE) / (dx.d + dy.d - c.common), 9)
-           AS jaccard
-  FROM cand c JOIN deg dx ON dx.n = c.x JOIN deg dy ON dy.n = c.y)
-SELECT x AS part_a, y AS part_b, common AS n_common, uni AS n_union, jaccard
-FROM scored
-ORDER BY jaccard DESC, x, y LIMIT 50
-"""
+""",
+    "capped",
+)
 
 
 @register("graph_link_prediction_capped", oracle=_LINKPRED_CAPPED_SQL)
@@ -1683,21 +1676,7 @@ def q_graph_link_prediction_capped(spark, sf_dir):
     :func:`operators.graph.link_prediction` with ``cap=64`` (round-6
     extraction — the cap mechanics described above live there).
     """
-    from dataframe_differ_spark.operators.graph import link_prediction
-
-    edges = copurchase_edges(spark, sf_dir)
-    lp = link_prediction(edges, src="u", dst="v", cap=_LINKPRED_CAP)
-    return (
-        lp.orderBy(F.col("jaccard").desc(), "u", "v")
-        .limit(50)
-        .select(
-            F.col("u").alias("part_a"),
-            F.col("v").alias("part_b"),
-            "n_common",
-            "n_union",
-            "jaccard",
-        )
-    )
+    return _top50_link_predictions(spark, sf_dir, _LINKPRED_CAP)
 
 
 # ---------------------------------------------------------------------------
@@ -1850,7 +1829,10 @@ def _ab_spend_cells_cached(spark, sf_dir):
     return cells
 
 
-_WELCH_SQL = f"""
+def _ab_moments_sql(arm_note: str) -> str:
+    """Per-user purchase cents by md5 arm, each arm's n and exact Σv, Σv²
+    pivoted to one row; ends inside the v CTE's select list."""
+    return f"""
 WITH per_user AS (
   SELECT user_id,
          substr(md5(CAST(user_id AS VARCHAR)), 1, 1) < '8' AS treat,
@@ -1859,10 +1841,7 @@ WITH per_user AS (
                        ELSE 0 END) AS BIGINT) AS cents
   FROM events GROUP BY user_id),
 arm AS (
-  -- round 7: Σv / Σv² accumulate exactly (HUGEINT) and convert via the
-  -- shared split-cast device (operators/numeric.py), mirroring the
-  -- DECIMAL(38,0) sums in operators/stats.welch_ttest.
-  SELECT treat, CAST(COUNT(*) AS DOUBLE) AS n,
+{arm_note}  SELECT treat, CAST(COUNT(*) AS DOUBLE) AS n,
          {_split_sql('SUM(CAST(cents AS HUGEINT))')} AS s,
          {_split_sql('SUM(CAST(cents AS HUGEINT) * cents)')} AS q
   FROM per_user GROUP BY treat),
@@ -1875,7 +1854,15 @@ w AS (
          MAX(CASE WHEN NOT treat THEN q END) AS qb
   FROM arm),
 v AS (
-  SELECT na, nb, sa / na AS ma, sb / nb AS mb,
+  SELECT na, nb, """
+
+
+_WELCH_SQL = _ab_moments_sql(
+    """  -- round 7: Σv / Σv² accumulate exactly (HUGEINT) and convert via the
+  -- shared split-cast device (operators/numeric.py), mirroring the
+  -- DECIMAL(38,0) sums in operators/stats.welch_ttest.
+"""
+) + f"""sa / na AS ma, sb / nb AS mb,
          (qa - sa * sa / na) / (na - 1) AS va,
          (qb - sb * sb / nb) / (nb - 1) AS vb
   FROM w),
@@ -1934,29 +1921,7 @@ def q_stats_welch_ttest(spark, sf_dir):
 # Cohen's d effect size on per-user purchase spend (round 7)
 # ---------------------------------------------------------------------------
 
-_COHENS_D_SQL = f"""
-WITH per_user AS (
-  SELECT user_id,
-         substr(md5(CAST(user_id AS VARCHAR)), 1, 1) < '8' AS treat,
-         CAST(SUM(CASE WHEN event_type = 'purchase'
-                       THEN CAST(ROUND(value * 100) AS BIGINT)
-                       ELSE 0 END) AS BIGINT) AS cents
-  FROM events GROUP BY user_id),
-arm AS (
-  SELECT treat, CAST(COUNT(*) AS DOUBLE) AS n,
-         {_split_sql('SUM(CAST(cents AS HUGEINT))')} AS s,
-         {_split_sql('SUM(CAST(cents AS HUGEINT) * cents)')} AS q
-  FROM per_user GROUP BY treat),
-w AS (
-  SELECT MAX(CASE WHEN treat THEN n END) AS na,
-         MAX(CASE WHEN treat THEN s END) AS sa,
-         MAX(CASE WHEN treat THEN q END) AS qa,
-         MAX(CASE WHEN NOT treat THEN n END) AS nb,
-         MAX(CASE WHEN NOT treat THEN s END) AS sb,
-         MAX(CASE WHEN NOT treat THEN q END) AS qb
-  FROM arm),
-v AS (
-  SELECT na, nb, (sa / na) - (sb / nb) AS md,
+_COHENS_D_SQL = _ab_moments_sql("") + f"""(sa / na) - (sb / nb) AS md,
          (qa - sa * sa / na) / (na - 1) AS va,
          (qb - sb * sb / nb) / (nb - 1) AS vb
   FROM w),
@@ -1979,7 +1944,8 @@ def q_stats_cohens_d(spark, sf_dir):
     per-user purchase spend — the practical-significance companion to
     `stats_welch_ttest` (same cells): a tiny p-value at large n can hide
     a negligible standardized effect, and d is what a launch review
-    actually reads. Exactness: the welch devices verbatim — integer
+    actually reads. Exactness: the welch devices (the oracle shares
+    `_ab_moments_sql`, the operator `stats._two_arm_moments`) — integer
     cents, DECIMAL(38,0) moments, split-cast conversion, ONE fixed
     IEEE chain (sub/mul/div/sqrt) on both engines. One user shuffle +
     a 2-row rollup; scan-bound at any scale.
@@ -2621,7 +2587,9 @@ def q_stats_chi2_independence(spark, sf_dir):
 # Exact higher-moment statistics (skewness / excess kurtosis)
 # ---------------------------------------------------------------------------
 
-_SKEWKURT_SQL = """
+# Exact BIGINT raw moments of floor(l_quantity) per return flag and their
+# central moments m2..m4: the CTEs skewness/kurtosis and Jarque-Bera share.
+_MOMENTS_SQL_CTES = """
 WITH m AS (
   SELECT l_returnflag,
          CAST(COUNT(*) AS BIGINT) AS n,
@@ -2645,7 +2613,10 @@ c AS (
          a3 - 3 * mean * a2 + 2 * mean * mean * mean AS m3,
          a4 - 4 * mean * a3 + 6 * mean * mean * a2
             - 3 * mean * mean * mean * mean AS m4
-  FROM d)
+  FROM d)"""
+
+
+_SKEWKURT_SQL = _MOMENTS_SQL_CTES + """
 SELECT l_returnflag, n,
        ROUND(mean, 9) AS mean_qty,
        ROUND(m2, 9) AS var_pop,
@@ -2655,21 +2626,10 @@ FROM c
 """
 
 
-@register("agg_skewness_kurtosis", oracle=_SKEWKURT_SQL)
-def q_agg_skewness_kurtosis(spark, sf_dir):
-    """Exact population skewness and excess kurtosis of order quantities
-    per return flag — the higher-moment companions to mean/variance.
-
-    Spark's built-in `skewness`/`kurtosis` accumulate central moments in
-    floats whose partial-aggregation order is partition-dependent — the
-    classic cross-engine (and cross-run) hash breaker. Here the raw
-    moments Σq..Σq⁴ are EXACT BIGINTs (quantity ≤ 50 → q⁴ ≤ 6.25e6; the
-    sums stay under 2^63 beyond sf100), and the central-moment expansion
-    m₂..m₄ runs as one fixed left-associated IEEE chain on both engines —
-    identical doubles, no rounding tricks needed beyond the final 9 dp.
-    sqrt(m2) instead of pow(m2, 1.5): sqrt is IEEE-exact, pow is a libm
-    ulp hazard. One map-side-combinable groupBy — scan-bound at any sf.
-    """
+def _lineitem_central_moments(spark, sf_dir):
+    """Per-return-flag frame (l_returnflag, n, mean, a2, a3, a4) of exact
+    BIGINT raw moments of floor(l_quantity) over n, and the central-moment
+    columns m2, m3, m4 expanded as one fixed left-associated IEEE chain."""
     q = F.floor(F.col("l_quantity")).cast("long")
     m = (
         load_table(spark, sf_dir, "lineitem")
@@ -2698,6 +2658,25 @@ def q_agg_skewness_kurtosis(spark, sf_dir):
         + 6 * mn * mn * F.col("a2")
         - 3 * mn * mn * mn * mn
     )
+    return d, m2, m3, m4
+
+
+@register("agg_skewness_kurtosis", oracle=_SKEWKURT_SQL)
+def q_agg_skewness_kurtosis(spark, sf_dir):
+    """Exact population skewness and excess kurtosis of order quantities
+    per return flag — the higher-moment companions to mean/variance.
+
+    Spark's built-in `skewness`/`kurtosis` accumulate central moments in
+    floats whose partial-aggregation order is partition-dependent — the
+    classic cross-engine (and cross-run) hash breaker. Here the raw
+    moments Σq..Σq⁴ are EXACT BIGINTs (quantity ≤ 50 → q⁴ ≤ 6.25e6; the
+    sums stay under 2^63 beyond sf100), and the central-moment expansion
+    m₂..m₄ runs as one fixed left-associated IEEE chain on both engines —
+    identical doubles, no rounding tricks needed beyond the final 9 dp.
+    sqrt(m2) instead of pow(m2, 1.5): sqrt is IEEE-exact, pow is a libm
+    ulp hazard. One map-side-combinable groupBy — scan-bound at any sf.
+    """
+    d, m2, m3, m4 = _lineitem_central_moments(spark, sf_dir)
     c = d.select("l_returnflag", "n", "mean", m2.alias("m2"), m3.alias("m3"),
                  m4.alias("m4"))
     return c.select(
@@ -2716,7 +2695,9 @@ def q_agg_skewness_kurtosis(spark, sf_dir):
 # Mann-Whitney U (Wilcoxon rank-sum) test
 # ---------------------------------------------------------------------------
 
-_MWU_SQL = """
+# Order prices split into md5 groups, with per-value tie counts: the CTEs
+# Mann-Whitney U and Anderson-Darling share.
+_ORDER_PRICE_TIES_SQL_CTES = """
 WITH base AS (
   SELECT o_totalprice AS v,
          substr(md5(CAST(o_orderkey AS VARCHAR)), 1, 1) < '8' AS grp
@@ -2727,6 +2708,10 @@ vals AS (
   FROM base GROUP BY v),
 r AS (
   SELECT v, c, c1,
+"""
+
+
+_MWU_SQL = _ORDER_PRICE_TIES_SQL_CTES + """\
          CAST(SUM(c) OVER (ORDER BY v ROWS UNBOUNDED PRECEDING) - c
               AS BIGINT) AS cprev
   FROM vals),
@@ -3151,15 +3136,7 @@ def q_orders_gini_revenue(spark, sf_dir):
     """
     from dataframe_differ_spark.operators.stats import gini
 
-    per_cust = (
-        load_table(spark, sf_dir, "orders")
-        .select(
-            "o_custkey",
-            F.round(F.col("o_totalprice") * 100).cast("long").alias("c"),
-        )
-        .groupBy("o_custkey")
-        .agg(F.sum("c").alias("cents"))
-    )
+    per_cust = customer_cents(spark, sf_dir)
     return gini(per_cust, "cents", "o_custkey")
 
 
@@ -3167,7 +3144,9 @@ def q_orders_gini_revenue(spark, sf_dir):
 # Two-proportion z-test on user conversion (round 6)
 # ---------------------------------------------------------------------------
 
-_PROP_Z_SQL = """
+# (user, day) conversion cells rolled up per md5 arm, opening the pivot:
+# the CTEs the two-proportion z-test and the MDE design share.
+_CONV_ARM_SQL_CTES = """
 WITH per_cell AS (
   SELECT user_id, CAST(ts AS DATE) AS d,
          substr(md5(CAST(user_id AS VARCHAR)), 1, 1) < '8' AS treat,
@@ -3179,6 +3158,10 @@ arm AS (
   FROM per_cell GROUP BY treat),
 w AS (
   SELECT MAX(CASE WHEN treat THEN n END) AS n1,
+"""
+
+
+_PROP_Z_SQL = _CONV_ARM_SQL_CTES + """\
          MAX(CASE WHEN treat THEN x END) AS x1,
          MAX(CASE WHEN NOT treat THEN n END) AS n2,
          MAX(CASE WHEN NOT treat THEN x END) AS x2
@@ -3201,6 +3184,25 @@ FROM c
 """
 
 
+def _conversion_arms(spark, sf_dir):
+    """Per md5 arm: active (user, day) cells ``n`` and converting cells
+    ``x`` (MAX of the purchase flag per cell), from one rollup."""
+    e = load_table(spark, sf_dir, "events")
+    per_cell = e.groupBy("user_id", F.col("ts").cast("date").alias("d")).agg(
+        F.max(
+            F.when(F.col("event_type") == "purchase", 1).otherwise(0)
+        ).alias("conv")
+    ).select(
+        (
+            F.substring(F.md5(F.col("user_id").cast("string")), 1, 1) < "8"
+        ).alias("treat"),
+        "conv",
+    )
+    return per_cell.groupBy("treat").agg(
+        F.count(F.lit(1)).alias("n"), F.sum("conv").alias("x")
+    )
+
+
 @register("stats_two_proportions_z", oracle=_PROP_Z_SQL)
 def q_stats_two_proportions_z(spark, sf_dir):
     """Two-proportion z-test: do the md5-split treatment arm's ACTIVE
@@ -3219,20 +3221,7 @@ def q_stats_two_proportions_z(spark, sf_dir):
     proportion. One uniform composite-keyed shuffle; scan-bound at
     100 TB.
     """
-    e = load_table(spark, sf_dir, "events")
-    per_cell = e.groupBy("user_id", F.col("ts").cast("date").alias("d")).agg(
-        F.max(
-            F.when(F.col("event_type") == "purchase", 1).otherwise(0)
-        ).alias("conv")
-    ).select(
-        (
-            F.substring(F.md5(F.col("user_id").cast("string")), 1, 1) < "8"
-        ).alias("treat"),
-        "conv",
-    )
-    arm = per_cell.groupBy("treat").agg(
-        F.count(F.lit(1)).alias("n"), F.sum("conv").alias("x")
-    )
+    arm = _conversion_arms(spark, sf_dir)
     w = arm.agg(
         F.max(F.when(F.col("treat"), F.col("n"))).alias("n1"),
         F.max(F.when(F.col("treat"), F.col("x"))).alias("x1"),
@@ -3266,18 +3255,7 @@ def q_stats_two_proportions_z(spark, sf_dir):
 _Z_ALPHA2 = 1.959963985
 _Z_BETA80 = 0.841621234
 
-_POWER_MDE_SQL = f"""
-WITH per_cell AS (
-  SELECT user_id, CAST(ts AS DATE) AS d,
-         substr(md5(CAST(user_id AS VARCHAR)), 1, 1) < '8' AS treat,
-         MAX(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS conv
-  FROM events GROUP BY user_id, CAST(ts AS DATE)),
-arm AS (
-  SELECT treat, CAST(COUNT(*) AS BIGINT) AS n,
-         CAST(SUM(conv) AS BIGINT) AS x
-  FROM per_cell GROUP BY treat),
-w AS (
-  SELECT MAX(CASE WHEN treat THEN n END) AS n1,
+_POWER_MDE_SQL = _CONV_ARM_SQL_CTES + f"""\
          MAX(CASE WHEN NOT treat THEN n END) AS n2,
          CAST(SUM(x) AS BIGINT) AS xt, CAST(SUM(n) AS BIGINT) AS nt
   FROM arm),
@@ -3313,20 +3291,7 @@ def q_stats_power_mde(spark, sf_dir):
     dashboard use: an experiment platform refuses to launch a test whose
     expected lift is below the MDE this query reports.
     """
-    e = load_table(spark, sf_dir, "events")
-    per_cell = e.groupBy("user_id", F.col("ts").cast("date").alias("d")).agg(
-        F.max(
-            F.when(F.col("event_type") == "purchase", 1).otherwise(0)
-        ).alias("conv")
-    ).select(
-        (
-            F.substring(F.md5(F.col("user_id").cast("string")), 1, 1) < "8"
-        ).alias("treat"),
-        "conv",
-    )
-    arm = per_cell.groupBy("treat").agg(
-        F.count(F.lit(1)).alias("n"), F.sum("conv").alias("x")
-    )
+    arm = _conversion_arms(spark, sf_dir)
     w = arm.agg(
         F.max(F.when(F.col("treat"), F.col("n"))).alias("n1"),
         F.max(F.when(~F.col("treat"), F.col("n"))).alias("n2"),
@@ -3438,31 +3403,7 @@ def q_privacy_t_closeness(spark, sf_dir):
 # Jarque-Bera normality test per return flag (round 7)
 # ---------------------------------------------------------------------------
 
-_JB_SQL = """
-WITH m AS (
-  SELECT l_returnflag,
-         CAST(COUNT(*) AS BIGINT) AS n,
-         CAST(SUM(q) AS BIGINT) AS s1,
-         CAST(SUM(q * q) AS BIGINT) AS s2,
-         CAST(SUM(q * q * q) AS BIGINT) AS s3,
-         CAST(SUM(q * q * q * q) AS BIGINT) AS s4
-  FROM (SELECT l_returnflag, CAST(FLOOR(l_quantity) AS BIGINT) AS q
-        FROM lineitem)
-  GROUP BY l_returnflag),
-d AS (
-  SELECT l_returnflag, n,
-         CAST(s1 AS DOUBLE) / n AS mean,
-         CAST(s2 AS DOUBLE) / n AS a2,
-         CAST(s3 AS DOUBLE) / n AS a3,
-         CAST(s4 AS DOUBLE) / n AS a4
-  FROM m),
-c AS (
-  SELECT l_returnflag, n, mean,
-         a2 - mean * mean AS m2,
-         a3 - 3 * mean * a2 + 2 * mean * mean * mean AS m3,
-         a4 - 4 * mean * a3 + 6 * mean * mean * a2
-            - 3 * mean * mean * mean * mean AS m4
-  FROM d),
+_JB_SQL = _MOMENTS_SQL_CTES + """,
 s AS (
   SELECT l_returnflag, n,
          (m3 / (m2 * sqrt(m2))) AS skew,
@@ -3484,41 +3425,15 @@ def q_stats_jarque_bera(spark, sf_dir):
     the 5.991 critical value (0.95 quantile, a fixed literal so no
     quantile function enters the plan).
 
-    Exactness devices inherited verbatim: raw moments sum(q)..sum(q^4)
+    Exactness devices shared with it (`_lineitem_central_moments`,
+    `_MOMENTS_SQL_CTES`): raw moments sum(q)..sum(q^4)
     are exact BIGINTs (quantity <= 50; under 2^63 to ~sf200k, the
     BASELINE.md round-7 audit bound), central moments expand in one
     fixed left-associated IEEE chain, sqrt not pow. The rejection
     boolean compares the UNROUNDED statistic identically on both
     engines. One map-side-combinable groupBy — scan-bound at any sf.
     """
-    q = F.floor(F.col("l_quantity")).cast("long")
-    m = (
-        load_table(spark, sf_dir, "lineitem")
-        .select("l_returnflag", q.alias("q"))
-        .groupBy("l_returnflag")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum("q").alias("s1"),
-            F.sum(F.col("q") * F.col("q")).alias("s2"),
-            F.sum(F.col("q") * F.col("q") * F.col("q")).alias("s3"),
-            F.sum(F.col("q") * F.col("q") * F.col("q") * F.col("q")).alias("s4"),
-        )
-    )
-    mean = F.col("s1").cast("double") / F.col("n")
-    a2 = F.col("s2").cast("double") / F.col("n")
-    a3 = F.col("s3").cast("double") / F.col("n")
-    a4 = F.col("s4").cast("double") / F.col("n")
-    d = m.select("l_returnflag", "n", mean.alias("mean"), a2.alias("a2"),
-                 a3.alias("a3"), a4.alias("a4"))
-    mn = F.col("mean")
-    m2 = F.col("a2") - mn * mn
-    m3 = F.col("a3") - 3 * mn * F.col("a2") + 2 * mn * mn * mn
-    m4 = (
-        F.col("a4")
-        - 4 * mn * F.col("a3")
-        + 6 * mn * mn * F.col("a2")
-        - 3 * mn * mn * mn * mn
-    )
+    d, m2, m3, m4 = _lineitem_central_moments(spark, sf_dir)
     c = d.select("l_returnflag", "n", m2.alias("m2"), m3.alias("m3"),
                  m4.alias("m4"))
     skew = F.col("m3") / (F.col("m2") * F.sqrt("m2"))
@@ -5094,17 +5009,7 @@ def q_stats_cramers_v(spark, sf_dir):
 # Two-sample Anderson-Darling test (round 8)
 # ---------------------------------------------------------------------------
 
-_AD_SQL = """
-WITH base AS (
-  SELECT o_totalprice AS v,
-         substr(md5(CAST(o_orderkey AS VARCHAR)), 1, 1) < '8' AS grp
-  FROM orders),
-vals AS (
-  SELECT v, CAST(COUNT(*) AS BIGINT) AS c,
-         CAST(SUM(CASE WHEN grp THEN 1 ELSE 0 END) AS BIGINT) AS c1
-  FROM base GROUP BY v),
-r AS (
-  SELECT v, c, c1,
+_AD_SQL = _ORDER_PRICE_TIES_SQL_CTES + """\
          CAST(SUM(c) OVER (ORDER BY v ROWS UNBOUNDED PRECEDING)
               AS BIGINT) AS bj,
          CAST(SUM(c1) OVER (ORDER BY v ROWS UNBOUNDED PRECEDING)

@@ -420,22 +420,33 @@ _NEAR_HASH = (
     "('0x' || substr(md5(CAST({j} AS VARCHAR) || '~' || {s}), 1, 12))::BIGINT"
 )
 
-_NEAR_SQL = f"""
-WITH corpus AS (
-  SELECT doc_id, text FROM documents
-  UNION ALL
-  SELECT doc_id + 100000 AS doc_id,
-         array_to_string(string_split(text, ' ')
-           [1:greatest(len(string_split(text, ' ')) - 3, 1)], ' ') AS text
-  FROM documents WHERE doc_id % 13 = 0),
-sh AS (
+# Distinct word 3-gram shingles per doc of a `corpus` CTE (doc_id, text).
+SQL_SHINGLES_CTE = """sh AS (
   SELECT doc_id,
          list_distinct(list_transform(
            range(1, greatest(len(string_split(text,' ')) - 2, 0) + 1),
            i -> string_split(text,' ')[i] || ' ' ||
                 string_split(text,' ')[i+1] || ' ' ||
                 string_split(text,' ')[i+2])) AS shingles
-  FROM corpus),
+  FROM corpus)"""
+
+
+# The corpus with planted near-duplicates (every 13th doc re-added as
+# doc_id + 100000 minus its last 3 words), and its shingles.
+_PLANTED_CORPUS_CTE = """corpus AS (
+  SELECT doc_id, text FROM documents
+  UNION ALL
+  SELECT doc_id + 100000 AS doc_id,
+         array_to_string(string_split(text, ' ')
+           [1:greatest(len(string_split(text, ' ')) - 3, 1)], ' ') AS text
+  FROM documents WHERE doc_id % 13 = 0)"""
+
+_PLANTED_SHINGLES_SQL = f"""
+WITH {_PLANTED_CORPUS_CTE},
+{SQL_SHINGLES_CTE},
+"""
+
+_NEAR_SQL = _PLANTED_SHINGLES_SQL + f"""\
 shf AS (SELECT doc_id, shingles FROM sh WHERE len(shingles) > 0),
 tok AS (SELECT doc_id, unnest(shingles) AS shingle FROM shf),
 sigs AS (
@@ -506,48 +517,46 @@ def q_dedup_near(spark, sf_dir):
     return pairs.withColumn("jaccard", F.round("jaccard", 9))
 
 
-# 64-bit portable shingle hash (dedup_simhash): 16 hex chars of md5 parsed
-# unsigned then wrapped to signed two's-complement — the
-# dedup_simhash_portable device, applied at shingle granularity.
-_SIMHASH_SQL = """
-WITH corpus AS (
-  SELECT doc_id, text FROM documents
-  UNION ALL
-  SELECT doc_id + 100000 AS doc_id,
-         array_to_string(string_split(text, ' ')
-           [1:greatest(len(string_split(text, ' ')) - 3, 1)], ' ') AS text
-  FROM documents WHERE doc_id % 13 = 0),
-sh AS (
-  SELECT doc_id,
-         list_distinct(list_transform(
-           range(1, greatest(len(string_split(text,' ')) - 2, 0) + 1),
-           i -> string_split(text,' ')[i] || ' ' ||
-                string_split(text,' ')[i+1] || ' ' ||
-                string_split(text,' ')[i+2])) AS shingles
-  FROM corpus),
-tok AS (SELECT doc_id, unnest(shingles) AS s FROM sh
-        WHERE len(shingles) > 0),
-th AS (
-  SELECT doc_id,
-         CAST(('0x' || substr(md5(s), 1, 16))::UBIGINT::HUGEINT
-              - CASE WHEN ('0x' || substr(md5(s), 1, 16))::UBIGINT
+def sql_md5_int64(col: str) -> str:
+    """DuckDB: the first 16 hex chars of md5(col) as a signed BIGINT
+    (unsigned parse, wrapped to two's complement via HUGEINT)."""
+    return f"""CAST(('0x' || substr(md5({col}), 1, 16))::UBIGINT::HUGEINT
+              - CASE WHEN ('0x' || substr(md5({col}), 1, 16))::UBIGINT
                           > 9223372036854775807
                      THEN 18446744073709551616::HUGEINT ELSE 0 END
-              AS BIGINT) AS h
-  FROM tok),
-bits AS (
+              AS BIGINT)"""
+
+
+def sql_simhash_sig_ctes(sig_note: str) -> str:
+    """DuckDB CTEs bits → sig: the 64-bit SimHash per doc_id of
+    th(doc_id, h), bit 63 spelled as the sign bit; ``sig_note`` opens
+    the sig CTE."""
+    return f"""bits AS (
   SELECT doc_id, b.b,
          SUM(CASE WHEN (h >> b.b) & 1 = 1 THEN 1 ELSE -1 END) AS acc
   FROM th CROSS JOIN (SELECT unnest(range(64)) AS b) b
   GROUP BY doc_id, b.b),
 sig AS (
-  SELECT doc_id,
+{sig_note}  SELECT doc_id,
          CAST(SUM(CASE WHEN acc <= 0 THEN 0
                        WHEN b = 63 THEN (-9223372036854775807 - 1)::HUGEINT
                        ELSE (CAST(1 AS BIGINT) << b)::HUGEINT END)
               AS BIGINT) AS simhash
   FROM bits GROUP BY doc_id),
-banded AS (
+"""
+
+
+# 64-bit portable shingle hash (dedup_simhash): 16 hex chars of md5 parsed
+# unsigned then wrapped to signed two's-complement — the
+# dedup_simhash_portable device, applied at shingle granularity.
+_SIMHASH_SQL = _PLANTED_SHINGLES_SQL + f"""\
+tok AS (SELECT doc_id, unnest(shingles) AS s FROM sh
+        WHERE len(shingles) > 0),
+th AS (
+  SELECT doc_id,
+         {sql_md5_int64('s')} AS h
+  FROM tok),
+{sql_simhash_sig_ctes("")}banded AS (
   SELECT doc_id, simhash, band.i AS band,
          (simhash >> (band.i * 8)) & 255 AS bkey
   FROM sig CROSS JOIN (SELECT unnest(range(8)) AS i) band),
@@ -1379,20 +1388,26 @@ _LRQ_Z = (
     "-2.0 + 3.0 * f_div + 0.15 * f_len + 2.0 * f_stop - 1.0 * f_size"
 )
 
-_LR_QUALITY_SQL = f"""
+def _lr_features_sql(keep: str) -> str:
+    """The LR quality scorer's per-doc features (f_div, f_len, f_stop,
+    f_size) beside the ``keep`` columns of documents."""
+    return f"""
 WITH toks AS (
-  SELECT doc_id, n_chars,
+  SELECT {keep}, n_chars,
          list_filter(string_split(text, ' '), x -> x <> '') AS t
   FROM documents),
 feats AS (
-  SELECT doc_id,
+  SELECT {keep},
          CAST(len(list_distinct(t)) AS DOUBLE) / len(t) AS f_div,
          CAST(n_chars AS DOUBLE) / len(t) AS f_len,
          CAST(len(list_filter(t, x -> x = 'the' OR x = 'a')) AS DOUBLE)
            / len(t) AS f_stop,
          CAST(n_chars AS DOUBLE) / 600.0 AS f_size
   FROM toks),
-scored AS (
+"""
+
+
+_LR_QUALITY_SQL = _lr_features_sql("doc_id") + f"""scored AS (
   SELECT doc_id, f_div, f_len, f_stop, f_size,
          ROUND(1.0 / (1.0 + exp(-({_LRQ_Z}))), 6) AS q_score
   FROM feats)
@@ -1400,6 +1415,24 @@ SELECT doc_id, ROUND(f_div, 9) AS f_div, ROUND(f_len, 9) AS f_len,
        ROUND(f_stop, 9) AS f_stop, q_score, q_score >= 0.5 AS keep
 FROM scored
 """
+
+
+def _lr_features(spark, sf_dir, key):
+    """The LR quality scorer's per-doc features (f_div, f_len, f_stop,
+    f_size) beside the ``key`` column of documents."""
+    docs = load_table(spark, sf_dir, "documents")
+    t = F.expr("filter(split(text, ' '), x -> x != '')")
+    return docs.select(
+        key,
+        (F.size(F.array_distinct(t)).cast("double") / F.size(t)).alias("f_div"),
+        (F.col("n_chars").cast("double") / F.size(t)).alias("f_len"),
+        (
+            F.expr("size(filter(filter(split(text, ' '), x -> x != ''), "
+                   "x -> x = 'the' OR x = 'a'))").cast("double")
+            / F.size(t)
+        ).alias("f_stop"),
+        (F.col("n_chars").cast("double") / 600.0).alias("f_size"),
+    )
 
 
 @register("text_quality_classifier_lr", oracle=_LR_QUALITY_SQL)
@@ -1416,19 +1449,7 @@ def q_text_quality_classifier_lr(spark, sf_dir):
     decision pipelines into the next stage. Weights would broadcast if
     they were a real model table.
     """
-    docs = load_table(spark, sf_dir, "documents")
-    t = F.expr("filter(split(text, ' '), x -> x != '')")
-    feats = docs.select(
-        "doc_id",
-        (F.size(F.array_distinct(t)).cast("double") / F.size(t)).alias("f_div"),
-        (F.col("n_chars").cast("double") / F.size(t)).alias("f_len"),
-        (
-            F.expr("size(filter(filter(split(text, ' '), x -> x != ''), "
-                   "x -> x = 'the' OR x = 'a'))").cast("double")
-            / F.size(t)
-        ).alias("f_stop"),
-        (F.col("n_chars").cast("double") / 600.0).alias("f_size"),
-    )
+    feats = _lr_features(spark, sf_dir, "doc_id")
     scored = feats.withColumn(
         "q_score", F.round(F.expr(f"1.0 / (1.0 + exp(-({_LRQ_Z})))"), 6)
     )
@@ -1447,20 +1468,7 @@ def q_text_quality_classifier_lr(spark, sf_dir):
 # (rounded to 6 dp there, so binning on it is engine-stable), and every
 # cross-doc accumulation is a DECIMAL(12,6) sum — exact, order-free — so
 # the ECE is a single division of an exact decimal by a BIGINT.
-_CALIB_SQL = f"""
-WITH toks AS (
-  SELECT doc_id, lang, n_chars,
-         list_filter(string_split(text, ' '), x -> x <> '') AS t
-  FROM documents),
-feats AS (
-  SELECT doc_id, lang,
-         CAST(len(list_distinct(t)) AS DOUBLE) / len(t) AS f_div,
-         CAST(n_chars AS DOUBLE) / len(t) AS f_len,
-         CAST(len(list_filter(t, x -> x = 'the' OR x = 'a')) AS DOUBLE)
-           / len(t) AS f_stop,
-         CAST(n_chars AS DOUBLE) / 600.0 AS f_size
-  FROM toks),
-scored AS (
+_CALIB_SQL = _lr_features_sql("doc_id, lang") + f"""scored AS (
   SELECT doc_id, lang,
          ROUND(1.0 / (1.0 + exp(-({_LRQ_Z}))), 6) AS q_score
   FROM feats),
@@ -1501,19 +1509,7 @@ def q_eval_calibration_bins(spark, sf_dir):
     final divisions. One corpus scan, one 10-row shuffle, a 1-row
     broadcast — nothing grows with data.
     """
-    docs = load_table(spark, sf_dir, "documents")
-    t = F.expr("filter(split(text, ' '), x -> x != '')")
-    feats = docs.select(
-        "lang",
-        (F.size(F.array_distinct(t)).cast("double") / F.size(t)).alias("f_div"),
-        (F.col("n_chars").cast("double") / F.size(t)).alias("f_len"),
-        (
-            F.expr("size(filter(filter(split(text, ' '), x -> x != ''), "
-                   "x -> x = 'the' OR x = 'a'))").cast("double")
-            / F.size(t)
-        ).alias("f_stop"),
-        (F.col("n_chars").cast("double") / 600.0).alias("f_size"),
-    )
+    feats = _lr_features(spark, sf_dir, "lang")
     scored = feats.withColumn(
         "q_score", F.round(F.expr(f"1.0 / (1.0 + exp(-({_LRQ_Z})))"), 6)
     )
@@ -1809,6 +1805,28 @@ FROM s
 """
 
 
+def _loglog_ols(xy):
+    """Exact least squares of y on x over ``xy``: the 1-row sums frame
+    (k, sx, sy, sxx, sxy; DECIMAL-summed, products rounded to 12 dp)
+    and the slope and intercept columns over it."""
+    s = xy.agg(
+        F.count(F.lit(1)).alias("k"),
+        F.sum(F.col("x").cast("decimal(28,9)")).cast("double").alias("sx"),
+        F.sum(F.col("y").cast("decimal(28,9)")).cast("double").alias("sy"),
+        F.sum(F.round(F.col("x") * F.col("x"), 12).cast("decimal(28,12)"))
+        .cast("double")
+        .alias("sxx"),
+        F.sum(F.round(F.col("x") * F.col("y"), 12).cast("decimal(28,12)"))
+        .cast("double")
+        .alias("sxy"),
+    )
+    k = F.col("k")
+    slope = (k * F.col("sxy") - F.col("sx") * F.col("sy")) / (
+        k * F.col("sxx") - F.col("sx") * F.col("sx")
+    )
+    return s, slope, (F.col("sy") - slope * F.col("sx")) / k
+
+
 @register("text_zipf_alpha", oracle=_ZIPF_SQL)
 def q_text_zipf_alpha(spark, sf_dir):
     """Zipf exponent of the corpus token distribution: OLS of ln(count) on
@@ -1844,25 +1862,11 @@ def q_text_zipf_alpha(spark, sf_dir):
         F.round(F.log(F.col("rank").cast("double")), 9).alias("x"),
         F.round(F.log(F.col("n").cast("double")), 9).alias("y"),
     )
-    s = xy.agg(
-        F.count(F.lit(1)).alias("k"),
-        F.sum(F.col("x").cast("decimal(28,9)")).cast("double").alias("sx"),
-        F.sum(F.col("y").cast("decimal(28,9)")).cast("double").alias("sy"),
-        F.sum(F.round(F.col("x") * F.col("x"), 12).cast("decimal(28,12)"))
-        .cast("double")
-        .alias("sxx"),
-        F.sum(F.round(F.col("x") * F.col("y"), 12).cast("decimal(28,12)"))
-        .cast("double")
-        .alias("sxy"),
-    )
-    k = F.col("k")
-    slope = (k * F.col("sxy") - F.col("sx") * F.col("sy")) / (
-        k * F.col("sxx") - F.col("sx") * F.col("sx")
-    )
+    s, slope, log_icpt = _loglog_ols(xy)
     return s.select(
-        k.alias("n_tokens_fit"),
+        F.col("k").alias("n_tokens_fit"),
         F.round(-slope, 6).alias("zipf_alpha"),
-        F.round((F.col("sy") - slope * F.col("sx")) / k, 6).alias("log_c"),
+        F.round(log_icpt, 6).alias("log_c"),
     )
 
 
@@ -2041,27 +2045,13 @@ def q_text_heaps_law(spark, sf_dir):
         F.round(F.log(F.col("n_docs_prefix").cast("double")), 9).alias("x"),
         F.round(F.log(F.col("vocab_prefix").cast("double")), 9).alias("y"),
     ).localCheckpoint(eager=False)
-    s = xy.agg(
-        F.count(F.lit(1)).alias("k"),
-        F.sum(F.col("x").cast("decimal(28,9)")).cast("double").alias("sx"),
-        F.sum(F.col("y").cast("decimal(28,9)")).cast("double").alias("sy"),
-        F.sum(F.round(F.col("x") * F.col("x"), 12).cast("decimal(28,12)"))
-        .cast("double")
-        .alias("sxx"),
-        F.sum(F.round(F.col("x") * F.col("y"), 12).cast("decimal(28,12)"))
-        .cast("double")
-        .alias("sxy"),
-    )
-    k = F.col("k")
-    slope = (k * F.col("sxy") - F.col("sx") * F.col("sy")) / (
-        k * F.col("sxx") - F.col("sx") * F.col("sx")
-    )
+    s, slope, log_icpt = _loglog_ols(xy)
     return xy.crossJoin(F.broadcast(s)).select(
         F.col("dec").alias("decile"),
         "n_docs_prefix",
         "vocab_prefix",
         F.round(slope, 6).alias("heaps_beta"),
-        F.round((F.col("sy") - slope * F.col("sx")) / k, 6).alias("heaps_logk"),
+        F.round(log_icpt, 6).alias("heaps_logk"),
     )
 
 
@@ -2678,20 +2668,7 @@ def q_text_burstiness(spark, sf_dir):
 # Brier score + Murphy decomposition (round 8)
 # ---------------------------------------------------------------------------
 
-_BRIER_SQL = f"""
-WITH toks AS (
-  SELECT doc_id, lang, n_chars,
-         list_filter(string_split(text, ' '), x -> x <> '') AS t
-  FROM documents),
-feats AS (
-  SELECT doc_id, lang,
-         CAST(len(list_distinct(t)) AS DOUBLE) / len(t) AS f_div,
-         CAST(n_chars AS DOUBLE) / len(t) AS f_len,
-         CAST(len(list_filter(t, x -> x = 'the' OR x = 'a')) AS DOUBLE)
-           / len(t) AS f_stop,
-         CAST(n_chars AS DOUBLE) / 600.0 AS f_size
-  FROM toks),
-binned AS (
+_BRIER_SQL = _lr_features_sql("doc_id, lang") + f"""binned AS (
   SELECT CAST(LEAST(FLOOR(q_score * 10), 9) AS INTEGER) AS bin,
          CAST(q_score AS DECIMAL(12,6)) AS qd,
          CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS y
@@ -2759,19 +2736,7 @@ def q_eval_brier_decomposition(spark, sf_dir):
     engines' half-case conventions — the one thing left to disagree).
     One corpus scan, one 10-row shuffle, a 1-row broadcast.
     """
-    docs = load_table(spark, sf_dir, "documents")
-    t = F.expr("filter(split(text, ' '), x -> x != '')")
-    feats = docs.select(
-        "lang",
-        (F.size(F.array_distinct(t)).cast("double") / F.size(t)).alias("f_div"),
-        (F.col("n_chars").cast("double") / F.size(t)).alias("f_len"),
-        (
-            F.expr("size(filter(filter(split(text, ' '), x -> x != ''), "
-                   "x -> x = 'the' OR x = 'a'))").cast("double")
-            / F.size(t)
-        ).alias("f_stop"),
-        (F.col("n_chars").cast("double") / 600.0).alias("f_size"),
-    )
+    feats = _lr_features(spark, sf_dir, "lang")
     binned = feats.select(
         F.round(F.expr(f"1.0 / (1.0 + exp(-({_LRQ_Z})))"), 6).alias("q"),
         F.when(F.col("lang") == "en", 1).otherwise(0).alias("y"),
@@ -2924,15 +2889,11 @@ def q_text_pmi_cooccurrence(spark, sf_dir):
 # uses it — quantifying HOW similar the near-dup detector's pairs are.
 # ---------------------------------------------------------------------------
 
-_BLEU_SQL = f"""
+# Near-dup pairs, their docs' uni/bigram counts, per-doc totals and
+# clipped matches: the CTEs BLEU and ROUGE share.
+_PAIR_GRAM_CLIP_CTES = f"""
 WITH np AS ({_NEAR_SQL}),
-corpus AS (
-  SELECT doc_id, text FROM documents
-  UNION ALL
-  SELECT doc_id + 100000 AS doc_id,
-         array_to_string(string_split(text, ' ')
-           [1:greatest(len(string_split(text, ' ')) - 3, 1)], ' ') AS text
-  FROM documents WHERE doc_id % 13 = 0),
+{_PLANTED_CORPUS_CTE},
 used AS (SELECT DISTINCT doc_a AS id FROM np
          UNION SELECT DISTINCT doc_b FROM np),
 toks AS (
@@ -2956,7 +2917,10 @@ clip AS (
   JOIN g gc ON gc.doc_id = p.doc_b
   JOIN g gr ON gr.doc_id = p.doc_a AND gr.n = gc.n AND gr.gram = gc.gram
   GROUP BY p.doc_a, p.doc_b, gc.n),
-stats AS (
+"""
+
+
+_BLEU_SQL = _PAIR_GRAM_CLIP_CTES + f"""stats AS (
   SELECT p.doc_a, p.doc_b,
          COALESCE(c1.m, 0) AS m1, COALESCE(c2.m, 0) AS m2,
          t1r.tot AS len_ref, t1c.tot AS len_cand, t2c.tot AS big_cand
@@ -3249,7 +3213,10 @@ def q_dedup_cluster_keep_best(spark, sf_dir):
 # co-occurrence graph — graph family × text family composition.
 # ---------------------------------------------------------------------------
 
-_TR_ITER = """
+
+# One unrolled integer-PageRank iteration (r{p} → i{n} → r{n}) over
+# edges / outw / nodes CTEs: shared by TextRank and graph_pagerank_nations.
+_PAGERANK_ITER = """
 i{n} AS (
   SELECT e.dst AS node, CAST(SUM((r.r * e.w) // o.ow) AS BIGINT) AS s
   FROM edges e
@@ -3280,7 +3247,7 @@ edges AS (
 outw AS (SELECT src, CAST(SUM(w) AS BIGINT) AS ow FROM edges GROUP BY src),
 nodes AS (SELECT DISTINCT src AS node FROM edges),
 r0 AS (SELECT node, CAST(40000 AS BIGINT) AS r FROM nodes),"""
-    + ",".join(_TR_ITER.format(n=i, p=i - 1) for i in (1, 2, 3))
+    + ",".join(_PAGERANK_ITER.format(n=i, p=i - 1) for i in (1, 2, 3))
     + """
 SELECT node AS word, r AS rank_micros
 FROM r3 ORDER BY r DESC, node LIMIT 10
@@ -3297,11 +3264,11 @@ def q_text_textrank_keywords(spark, sf_dir):
     alternative to `text_rake_keywords`'s degree scoring and
     `text_pmi_cooccurrence`'s pointwise association.
 
-    Reuses the `graph_pagerank_nations` INTEGER device verbatim
-    (per-node micro-units: r0 = 40000, teleport 6000, damp 85//100,
-    truncating contribution division) so three unrolled iterations are
-    bit-identical cross-engine — float TextRank would diverge in
-    summation order. Plan: one corpus scan explodes the window pairs
+    Reuses the `graph_pagerank_nations` INTEGER device, sharing its
+    iteration CTE `_PAGERANK_ITER` (per-node micro-units: r0 = 40000,
+    teleport 6000, damp 85//100, truncating contribution division) so
+    three unrolled iterations are bit-identical cross-engine — float
+    TextRank would diverge in summation order. Plan: one corpus scan explodes the window pairs
     (the only corpus-scale stage), the edge list collapses to
     vocabulary² max (KB here), and each iteration is a broadcast join
     of the rank vector against it — the `graph family deployment map's
@@ -3476,39 +3443,7 @@ def q_split_leakage_safe(spark, sf_dir):
 # eval_bleu_pairs over the same cached near-dup pair table.
 # ---------------------------------------------------------------------------
 
-_ROUGE_SQL = f"""
-WITH np AS ({_NEAR_SQL}),
-corpus AS (
-  SELECT doc_id, text FROM documents
-  UNION ALL
-  SELECT doc_id + 100000 AS doc_id,
-         array_to_string(string_split(text, ' ')
-           [1:greatest(len(string_split(text, ' ')) - 3, 1)], ' ') AS text
-  FROM documents WHERE doc_id % 13 = 0),
-used AS (SELECT DISTINCT doc_a AS id FROM np
-         UNION SELECT DISTINCT doc_b FROM np),
-toks AS (
-  SELECT c.doc_id, string_split(c.text, ' ') AS t
-  FROM corpus c JOIN used u ON u.id = c.doc_id),
-g AS (
-  SELECT doc_id, 1 AS n, t[i] AS gram, CAST(COUNT(*) AS BIGINT) AS c
-  FROM toks, unnest(range(1, len(t) + 1)) AS u(i)
-  GROUP BY doc_id, t[i]
-  UNION ALL
-  SELECT doc_id, 2 AS n, t[i] || ' ' || t[i + 1] AS gram,
-         CAST(COUNT(*) AS BIGINT) AS c
-  FROM toks, unnest(range(1, greatest(len(t) - 1, 0) + 1)) AS u(i)
-  GROUP BY doc_id, t[i] || ' ' || t[i + 1]),
-tots AS (SELECT doc_id, n, CAST(SUM(c) AS BIGINT) AS tot
-         FROM g GROUP BY doc_id, n),
-clip AS (
-  SELECT p.doc_a, p.doc_b, gc.n,
-         CAST(SUM(LEAST(gc.c, gr.c)) AS BIGINT) AS m
-  FROM np p
-  JOIN g gc ON gc.doc_id = p.doc_b
-  JOIN g gr ON gr.doc_id = p.doc_a AND gr.n = gc.n AND gr.gram = gc.gram
-  GROUP BY p.doc_a, p.doc_b, gc.n),
-stats AS (
+_ROUGE_SQL = _PAIR_GRAM_CLIP_CTES + f"""stats AS (
   SELECT p.doc_a, p.doc_b,
          COALESCE(c1.m, CAST(0 AS BIGINT)) AS m1,
          COALESCE(c2.m, CAST(0 AS BIGINT)) AS m2,

@@ -302,6 +302,18 @@ _STL_PLANES_SQL = ",\n".join(
     for pid, p in enumerate(_STL_PLANES)
 )
 
+# Rank `scored` (query_id, vec_id, cos_sim) per query and keep the top
+# 10: the tail of the LSH and IVF top-k oracles.
+_TOP10_RANKED_SQL = """ranked AS (
+  SELECT query_id, vec_id, cos_sim,
+         ROW_NUMBER() OVER (PARTITION BY query_id
+                            ORDER BY cos_sim DESC, vec_id) AS rank
+  FROM scored)
+SELECT query_id, vec_id, CAST(rank AS INTEGER) AS rank,
+       ROUND(cos_sim, 9) AS cos_sim
+FROM ranked WHERE rank <= 10
+"""
+
 _SIM_TOPK_LSH_SQL = f"""
 WITH planes(plane_id, p) AS (VALUES {_STL_PLANES_SQL}),
 base AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
@@ -325,15 +337,7 @@ scored AS (
   FROM cand c
   JOIN base qe ON qe.vec_id = c.query_id
   JOIN base ve ON ve.vec_id = c.vec_id),
-ranked AS (
-  SELECT query_id, vec_id, cos_sim,
-         ROW_NUMBER() OVER (PARTITION BY query_id
-                            ORDER BY cos_sim DESC, vec_id) AS rank
-  FROM scored)
-SELECT query_id, vec_id, CAST(rank AS INTEGER) AS rank,
-       ROUND(cos_sim, 9) AS cos_sim
-FROM ranked WHERE rank <= 10
-"""
+""" + _TOP10_RANKED_SQL
 
 
 @register("sim_topk_lsh", oracle=_SIM_TOPK_LSH_SQL)
@@ -372,13 +376,12 @@ def q_sim_topk_lsh(spark, sf_dir):
 # aggregate(zip_with) ≡ list_reduce, the Lloyd mean is a running-window
 # sum ordered by vec_id ≡ list_reduce over list(val ORDER BY vec_id), and
 # ties in the argmax assignment break on cluster_id in both engines.
-_IVF_SQL_CTES = f"""base AS (
+def _ivf_sql_ctes(seed_ctes: str) -> str:
+    """The IVF quantizer CTEs (base → seeds → one Lloyd step →
+    normalize → reassign) around the caller's seed CTE text."""
+    return f"""base AS (
   SELECT vec_id, label, embedding::DOUBLE[] AS e FROM embeddings),
-seeds AS (
-  SELECT CAST(row_number() OVER (ORDER BY md5(CAST(vec_id AS VARCHAR)))
-              AS INT) AS cluster_id,
-         e AS ce
-  FROM base ORDER BY md5(CAST(vec_id AS VARCHAR)) LIMIT 16),
+{seed_ctes}),
 a0 AS (
   SELECT vec_id, e, cluster_id,
          ROW_NUMBER() OVER (PARTITION BY vec_id
@@ -412,6 +415,15 @@ a1 AS (
         FROM base b CROSS JOIN cent c)),
 ivf_index AS (SELECT vec_id, label, e, cluster_id FROM a1 WHERE rn = 1)"""
 
+
+_IVF_SQL_CTES = _ivf_sql_ctes(
+    """seeds AS (
+  SELECT CAST(row_number() OVER (ORDER BY md5(CAST(vec_id AS VARCHAR)))
+              AS INT) AS cluster_id,
+         e AS ce
+  FROM base ORDER BY md5(CAST(vec_id AS VARCHAR)) LIMIT 16"""
+)
+
 _SIM_TOPK_IVF_SQL = f"""
 WITH {_IVF_SQL_CTES},
 queries AS (SELECT vec_id AS query_id, e AS qe FROM base WHERE vec_id < 5),
@@ -429,15 +441,7 @@ cand AS (
   WHERE i.vec_id <> p.query_id),
 scored AS (
   SELECT query_id, vec_id, {SQL_COS('qe', 'e')} AS cos_sim FROM cand),
-ranked AS (
-  SELECT query_id, vec_id, cos_sim,
-         ROW_NUMBER() OVER (PARTITION BY query_id
-                            ORDER BY cos_sim DESC, vec_id) AS rank
-  FROM scored)
-SELECT query_id, vec_id, CAST(rank AS INTEGER) AS rank,
-       ROUND(cos_sim, 9) AS cos_sim
-FROM ranked WHERE rank <= 10
-"""
+""" + _TOP10_RANKED_SQL
 
 
 @register("sim_topk_ivf", oracle=_SIM_TOPK_IVF_SQL)
@@ -605,6 +609,18 @@ def q_vec_centroid_outliers(spark, sf_dir):
     )
 
 
+# Top-5 neighbours per query from `scored`, then label votes: the CTEs
+# the brute and IVF k-NN classifier oracles share.
+_KNN_VOTES_SQL_CTES = """top AS (
+  SELECT * FROM (
+    SELECT query_id, true_label, label, cos_sim,
+           ROW_NUMBER() OVER (PARTITION BY query_id
+                              ORDER BY cos_sim DESC, vec_id) AS rnk
+    FROM scored) WHERE rnk <= 5),
+votes AS (
+  SELECT query_id, true_label, label, COUNT(*) AS n_votes
+  FROM top GROUP BY query_id, true_label, label)"""
+
 _KNN_SQL = f"""
 WITH e AS (SELECT vec_id, label, embedding::DOUBLE[] AS e FROM embeddings),
 q AS (SELECT vec_id AS query_id, label AS true_label, e AS qe
@@ -614,21 +630,35 @@ scored AS (
   SELECT q.query_id, q.true_label, c.vec_id, c.label,
          {SQL_COS('q.qe', 'c.e')} AS cos_sim
   FROM q JOIN c ON TRUE),
-top AS (
-  SELECT * FROM (
-    SELECT query_id, true_label, label, cos_sim,
-           ROW_NUMBER() OVER (PARTITION BY query_id
-                              ORDER BY cos_sim DESC, vec_id) AS rnk
-    FROM scored) WHERE rnk <= 5),
-votes AS (
-  SELECT query_id, true_label, label, COUNT(*) AS n_votes
-  FROM top GROUP BY query_id, true_label, label)
+{_KNN_VOTES_SQL_CTES}
 SELECT query_id, true_label, label AS pred_label, CAST(n_votes AS BIGINT) AS n_votes
 FROM (
   SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
                                ORDER BY n_votes DESC, label) AS vr
   FROM votes) WHERE vr = 1
 """
+
+
+def _knn_vote(scored, k):
+    """Top-``k`` neighbours per query by (cos_sim desc, vec_id), two-phase,
+    then the majority label per query (most votes, then smallest label)."""
+    top = partitioned_topk(
+        scored, ["query_id"], [F.col("cos_sim").desc(), F.col("vec_id")], k
+    )
+    votes = top.groupBy("query_id", "true_label", "label").agg(
+        F.count(F.lit(1)).alias("n_votes")
+    )
+    wv = Window.partitionBy("query_id").orderBy(
+        F.col("n_votes").desc(), F.col("label")
+    )
+    return (
+        votes.withColumn("vr", F.row_number().over(wv))
+        .filter(F.col("vr") == 1)
+        .select(
+            "query_id", "true_label",
+            F.col("label").alias("pred_label"), "n_votes",
+        )
+    )
 
 
 @register("knn_classify", oracle=_KNN_SQL, scale_path="knn_classify_ivf")
@@ -660,23 +690,7 @@ def q_knn_classify(spark, sf_dir):
     scored = c.join(F.broadcast(q), F.lit(True)).withColumn(
         "cos_sim", _cosine("qe", "e")
     )
-    top = partitioned_topk(
-        scored, ["query_id"], [F.col("cos_sim").desc(), F.col("vec_id")], 5
-    )
-    votes = top.groupBy("query_id", "true_label", "label").agg(
-        F.count(F.lit(1)).alias("n_votes")
-    )
-    wv = Window.partitionBy("query_id").orderBy(
-        F.col("n_votes").desc(), F.col("label")
-    )
-    return (
-        votes.withColumn("vr", F.row_number().over(wv))
-        .filter(F.col("vr") == 1)
-        .select(
-            "query_id", "true_label",
-            F.col("label").alias("pred_label"), "n_votes",
-        )
-    )
+    return _knn_vote(scored, 5)
 
 
 def _lsh_planes(n_planes: int, seed: int = 43) -> list[list[float]]:
@@ -778,8 +792,11 @@ def q_sim_join_lsh(spark, sf_dir):
     ).withColumn("cos_sim", F.round("cos_sim", 9))
 
 
-_SEMDEDUP_SQL = f"""
-WITH {_IVF_SQL_CTES},
+def _semdedup_sql(ivf_ctes: str, extra_cols: str = "") -> str:
+    """SemDeDup over the IVF CTEs: planted near-dups, pooled with the
+    index, in-cluster pairs at cos ≥ 0.99, first canonical per dup."""
+    return f"""
+WITH {ivf_ctes},
 planted AS (
   SELECT vec_id + 100000 AS vec_id,
          list_transform(range(1, 65),
@@ -805,12 +822,15 @@ pairs AS (
         FROM n a JOIN n b
           ON a.cluster_id = b.cluster_id AND a.vec_id < b.vec_id) d
   WHERE dot >= 0.99 * nn)
-SELECT dup_id, canonical_id, cluster_id, ROUND(cos_sim, 9) AS cos_sim
+SELECT dup_id, canonical_id, cluster_id, ROUND(cos_sim, 9) AS cos_sim{extra_cols}
 FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY dup_id
                                    ORDER BY canonical_id) AS rn
       FROM pairs)
 WHERE rn = 1
 """
+
+
+_SEMDEDUP_SQL = _semdedup_sql(_IVF_SQL_CTES)
 
 
 @register("dedup_semantic", oracle=_SEMDEDUP_SQL)
@@ -864,90 +884,23 @@ def q_dedup_semantic(spark, sf_dir):
 # literal but GREATEST(16, CEIL(SQRT(count))) computed by the oracle itself
 # (kk CTE + scalar-subquery filter instead of LIMIT), mirroring what
 # operators.similarity.ivf_index(n_clusters=None) derives from a count.
-_IVF_SQL_CTES_SQRTN = f"""base AS (
-  SELECT vec_id, label, embedding::DOUBLE[] AS e FROM embeddings),
-kk AS (SELECT GREATEST(16, CAST(CEIL(SQRT(COUNT(*))) AS INT)) AS k FROM base),
+_IVF_SQL_CTES_SQRTN = _ivf_sql_ctes(
+    """kk AS (SELECT GREATEST(16, CAST(CEIL(SQRT(COUNT(*))) AS INT)) AS k FROM base),
 seeds AS (
   SELECT cluster_id, ce FROM (
     SELECT CAST(row_number() OVER (ORDER BY md5(CAST(vec_id AS VARCHAR)))
                 AS INT) AS cluster_id,
            e AS ce
-    FROM base) WHERE cluster_id <= (SELECT k FROM kk)),
-a0 AS (
-  SELECT vec_id, e, cluster_id,
-         ROW_NUMBER() OVER (PARTITION BY vec_id
-                            ORDER BY dot DESC, cluster_id DESC) AS rn
-  FROM (SELECT b.vec_id, b.e, s.cluster_id, {SQL_DOT('s.ce', 'b.e')} AS dot
-        FROM base b CROSS JOIN seeds s)),
-assigned0 AS (SELECT vec_id, e, cluster_id FROM a0 WHERE rn = 1),
-md AS (
-  SELECT vec_id, cluster_id, i AS dim, e[i + 1] AS val
-  FROM assigned0 CROSS JOIN (SELECT unnest(range(64)) AS i)),
-mean_dims AS (
-  SELECT cluster_id, dim,
-         list_reduce(list_prepend(0.0, list(val ORDER BY vec_id)),
-                     (a, b) -> a + b) / COUNT(*) AS mean_val
-  FROM md GROUP BY cluster_id, dim),
-ce_raw_t AS (
-  SELECT cluster_id, list(mean_val ORDER BY dim) AS cr
-  FROM mean_dims GROUP BY cluster_id),
-cent AS (
-  SELECT cluster_id,
-         list_transform(cr, x -> x / sqrt(list_reduce(list_prepend(0.0,
-           list_transform(range(1, 65), i -> cr[i] * cr[i])),
-           (a, b) -> a + b))) AS ce
-  FROM ce_raw_t),
-a1 AS (
-  SELECT vec_id, label, e, cluster_id,
-         ROW_NUMBER() OVER (PARTITION BY vec_id
-                            ORDER BY dot DESC, cluster_id DESC) AS rn
-  FROM (SELECT b.vec_id, b.label, b.e, c.cluster_id,
-               {SQL_DOT('c.ce', 'b.e')} AS dot
-        FROM base b CROSS JOIN cent c)),
-ivf_index AS (SELECT vec_id, label, e, cluster_id FROM a1 WHERE rn = 1)"""
-
-_SEMDEDUP_SQRTN_SQL = f"""
-WITH {_IVF_SQL_CTES_SQRTN},
-planted AS (
-  SELECT vec_id + 100000 AS vec_id,
-         list_transform(range(1, 65),
-           i -> e[i] + {{noise}}) AS e
-  FROM base WHERE vec_id % 7 = 0),
-pa AS (
-  SELECT vec_id, e, cluster_id,
-         ROW_NUMBER() OVER (PARTITION BY vec_id
-                            ORDER BY dot DESC, cluster_id DESC) AS rn
-  FROM (SELECT p.vec_id, p.e, c.cluster_id, {SQL_DOT('c.ce', 'p.e')} AS dot
-        FROM planted p CROSS JOIN cent c)),
-pool AS (
-  SELECT vec_id, e, cluster_id FROM ivf_index
-  UNION ALL
-  SELECT vec_id, e, cluster_id FROM pa WHERE rn = 1),
-n AS (SELECT vec_id, e, cluster_id, sqrt({SQL_DOT('e', 'e')}) AS nrm
-      FROM pool),
-pairs AS (
-  SELECT b_id AS dup_id, a_id AS canonical_id, cluster_id, dot / nn AS cos_sim
-  FROM (SELECT a.vec_id AS a_id, b.vec_id AS b_id,
-               b.cluster_id AS cluster_id,
-               {SQL_DOT('a.e', 'b.e')} AS dot, a.nrm * b.nrm AS nn
-        FROM n a JOIN n b
-          ON a.cluster_id = b.cluster_id AND a.vec_id < b.vec_id) d
-  WHERE dot >= 0.99 * nn)
-SELECT dup_id, canonical_id, cluster_id, ROUND(cos_sim, 9) AS cos_sim,
-       (SELECT CAST(k AS BIGINT) FROM kk) AS n_clusters
-FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY dup_id
-                                   ORDER BY canonical_id) AS rn
-      FROM pairs)
-WHERE rn = 1
-"""
-
-
-@register(
-    "dedup_semantic_sqrtn",
-    oracle=_SEMDEDUP_SQRTN_SQL.replace(
-        "{noise}", _SJL_NOISE.format(vid="vec_id", i="(i - 1)")
-    ),
+    FROM base) WHERE cluster_id <= (SELECT k FROM kk)"""
 )
+
+_SEMDEDUP_SQRTN_SQL = _semdedup_sql(
+    _IVF_SQL_CTES_SQRTN,
+    ",\n       (SELECT CAST(k AS BIGINT) FROM kk) AS n_clusters",
+)
+
+
+@register("dedup_semantic_sqrtn", oracle=_SEMDEDUP_SQRTN_SQL)
 def q_dedup_semantic_sqrtn(spark, sf_dir):
     """SemDeDup with the K = max(16, ceil(sqrt(N))) scale law EXECUTED,
     not just documented (round-4 verdict "What's wrong" #2: dedup_semantic
@@ -1002,15 +955,7 @@ scored AS (
   SELECT query_id, true_label, vec_id, label,
          {SQL_COS('qe', 'e')} AS cos_sim
   FROM cand),
-top AS (
-  SELECT * FROM (
-    SELECT query_id, true_label, label, cos_sim,
-           ROW_NUMBER() OVER (PARTITION BY query_id
-                              ORDER BY cos_sim DESC, vec_id) AS rnk
-    FROM scored) WHERE rnk <= 5),
-votes AS (
-  SELECT query_id, true_label, label, COUNT(*) AS n_votes
-  FROM top GROUP BY query_id, true_label, label)
+{_KNN_VOTES_SQL_CTES}
 SELECT query_id, true_label, label AS pred_label,
        CAST(n_votes AS BIGINT) AS n_votes
 FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
@@ -1067,23 +1012,7 @@ def q_knn_classify_ivf(spark, sf_dir):
         & (F.col("vec_id") != F.col("query_id")),
     ).select("query_id", "true_label", "qe", "vec_id", "label", "e")
     scored = cand.withColumn("cos_sim", _cosine("qe", "e"))
-    top = partitioned_topk(
-        scored, ["query_id"], [F.col("cos_sim").desc(), F.col("vec_id")], k
-    )
-    votes = top.groupBy("query_id", "true_label", "label").agg(
-        F.count(F.lit(1)).alias("n_votes")
-    )
-    wv = Window.partitionBy("query_id").orderBy(
-        F.col("n_votes").desc(), F.col("label")
-    )
-    return (
-        votes.withColumn("vr", F.row_number().over(wv))
-        .filter(F.col("vr") == 1)
-        .select(
-            "query_id", "true_label",
-            F.col("label").alias("pred_label"), "n_votes",
-        )
-    )
+    return _knn_vote(scored, k)
 
 
 _MRL_SQL = f"""
@@ -1732,7 +1661,10 @@ def _adr_probe_sql(idx: str, cent: str, out: str) -> str:
   WHERE rank <= {_ADR_TOPK})"""
 
 
-_ADR_SQL = f"""
+# The corpus split into old (90%) and drifted new vectors (every 10th
+# shifted on dim 1, renormalized): the opening CTEs of the ANN drift
+# refresh and stream-ingest oracles.
+_ADR_DRIFT_SQL_CTES = f"""
 WITH base AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
 oldc AS (SELECT vec_id, e FROM base WHERE vec_id % 10 <> 0),
 dr0 AS (
@@ -1741,7 +1673,9 @@ dr0 AS (
            i -> e[i] + CASE WHEN i = 1 THEN CAST(0.5 AS DOUBLE)
                             ELSE CAST(0.0 AS DOUBLE) END) AS d
   FROM base WHERE vec_id % 10 = 0),
-drift AS (SELECT vec_id, {_ADR_RENORM.format(d='d')} AS e FROM dr0),
+drift AS (SELECT vec_id, {_ADR_RENORM.format(d='d')} AS e FROM dr0),"""
+
+_ADR_SQL = _ADR_DRIFT_SQL_CTES + f"""
 newc AS (SELECT vec_id, e FROM oldc UNION ALL SELECT vec_id, e FROM drift),
 omd AS (SELECT i AS dim, e[i + 1] AS val
         FROM oldc CROSS JOIN (SELECT unnest(range(64)) AS i)),

@@ -1092,6 +1092,21 @@ ORDER BY lq.p
 """
 
 
+def _quantile_drift_report(lq, rq):
+    """Join the per-probe left and right quantiles on ``p`` → (p,
+    left_value, right_value, abs_drift), ordered by p."""
+    return (
+        lq.join(rq, "p")
+        .select(
+            "p",
+            "left_value",
+            "right_value",
+            F.abs(F.col("right_value") - F.col("left_value")).alias("abs_drift"),
+        )
+        .orderBy("p")
+    )
+
+
 @register(
     "diff_quantile_drift",
     oracle=_QUANTILE_DRIFT_SQL.format(mut=MUTATED_ORDERS_SQL),
@@ -1131,16 +1146,7 @@ def q_diff_quantile_drift(spark, sf_dir):
     rq = r.join(
         F.broadcast(ps), F.col("rn") == F.ceil(F.col("p") * F.col("n"))
     ).select("p", F.col("v").alias("right_value"))
-    return (
-        lq.join(rq, "p")
-        .select(
-            "p",
-            "left_value",
-            "right_value",
-            F.abs(F.col("right_value") - F.col("left_value")).alias("abs_drift"),
-        )
-        .orderBy("p")
-    )
+    return _quantile_drift_report(lq, rq)
 
 
 @register("dim_surrogate_keys_sketch", oracle=_SURROGATE_SQL)

@@ -167,6 +167,23 @@ def test_bloom_bits_roundtrip(spark, tmp_path):
     assert got == want
 
 
+def test_load_artifact_reads_meta_with_known_schema(spark, tmp_path):
+    # meta is read with its fixed schema: a warm load runs the meta
+    # collect and the data schema inference, no meta schema inference.
+    from dataframe_differ_spark.operators.sketches import bloom_build
+
+    keys = spark.createDataFrame([Row(k=f"key{i}") for i in range(50)])
+    bits = bloom_build(keys, "k", n_bits=4096, n_hashes=3)
+    path = str(tmp_path / "bloom")
+    save_artifact(bits, path, "bloom_bits", params={"n_bits": 4096, "n_hashes": 3})
+    dag = spark._jsc.sc().dagScheduler()
+    load_artifact(spark, path, "bloom_bits")
+    before = dag.numTotalJobs()
+    art = load_artifact(spark, path, "bloom_bits")
+    assert dag.numTotalJobs() - before <= 2
+    assert art.params == {"n_bits": 4096, "n_hashes": 3}
+
+
 # ---------------------------------------------------------------------------
 # FastSS signature table
 # ---------------------------------------------------------------------------

@@ -783,3 +783,64 @@ def test_agg_winsorize_rejects_non_digit_priority(spark, tmp_path, registry):
     orders.write.parquet(str(tmp_path / "orders.parquet"))
     with pytest.raises(Exception, match="must start with a digit, got X-BAD"):
         registry["agg_winsorize"].fn(spark, str(tmp_path)).collect()
+
+
+# Twin runs of >= 10 normalized lines that stay duplicated on purpose,
+# keyed by (path a, path b, first normalized line of the run), each with
+# a one-line reason: folding would make the shared helper branch on its
+# caller, or the code is on the benchmark path and stays as measured.
+DUPLICATE_RUNS_ALLOWED: dict[tuple[str, str, str], str] = {}
+
+
+def _duplicate_runs(root, min_len):
+    """Maximal runs of >= ``min_len`` identical normalized lines that occur
+    twice under ``root``: lines are stripped, and blank lines, ``#``
+    comments and lines of 3 characters or fewer are dropped; 6-line
+    windows are matched and extended to maximal runs."""
+    import collections
+
+    window = 6
+    seqs = {}
+    for p in sorted(root.rglob("*.py")):
+        lines = [s.strip() for s in p.read_text().splitlines()]
+        seqs[p.relative_to(root).as_posix()] = [
+            s for s in lines if len(s) > 3 and not s.startswith("#")
+        ]
+    starts = collections.defaultdict(list)
+    for path, seq in seqs.items():
+        for k in range(len(seq) - window + 1):
+            starts[tuple(seq[k : k + window])].append((path, k))
+    runs = []
+    for locs in starts.values():
+        for i, (pa, a) in enumerate(locs):
+            for pb, b in locs[i + 1 :]:
+                sa, sb = seqs[pa], seqs[pb]
+                if a and b and sa[a - 1] == sb[b - 1]:
+                    continue  # not the start of a maximal run
+                n = window
+                while (
+                    a + n < len(sa)
+                    and b + n < len(sb)
+                    and sa[a + n] == sb[b + n]
+                    and not (pa == pb and a + n >= b)
+                ):
+                    n += 1
+                if n >= min_len:
+                    runs.append((pa, pb, sa[a], n))
+    return runs
+
+
+def test_no_duplicated_runs_of_ten_lines():
+    # Twins share one builder (a CTE-text constant for oracle SQL, a frame
+    # or column helper for Spark code) instead of a copied body.
+    import pathlib
+
+    import dataframe_differ_spark
+
+    root = pathlib.Path(dataframe_differ_spark.__file__).parent
+    runs = _duplicate_runs(root, 10)
+    found = {(pa, pb, first) for pa, pb, first, _ in runs}
+    assert not found - DUPLICATE_RUNS_ALLOWED.keys(), sorted(
+        r for r in runs if r[:3] not in DUPLICATE_RUNS_ALLOWED
+    )
+    assert not DUPLICATE_RUNS_ALLOWED.keys() - found, "stale allow-list entries"

@@ -24,7 +24,7 @@ THRASHING_COMPILES = 141
 # program wrote itself, adds jobs and fails this budget.
 JOB_BUDGET = {
     "eval_dedup_pr": 6,
-    "sketch_bloom_persisted": 12,
+    "sketch_bloom_persisted": 11,
     "stream_foreach_batch": 9,
 }
 
