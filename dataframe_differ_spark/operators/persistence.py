@@ -77,6 +77,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType, StringType, StructField, StructType
 
+from dataframe_differ_spark.scratch import register as register_scratch
 from dataframe_differ_spark.tables import parquet_read_schema
 
 __all__ = [
@@ -374,10 +375,16 @@ def run_scoped_artifact_path(prefix: str, sf_dir: str) -> str:
     on threads); the sf_dir hash keeps paths debuggable. Callers that
     WANT cross-run sharing (a real day-N store) pass their own stable
     path instead — sharing is then their concurrency contract.
+
+    The store is registered with ``scratch.register``, so it is removed
+    when the interpreter exits, not before: the loaded frame reads it
+    lazily.
     """
     sfhash = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:8]
-    return os.path.join(
-        "/tmp",
-        "dds_artifacts",
-        f"{prefix}_{sfhash}_{uuid.uuid4().hex[:8]}",
+    return register_scratch(
+        os.path.join(
+            "/tmp",
+            "dds_artifacts",
+            f"{prefix}_{sfhash}_{uuid.uuid4().hex[:8]}",
+        )
     )

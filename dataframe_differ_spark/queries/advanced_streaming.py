@@ -13,12 +13,11 @@ from __future__ import annotations
 
 import os
 import shutil
-import tempfile
-import uuid
 
 from pyspark.sql import functions as F
 
 from dataframe_differ_spark.queries import register
+from dataframe_differ_spark.scratch import scratch_path
 from dataframe_differ_spark.sources.replay import incremental_events_stream
 from dataframe_differ_spark.streaming import run_available_now
 from dataframe_differ_spark.streaming.foreach_batch import UpsertMergeSink
@@ -57,9 +56,7 @@ def q_stream_foreach_batch(spark, sf_dir):
     proves state flowed through the sink across batches; tests assert
     equality with the batch max_by twin and that >1 batches were merged.
     """
-    base = os.path.join(
-        tempfile.gettempdir(), f"ddspark_merge_{uuid.uuid4().hex[:8]}"
-    )
+    base = scratch_path("merge")
     sink = UpsertMergeSink(base, keys=["user_id"])
     s = incremental_events_stream(
         spark, sf_dir, n_files=8, files_per_trigger=2
@@ -130,9 +127,7 @@ def q_stream_update_deltas(spark, sf_dir):
             F.col("window.start").alias("window_start"), "event_type", "n_events"
         )
     )
-    acc_path = os.path.join(
-        tempfile.gettempdir(), f"ddspark_upddelta_{uuid.uuid4().hex[:8]}"
-    )
+    acc_path = scratch_path("upddelta")
 
     def record(batch_df, batch_id):
         batch_df.withColumn("batch_id", F.lit(int(batch_id))).write.mode(
@@ -197,9 +192,8 @@ def _run_stream_dedup_persisted(spark, sf_dir):
     )
     stream = replay_stream(spark, split_dir, 1, batch.schema)
 
-    run_tag = uuid.uuid4().hex[:8]
-    cand_log = os.path.join(tempfile.gettempdir(), f"ddspark_sdp_cand_{run_tag}")
-    acc_log = os.path.join(tempfile.gettempdir(), f"ddspark_sdp_acc_{run_tag}")
+    cand_log = scratch_path("sdp_cand")
+    acc_log = scratch_path("sdp_acc")
 
     # The probe-time store snapshot is carried ACROSS micro-batches:
     # after batch k it is day-0 ∪ accepted_0..k — exactly the content of
@@ -409,9 +403,7 @@ FROM dots GROUP BY cluster_id
         )
         stream = replay_stream(spark, split_dir, 1, drifted.schema)
 
-        mon_log = os.path.join(
-            tempfile.gettempdir(), f"ddspark_sai_mon_{uuid.uuid4().hex[:8]}"
-        )
+        mon_log = scratch_path("sai_mon")
 
         def assign_and_monitor(bdf, batch_id):
             art = load_artifact(

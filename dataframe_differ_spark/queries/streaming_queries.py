@@ -18,13 +18,10 @@ state size — without them a 100 TB stream accumulates state forever.
 
 from __future__ import annotations
 
-import os
-import tempfile
-import uuid
-
 from pyspark.sql import functions as F
 
 from dataframe_differ_spark.queries import register
+from dataframe_differ_spark.scratch import scratch_path
 from dataframe_differ_spark.streaming import run_available_now
 from dataframe_differ_spark.queries.relational import SQL_DSUM, dsum
 from dataframe_differ_spark.tables import load_table
@@ -337,9 +334,7 @@ def q_stream_sink_parquet(spark, sf_dir):
     query returns an aggregate over the read-back files; equality with the
     batch filter is asserted in tests.
     """
-    out = os.path.join(
-        tempfile.gettempdir(), f"ddspark_stream_sink_{uuid.uuid4().hex[:8]}"
-    )
+    out = scratch_path("stream_sink")
     s = _events_stream(spark, sf_dir).filter(F.col("event_type") == "purchase")
     back = run_available_now(s, "sinkpq", path=out)
     return back.groupBy("event_type").agg(

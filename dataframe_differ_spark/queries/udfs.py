@@ -11,11 +11,9 @@ proving the Arrow boundary does not change results.
 
 from __future__ import annotations
 
-import atexit
 import hashlib
 import os
 import tempfile
-import uuid
 
 import numpy as np
 import pandas as pd
@@ -28,6 +26,7 @@ from dataframe_differ_spark.operators.multimodal import (
     sample_frames,
 )
 from dataframe_differ_spark.queries import register
+from dataframe_differ_spark.scratch import scratch_path
 from dataframe_differ_spark.tables import load_table
 
 
@@ -42,18 +41,6 @@ import threading
 
 _PY_DATASOURCE_LOCK = threading.Lock()
 
-_SCRATCH_DIRS: set = set()
-
-
-def _cleanup_scratch() -> None:
-    import shutil
-
-    for d in _SCRATCH_DIRS:
-        shutil.rmtree(d, ignore_errors=True)
-
-
-atexit.register(_cleanup_scratch)
-
 
 def _scratch_dir(name: str, sf_dir: str) -> str:
     """Per-CALL scratch path for sink round-trip queries.
@@ -65,16 +52,12 @@ def _scratch_dir(name: str, sf_dir: str) -> str:
     uuid covers the intra-process half (two bench THREADS running the
     same sink query would otherwise share a path and overwrite each
     other mid-read — round-3 advice). These sinks rewrite their output
-    on every call anyway, so no reuse is lost; atexit removes the dirs
-    so repeated runs don't grow /tmp without bound.
+    on every call anyway, so no reuse is lost; ``scratch.cleanup``
+    removes the dirs at exit so repeated runs don't grow /tmp without
+    bound.
     """
     tag = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:8]
-    d = os.path.join(
-        tempfile.gettempdir(),
-        f"ddspark_{name}_{os.getpid()}_{tag}_{uuid.uuid4().hex[:8]}",
-    )
-    _SCRATCH_DIRS.add(d)
-    return d
+    return scratch_path(f"{name}_{os.getpid()}_{tag}")
 
 
 @register(
@@ -639,7 +622,6 @@ def q_sink_python_datasource(spark, sf_dir):
     driver-owned session's workers.
     """
     import json
-    import uuid as _uuid
 
     from pyspark.sql.datasource import (
         DataSource,
@@ -647,11 +629,8 @@ def q_sink_python_datasource(spark, sf_dir):
         WriterCommitMessage,
     )
 
-    out_dir = os.path.join(
-        tempfile.gettempdir(), f"ddspark_pysink_{_uuid.uuid4().hex[:8]}"
-    )
+    out_dir = scratch_path("pysink")
     os.makedirs(out_dir, exist_ok=True)
-    _SCRATCH_DIRS.add(out_dir)  # fresh dir per call -> atexit reclaims all
 
     class JsonlWriter(DataSourceWriter):
         def __init__(self, options):

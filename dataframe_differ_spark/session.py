@@ -23,13 +23,35 @@ and not in ``_RUNTIME_CONFS``: a live session cannot change it. A session
 the driver owns (``tools/driver_sim.py``, ``__spark_entry__``) therefore
 keeps Spark's default, since :func:`configure_session` sets only runtime
 confs.
+
+Call-site capture: :func:`get_spark` also sets
+``spark.python.sql.dataFrameDebugging.enabled`` to ``false``. PySpark
+wraps every Column operation (``F.col``, ``+``, ``alias``, ...) to record
+its Python call site for runtime error messages. The wrapper walks the
+Python stack, tries to import IPython, and makes about 10 py4j round
+trips (active session, conf read, ``PySparkCurrentOrigin`` set and
+clear), so one Column operation costs about 10 round trips where 1–2
+would do. Measured on 4 cores with :class:`RoundTrips`:
+``(F.col("a") + F.lit(1)).alias("b")`` made 45 round trips (deletes of
+its JVM objects included), 12 without it; a ``perfbench`` ``diff-migrate``
+pass 9 300–9 900, 2 400–2 900 without it. All that is lost is the
+``== DataFrame ==`` call-site fragment of ANSI-mode error messages, and
+ANSI is off in ``_RUNTIME_CONFS``. The conf is static, so it is set in
+the builder. PySpark reads it once per process, at the first wrapped
+Column call made while a session is active, and caches the answer
+(``pyspark.errors.utils._enable_debugging_cache``). A session the driver
+owns keeps PySpark's default, as it does for the codegen cache.
 """
 
 from __future__ import annotations
 
+import gc
 import os
+import threading
 import warnings
 
+from py4j.clientserver import SHUTDOWN_FINALIZER_WORKER, ClientServerConnection
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
 
 # Static: holds the registry's generated classes (6 340 measured), see above.
@@ -97,7 +119,58 @@ def get_spark(app_name: str = "dataframe_differ_spark") -> SparkSession:
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
+        # Static: no per-Column call-site capture, see the module docstring.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.sql.warehouse.dir", "/tmp/spark-warehouse")
     )
     spark = builder.getOrCreate()
     return configure_session(spark)
+
+
+class RoundTrips:
+    """Count the py4j round trips made inside a ``with`` block.
+
+    Every call of ``ClientServerConnection.send_command`` counts, from any
+    thread. py4j does not delete a JVM object when its Python proxy dies:
+    it queues the ``m d`` (delete) command for a finalizer thread that
+    wakes about once a second. So on entry and again before the count
+    closes, ``gc.collect()`` runs and the queue is sent from this thread:
+    the deletes of objects the block freed land inside the window, and
+    earlier garbage lands outside it.
+    """
+
+    def __enter__(self) -> "RoundTrips":
+        _send_queued_deletes()
+        self.count = 0
+        self._send = send = ClientServerConnection.send_command
+        lock = threading.Lock()
+
+        def counted(conn, command):
+            with lock:
+                self.count += 1
+            return send(conn, command)
+
+        ClientServerConnection.send_command = counted
+        return self
+
+    def __exit__(self, *exc) -> None:
+        _send_queued_deletes()
+        ClientServerConnection.send_command = self._send
+
+
+def _send_queued_deletes() -> None:
+    """Collect garbage, then send the JVM-object deletes py4j has queued
+    for its finalizer thread now, from this thread."""
+    gc.collect()
+    client = getattr(SparkContext._gateway, "_gateway_client", None)
+    queue = getattr(client, "finalizer_deque", None)
+    while queue:
+        try:
+            task = queue.pop()
+        except IndexError:  # the finalizer thread took the last one
+            return
+        if task == SHUTDOWN_FINALIZER_WORKER:
+            queue.append(task)
+            return
+        java_client, target_id = task
+        java_client.garbage_collect_object(target_id, enqueue=False)

@@ -9,11 +9,12 @@ Usage:
 Each query runs N_REPS times (default 3, env OPT_REPS); the MIN is reported
 (host-noise discipline from bench.py). The first rep on a fresh session pays
 any session-cache build — both cold and warm mins are printed. Each rep is
-printed as ``time/compiles/jobs``: its codegen compile count
+printed as ``time/compiles/jobs/round trips``: its codegen compile count
 (``CodegenMetrics`` compilation count delta), so a cold and a warm rep show
-whether compilation was paid, and its Spark job count (the
+whether compilation was paid, its Spark job count (the
 ``DAGScheduler.numTotalJobs()`` delta), the jobs-per-query figure without a
-trace.
+trace, and its py4j round trips (``session.RoundTrips`` around the build and
+the noop write), the driver-side cost of building the plan from Python.
 """
 
 from __future__ import annotations
@@ -25,7 +26,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from dataframe_differ_spark.queries import load_all
-from dataframe_differ_spark.session import get_spark
+from dataframe_differ_spark.session import RoundTrips, get_spark
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 PLANS_DIR = os.path.join(
@@ -56,12 +57,15 @@ def main() -> None:
         times, reps = [], []
         for rep in range(N_REPS):
             spark.sparkContext.setJobDescription(f"opt:{name}:rep{rep}")
-            c0, j0, t0 = compiles(), dag.numTotalJobs(), time.time()
-            df = q.fn(spark, SF_DIR)
-            df.write.format("noop").mode("overwrite").save()
-            times.append(round(time.time() - t0, 3))
+            c0, j0 = compiles(), dag.numTotalJobs()
+            with RoundTrips() as rt:
+                t0 = time.time()
+                df = q.fn(spark, SF_DIR)
+                df.write.format("noop").mode("overwrite").save()
+                times.append(round(time.time() - t0, 3))
             reps.append(
-                f"{times[-1]:.3f}s/{compiles() - c0}c/{dag.numTotalJobs() - j0}j"
+                f"{times[-1]:.3f}s/{compiles() - c0}c/"
+                f"{dag.numTotalJobs() - j0}j/{rt.count}rt"
             )
         spark.sparkContext.setJobDescription(None)
         if not time_only:
@@ -76,7 +80,7 @@ def main() -> None:
         print(
             f"{name}: cold {times[0]:.3f}s, warm-min "
             f"{min(times[1:]) if len(times) > 1 else float('nan'):.3f}s, "
-            f"all (time/codegen compiles/jobs) {' '.join(reps)}"
+            f"all (time/codegen compiles/jobs/round trips) {' '.join(reps)}"
         )
 
 
